@@ -226,10 +226,8 @@ FROM sh a JOIN sh b ON a.sh = b.sh AND a.{id_col} < b.{id_col}
 def simhash_band_table(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """(id, b0..b3): four 15-bit simhash bands per document.
 
-    Arrow/NumPy scale path (identical arithmetic to
-    :func:`simhash_band_table_catalyst`): the 60 rehash votes per word
-    hash are one vectorized (words x 60) matrix per Arrow batch instead
-    of a word explode + 60-column aggregate (guide §4.2).  All
+    Arrow/NumPy: the 60 rehash votes per word hash are one vectorized
+    (words x 60) matrix per Arrow batch (guide §4.2).  All
     int64-safe: max(a_k) * max(wh) < P^2 ~ 4.7e18 < 2^63.  Doc-local,
     so the explode/agg shuffle disappears from the plan.
 
@@ -275,31 +273,6 @@ def simhash_band_table(df: DataFrame, id_col: str, text_col: str = "text") -> Da
                 yield pd.DataFrame(out)
 
     return src.mapInPandas(run, schema=out_schema)
-
-
-def simhash_band_table_catalyst(
-    df: DataFrame, id_col: str, text_col: str = "text"
-) -> DataFrame:
-    """Catalyst reference implementation of :func:`simhash_band_table`
-    (explode-agg shape; kept for the parity pytest)."""
-    words = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("_w")
-    ).withColumn("_h", F.expr(T.whash_sql("_w")))
-    nbits = T.SIMHASH_BANDS * T.SIMHASH_BAND_BITS
-    aggs = [
-        F.sum(F.expr(T.simhash_bit_vote_sql("_h", k))).alias(f"_sb{k}")
-        for k in range(nbits)
-    ]
-    grouped = words.groupBy(id_col).agg(*aggs)
-    band_cols = []
-    for b in range(T.SIMHASH_BANDS):
-        acc = None
-        for j in range(T.SIMHASH_BAND_BITS):
-            k = b * T.SIMHASH_BAND_BITS + j
-            bit = F.when(F.col(f"_sb{k}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            acc = bit if acc is None else acc + bit
-        band_cols.append(acc.cast("bigint").alias(f"b{b}"))
-    return grouped.select(F.col(id_col), *band_cols)
 
 
 def simhash_hamming_pairs(

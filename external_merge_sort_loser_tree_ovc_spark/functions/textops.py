@@ -85,13 +85,13 @@ def _split_docs(texts) -> tuple[list[str], np.ndarray, np.ndarray]:
 
 
 def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow/NumPy scale path of :func:`with_text_features_catalyst` —
-    identical output (same integer/IEEE arithmetic, see the per-feature
-    notes inline), but the whole feature set is computed per Arrow batch
-    in vectorized NumPy instead of a posexplode + 21-column aggregate
-    (guide §4.2: batch-native kernels beat per-row JVM expression trees;
-    measured 3.9 s -> ~0.6 s at sf1).  No shuffle at all: every feature
-    is doc-local, so the explode/agg exchange disappears from the plan."""
+    """token_count, token_count_bpe, stopword_count, lang_pred, quality,
+    fingerprint and simhash16 over (id, text) rows, with the integer/IEEE
+    arithmetic of :func:`text_features_oracle_sql` (see the per-feature
+    notes inline).  The whole feature set is computed per Arrow batch in
+    vectorized NumPy (guide §4.2: batch-native kernels beat per-row JVM
+    expression trees).  No shuffle at all: every feature is doc-local.
+    NULL-text docs are excluded; the oracle applies the same predicate."""
     others = [c for c in df.columns if c != text_col]
     assert others, "with_text_features needs at least an id column"
     df = df.filter(F.col(text_col).isNotNull())
@@ -163,68 +163,6 @@ def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(*others, text_col).mapInPandas(run, schema=out_schema)
 
 
-def with_text_features_catalyst(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """token_count, stopword_count, lang_pred, quality, fingerprint,
-    simhash16 over (id, text) rows.
-
-    Shape: posexplode words -> hash each word ONCE -> one aggregate with
-    all feature sums -> derive the scalar features.  The naive per-row
-    formulation let Catalyst inline the word-hash array into every one
-    of the 16 simhash terms, re-evaluating the ascii polynomial ~20x per
-    word.  Formulas are identical to the *_sql oracle generators."""
-    others = [c for c in df.columns if c != text_col]
-    stop_list = ", ".join(f"'{w}'" for w in T.STOPWORDS)
-    # NULL-text docs are excluded explicitly (posexplode would silently
-    # drop them anyway, diverging from a SQL oracle that keeps the row
-    # with NULL features); the oracle applies the same predicate
-    df = df.filter(F.col(text_col).isNotNull())
-    words = df.select(
-        *others,
-        F.length(F.col(text_col)).alias("_chars"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("_i", "_w"),
-    ).withColumn("_h", F.expr(T.whash_sql("_w")))
-    aggs = [
-        F.count(F.lit(1)).alias("token_count"),
-        F.sum(F.expr(f"CASE WHEN _w IN ({stop_list}) THEN 1 ELSE 0 END")).alias(
-            "stopword_count"
-        ),
-        F.sum(F.expr(f"(_h + _i * {T.FP_STEP}) % {T.P}")).alias("_fp_sum"),
-        # BPE-ish subword units ride the same explode: ceil(len(w)/4)
-        F.sum(F.expr(T.bpe_word_units_sql("_w"))).alias("_bpe1"),
-        F.first("_chars").alias("_chars1"),
-    ]
-    for j in range(T.SIMHASH_BITS):
-        aggs.append(
-            F.sum(
-                F.expr(f"CASE WHEN (shiftright(_h, {j}) & 1) = 1 THEN 1 ELSE -1 END")
-            ).alias(f"_sb{j}")
-        )
-    grouped = words.groupBy(*others).agg(*aggs)
-    simhash = None
-    for j in range(T.SIMHASH_BITS):
-        bit = F.when(F.col(f"_sb{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        simhash = bit if simhash is None else simhash + bit
-    out = grouped.select(
-        *others,
-        F.col("token_count").cast("bigint").alias("token_count"),
-        F.col("_bpe1").cast("bigint").alias("token_count_bpe"),
-        F.col("stopword_count").cast("bigint").alias("stopword_count"),
-        F.when(
-            F.col("stopword_count").cast("double") / F.col("token_count") >= 0.15,
-            F.lit("en"),
-        )
-        .otherwise(F.lit("other"))
-        .alias("lang_pred"),
-        (
-            F.col("token_count").cast("double") / (F.col("_chars1").cast("double") + 1.0)
-            + F.col("stopword_count").cast("double") / (F.col("token_count") + 1.0)
-        ).alias("quality"),
-        (F.col("_fp_sum") % T.P).alias("fingerprint"),
-        simhash.cast("bigint").alias("simhash16"),
-    )
-    return out
-
-
 def text_features_oracle_sql(table: str, id_col: str, text_col: str = "text") -> str:
     d = _DUCK
     wh = T.whash_arr(d, text_col)
@@ -281,13 +219,12 @@ def extract_text(df: DataFrame, html_col: str = "html", out_col: str = "text_ext
 
 
 def minhash_sigs(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Arrow/NumPy scale path of :func:`minhash_sigs_catalyst` —
-    identical output (same shingle + permutation arithmetic, int64-safe:
-    max(A_j) * P < 3.5e18), computed per Arrow batch instead of the
-    Catalyst HOF word-hash lambda (which evaluates interpreted per
-    element) + explode + 16-min aggregate.  Doc-local, so the shingle
-    explode shuffle disappears; docs with < 3 words drop out exactly as
-    the explode path dropped them (guide §4.2; 6.6 s -> ~1 s at sf1)."""
+    """(id, s0..s{J-1}) minhash signatures over 3-word shingles, with the
+    shingle + permutation arithmetic of :func:`minhash_oracle_select`
+    (int64-safe: max(A_j) * P < 3.5e18), computed per Arrow batch.
+    Doc-local, so no shuffle; docs with < 3 words have no shingles and
+    drop out (they can never produce an LSH candidate pair; the oracle's
+    NULL sigs agree)."""
     a_np = np.asarray(T.MINHASH_A, dtype=np.int64)
     b_np = np.asarray(T.MINHASH_B, dtype=np.int64)
     src = rebalance_scan(df.select(id_col, text_col), id_col)
@@ -327,36 +264,6 @@ def minhash_sigs(df: DataFrame, id_col: str, text_col: str = "text") -> DataFram
             yield pd.DataFrame(out)
 
     return src.mapInPandas(run, schema=out_schema)
-
-
-def minhash_sigs_catalyst(
-    df: DataFrame, id_col: str, text_col: str = "text"
-) -> DataFrame:
-    """(id, s0..s{J-1}) minhash signatures over 3-word shingles.
-
-    Shape: word-hash array once per row -> shingle hashes from the
-    array (integer ops only) -> explode -> one hash-aggregate with J
-    ``min`` columns.  Each shingle is hashed exactly once; Catalyst
-    cannot re-inline the array into every signature (the naive per-row
-    ``array_min(transform(...))`` formulation recomputed the whole
-    shingle pipeline J times — 11x slower, measured at sf0.1).
-    Docs with < 3 words have no shingles and drop out (they can never
-    produce an LSH candidate pair; the oracle's NULL sigs agree)."""
-    wh = T.whash_arr(_SPARK, text_col)
-    staged = df.select(id_col, F.expr(wh).alias("_wh"))
-    sh = (
-        "transform(slice(_wh, 1, size(_wh) - 2), (h0, ixv) -> "
-        f"(h0 + 31 * element_at(_wh, ixv + 2) "
-        f"+ 961 * element_at(_wh, ixv + 3)) % {T.P})"
-    )
-    grams = staged.select(id_col, F.explode(F.expr(sh)).alias("_h"))
-    aggs = [
-        F.min(
-            F.expr(f"({T.MINHASH_A[j]} * _h + {T.MINHASH_B[j]}) % {T.P}")
-        ).alias(f"s{j}")
-        for j in range(T.N_SIG)
-    ]
-    return grams.groupBy(id_col).agg(*aggs)
 
 
 def minhash_oracle_select(table: str, id_col: str, text_col: str = "text") -> str:

@@ -1,4 +1,4 @@
-from .external_sort import ExternalSorter, SortMetrics, sort_partition
+from .external_sort import ExternalSorter, SortMetrics
 from .loser_tree import LoserTreeMerge, run_relative_ovc
 from .ovc import compare_ovc, run_ovc_codes, update_loser_ovc
 from .planner import initial_fan_in, merge_depth, plan_merge
@@ -7,7 +7,6 @@ from .runs import RunInfo, RunStore
 __all__ = [
     "ExternalSorter",
     "SortMetrics",
-    "sort_partition",
     "LoserTreeMerge",
     "run_relative_ovc",
     "compare_ovc",

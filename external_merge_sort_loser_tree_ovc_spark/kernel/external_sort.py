@@ -574,12 +574,3 @@ class _InlineDone:
 
 _INLINE_DONE = _InlineDone()
 
-
-def sort_partition(
-    batches: Iterable[pd.DataFrame],
-    key_cols: list[str],
-    spill_dir: str,
-    **kw,
-) -> tuple[Iterator[pd.DataFrame], ExternalSorter]:
-    sorter = ExternalSorter(key_cols=key_cols, spill_dir=spill_dir, **kw)
-    return sorter.sort(batches), sorter

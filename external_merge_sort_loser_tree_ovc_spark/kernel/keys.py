@@ -22,7 +22,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 _SIGN64 = np.uint64(0x8000000000000000)
 
@@ -34,9 +33,7 @@ class NormalizedKey:
     codes : (n,) uint64, order-preserving (ties in codes may hide real
             differences only when ``exact`` is False).
     exact : True if code order == value order with no ties introduced.
-    width : number of significant low bits actually used (64 if unknown);
-            used by ``pack_columns`` to try fitting several columns into
-            one uint64.
+    width : number of significant low bits actually used (64 if unknown).
     """
 
     codes: np.ndarray
@@ -55,115 +52,6 @@ def _float_to_u64(arr: np.ndarray) -> np.ndarray:
     bits = np.ascontiguousarray(arr, dtype=np.float64).view(np.uint64)
     mask = np.where(bits >> np.uint64(63) == 1, np.uint64(0xFFFFFFFFFFFFFFFF), _SIGN64)
     return bits ^ mask
-
-
-def _bytes_prefix_to_u64(values: np.ndarray) -> np.ndarray:
-    """Big-endian first-8-bytes prefix of each bytes/str value."""
-    n = len(values)
-    buf = np.zeros((n, 8), dtype=np.uint8)
-    for i, v in enumerate(values):  # driver of last resort; small n per batch
-        if v is None:
-            continue
-        b = v.encode("utf-8", "surrogatepass") if isinstance(v, str) else bytes(v)
-        k = min(8, len(b))
-        buf[i, :k] = np.frombuffer(b[:k], dtype=np.uint8)
-    return buf.view(">u8").ravel().astype(np.uint64)
-
-
-def normalize_column(col) -> NormalizedKey:
-    """Normalize a pandas Series / numpy array into uint64 codes.
-
-    Null handling: nulls sort FIRST (consistent with Spark's default
-    ``asc_nulls_first``); the code reserves the bottom of the range by
-    shifting non-null codes up by 1 where the dtype leaves headroom —
-    instead we use a separate null bit folded into ``codes`` via
-    min-code assignment, which is exact for all supported dtypes.
-    """
-    if isinstance(col, pd.Series):
-        isnull = col.isna().to_numpy()
-        arr = col.to_numpy()
-    else:
-        arr = np.asarray(col)
-        isnull = pd.isna(arr) if arr.dtype == object else np.zeros(len(arr), bool)
-
-    kind = arr.dtype.kind
-    if kind in "iu":
-        codes = _int_to_u64(arr)
-        exact = True
-    elif kind == "f":
-        codes = _float_to_u64(np.nan_to_num(arr, nan=0.0))
-        exact = True
-    elif kind == "M":  # datetime64
-        codes = _int_to_u64(arr.view("i8"))
-        exact = True
-    elif kind == "b":
-        codes = arr.astype(np.uint64)
-        exact = True
-    else:  # object: str / bytes
-        codes = _bytes_prefix_to_u64(arr)
-        exact = False
-    if isnull.any():
-        # Nulls sort FIRST (Spark asc_nulls_first): rather than squeezing a
-        # null band into the 64-bit code (which would cost a bit of
-        # precision), report the mask; ``key_matrix`` prepends a 1-bit
-        # null-flag column so the lexicographic compare stays exact.
-        codes = np.where(isnull, np.uint64(0), codes)
-        return NormalizedKey(codes=codes, exact=exact, width=64, isnull=isnull)
-    return NormalizedKey(codes=codes, exact=exact, width=64)
-
-
-def normalize_frame(df: pd.DataFrame, key_cols: list[str]) -> list[NormalizedKey]:
-    return [normalize_column(df[c]) for c in key_cols]
-
-
-def key_matrix(df: pd.DataFrame, key_cols: list[str]) -> tuple[np.ndarray, bool]:
-    """(n, k) uint64 matrix of normalized key codes + exactness flag."""
-    norms = normalize_frame(df, key_cols)
-    if not norms:
-        return np.zeros((len(df), 0), dtype=np.uint64), True
-    cols = []
-    for nk in norms:
-        if nk.isnull is not None:
-            cols.append((~nk.isnull).astype(np.uint64))  # null flag: 0 sorts first
-        cols.append(nk.codes)
-    mat = np.column_stack(cols)
-    return mat, all(nk.exact for nk in norms)
-
-
-def pack_columns(mat: np.ndarray) -> np.ndarray | None:
-    """Try to pack an (n, k) uint64 key matrix into one uint64 per row.
-
-    Uses the observed per-column ranges (min subtracted, bit width
-    measured) — the data is already fully materialized per partition
-    when this runs, so data-dependent packing is safe.  Returns None if
-    the total width exceeds 64 bits.
-
-    This is the kernel's vectorized stand-in for offset-value coding:
-    the packed code makes an entire multi-column key comparison a single
-    integer compare (reference ``README.md:4-5``).
-    """
-    n, k = mat.shape
-    if k == 0:
-        return np.zeros(n, dtype=np.uint64)
-    if k == 1:
-        return mat[:, 0]
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    widths = []
-    shifted = []
-    for j in range(k):
-        col = mat[:, j]
-        lo = col.min()
-        span = int(col.max() - lo)
-        w = max(1, span.bit_length())
-        widths.append(w)
-        shifted.append(col - lo)
-    if sum(widths) > 64:
-        return None
-    packed = np.zeros(n, dtype=np.uint64)
-    for w, col in zip(widths, shifted):
-        packed = (packed << np.uint64(w)) | col
-    return packed
 
 
 def pack_columns_shared(mats: list[np.ndarray]) -> list[np.ndarray] | None:

@@ -1,7 +1,8 @@
 """Arrow-native key normalization + row fingerprints (zero per-row Python).
 
-Same contract as keys.py but sourced straight from Arrow buffers, so the
-kernel never materializes pandas object arrays for strings.  The string
+Codes follow the ``NormalizedKey`` contract of keys.py, sourced straight
+from Arrow buffers, so the kernel never materializes pandas object arrays
+for strings.  The string
 prefix code is built by vectorized gather over the (offsets, data)
 buffers; the row fingerprint folds normalized codes, lengths, and (for
 resume-grade fingerprints) a per-element full-content siphash.
@@ -91,7 +92,7 @@ def string_prefix_u64(arr) -> np.ndarray:
 
 
 def normalize_arrow_column(arr) -> NormalizedKey:
-    """Arrow column -> uint64 codes (same semantics as keys.normalize_column).
+    """Arrow column -> order-preserving uint64 codes (nulls first).
 
     Nullable integer/boolean/timestamp chunks are read via
     ``fill_null`` + native-dtype ``to_numpy`` — NOT the float64 round
@@ -115,7 +116,8 @@ def normalize_arrow_column(arr) -> NormalizedKey:
         codes = _float_to_u64(np.nan_to_num(vals, nan=0.0))
         return NormalizedKey(codes, True, 64, isnull)
     if pa.types.is_timestamp(t) or pa.types.is_date(t):
-        as_int = pc.cast(arr, pa.int64())
+        # date32 casts only to an integer of its own width
+        as_int = pc.cast(arr, pa.int32() if pa.types.is_date32(t) else pa.int64())
         if arr.null_count:
             as_int = pc.fill_null(as_int, 0)
         codes = _int_to_u64(as_int.to_numpy(zero_copy_only=False))

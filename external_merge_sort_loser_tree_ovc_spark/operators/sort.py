@@ -2,9 +2,10 @@
 
 The Spark mapping of the reference's Sort operator (SURVEY §1.3 / §3.4):
 
-  repartitionByRange(keys)   — the shuffle takes the role of the
-                               reference's process boundary/HDD transfer,
-  mapInPandas(kernel)        — each task runs the vectorized OVC
+  salted_repartition_by_range — one deterministic range shuffle; it
+                               takes the role of the reference's process
+                               boundary/HDD transfer,
+  mapInArrow(kernel)         — each task runs the vectorized OVC
                                loser-tree external sort (kernel/) over its
                                Arrow batch stream, spilling to
                                executor-local run files,
@@ -12,12 +13,12 @@ The Spark mapping of the reference's Sort operator (SURVEY §1.3 / §3.4):
                                so partition-sorted output is globally
                                sorted (same contract as df.orderBy).
 
-Skew: ``salted_repartition_by_range`` adds a salt column so a single hot
-key (one H3 cell with half the planet's pages) splits across adjacent
-range partitions; the per-partition sort keeps the global (key, salt)
-order contiguous, which downstream cell-merge operators re-unify — this
-is exactly the reference's multi-run merge reused at the partition level
-(SURVEY §7 risk list).
+Skew: with ``salt_buckets > 1`` the partitioner appends a salt to the
+range key, so a single hot key (one H3 cell with half the planet's
+pages) splits across adjacent range partitions; the per-partition sort
+keeps the global (key, salt) order contiguous, which downstream
+cell-merge operators re-unify — this is exactly the reference's
+multi-run merge reused at the partition level (SURVEY §7 risk list).
 
 At 100 TB: the kernel only ever holds ``memory_budget_rows`` rows plus
 one Arrow batch in memory per task; everything else is spilled run files,
@@ -33,7 +34,7 @@ import shutil
 import tempfile
 import uuid
 
-import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.external_sort import ExternalSorter
@@ -45,7 +46,7 @@ DEFAULT_BATCH_ROWS = 1 << 16
 def _partition_kernel(
     key_cols, budget, batch_rows, mode, checkpoint_dir, metrics_dir, checkpoint_inputs
 ):
-    """Build the mapInPandas function (must be picklable, import-light)."""
+    """Build the mapInArrow function (must be picklable, import-light)."""
 
     def run(iterator):
         import pyarrow as pa
@@ -92,204 +93,6 @@ def _partition_kernel(
     return run
 
 
-_SORTABLE_BOUND_TYPES = {
-    "tinyint", "smallint", "int", "bigint", "string", "date", "boolean",
-}
-
-
-def _py_bound_key(vals: tuple) -> tuple:
-    """Python sort key matching Spark's ascending-nulls-first order for
-    the `_SORTABLE_BOUND_TYPES`: strings compare as UTF-8 BYTES (Spark's
-    UTF8String binary order; Python str order is code-point order — the
-    two diverge past ASCII only for surrogate-range code points, but
-    bytes are always safe), NULL sorts first via a presence flag."""
-    out = []
-    for v in vals:
-        if v is None:
-            out.append((0, b""))
-        elif isinstance(v, str):
-            out.append((1, v.encode("utf-8")))
-        else:
-            out.append((1, v))
-    return tuple(out)
-
-
-def _pyarrow_key_sample(
-    df: DataFrame,
-    keys: list[str],
-    cap_rows: int,
-    max_bytes: int = 1 << 30,
-) -> "pd.DataFrame | None":
-    """Driver-side stride sample of the scan's key columns via pyarrow
-    (see call site).  Returns None whenever the input is not a modest
-    set of local parquet files carrying the key columns — callers fall
-    back to the distributed sample."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) > 64:
-        return None
-    paths = []
-    for f in files:
-        if f.startswith("file:"):
-            f = f[5:]
-            while f.startswith("//"):
-                f = f[1:]
-        if not f.startswith("/") or not f.endswith(".parquet"):
-            return None
-        paths.append(f)
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if sum(os.path.getsize(p) for p in paths) > max_bytes:
-            return None
-        tables = []
-        for p in paths:
-            pf = pq.ParquetFile(p)
-            if not set(keys) <= set(pf.schema_arrow.names):
-                return None
-            tables.append(pq.read_table(p, columns=list(keys)))
-        t = pa.concat_tables(tables)
-        if t.num_rows == 0:
-            return None
-        step = max(1, t.num_rows // cap_rows)
-        idx = pa.array(range(0, t.num_rows, step))
-        return t.take(idx).to_pandas()[list(keys)]
-    except Exception:
-        return None
-
-
-def range_partition_fixed_bounds(
-    df: DataFrame,
-    keys: list[str],
-    n: int,
-    *,
-    sample_mod: int = 16,
-    sample_cap: int = 1 << 15,
-) -> DataFrame | None:
-    """Order-preserving range partitioning WITHOUT Spark's sampling pass.
-
-    ``repartitionByRange`` computes its bounds by re-running the child
-    plan and reservoir-sampling it — for a payload-carrying scan that is
-    a second full pass over every column (measured ~2 s of the 5 s
-    q_sort_lineitem at sf1).  Here the bounds come from a column-pruned
-    scan of the KEY columns only (a content-hash sample, deterministic
-    under retries, Arrow-collected), and rows route to partitions
-    through a BALANCED binary-search tree of codegen'd struct
-    comparisons — ceil(log2 n) struct compares per row (a linear
-    CASE ladder measured 20 s at sf1; the struct tree is ~0.3 s) —
-    then the murmur3 identity-key mapping pins bucket i to partition i.
-    Guide §8: decide placement with small rows, move the payload once.
-    Struct comparison is ascending-nulls-first per field, exactly the
-    kernel's sort order (verified in pytest).
-
-    Bounds only affect partition BALANCE: any monotone bucket mapping
-    yields the same globally sorted output, so a skewed sample can
-    never change results.  Returns None when a key type is outside the
-    supported set or the identity-key table is unavailable — callers
-    fall back to ``repartitionByRange``.
-    """
-    dtypes = dict(df.dtypes)
-    if n < 2:
-        return df.repartition(1)
-    if not all(dtypes.get(k) in _SORTABLE_BOUND_TYPES for k in keys):
-        return None
-    # Size gate: the win over repartitionByRange is avoiding its second
-    # full-payload evaluation, which only matters when the payload is
-    # big; below the threshold the extra sample/identity jobs cost more
-    # than they save (measured +0.5 s at sf0.1 vs -2 s at sf1), so
-    # small inputs keep Spark's native path.  Catalyst's sizeInBytes
-    # estimate needs no job.
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 1 << 60  # unknown: assume big (the at-scale default)
-    if est < int(
-        os.environ.get("SPARK_GRAFT_RANGE_BOUNDS_MIN_BYTES", str(64 << 20))
-    ):
-        return None
-    spark = df.sparkSession
-    # Bounds memo: like _IDENTITY_KEYS_CACHE, partitioning METADATA is
-    # process-cacheable — bounds never affect results (any monotone
-    # bucketing yields the same sorted output), only balance, so a
-    # repeat call on the same (keys, n, size-estimate) skips the sample
-    # job.  Never persisted across processes; never caches data.
-    memo_key = (tuple(keys), n, est)
-    bounds = _BOUNDS_CACHE.get(memo_key)
-    xs = _identity_shuffle_keys(spark, n)
-    if xs is None:
-        return None
-    if bounds is None:
-        # fast path: stride-sample the key columns straight from the
-        # scan's parquet files on the driver — no Spark job, no
-        # first-call codegen JIT for the sample plan (measured 2.9 s of
-        # the first q_sort call).  Capped by total file bytes; any
-        # mismatch (non-file source, renamed keys, too big) falls back
-        # to the distributed hash sample.  A stride sample of a file in
-        # any order is a valid bounds source — bounds affect balance
-        # only.
-        samp = _pyarrow_key_sample(df, keys, sample_cap)
-        if samp is None:
-            keyproj = df.select(*keys)
-            samp = (
-                keyproj.filter(
-                    F.pmod(
-                        F.xxhash64(*[F.col(k) for k in keys], F.lit(7919)),
-                        F.lit(sample_mod),
-                    )
-                    == 0
-                )
-                .limit(sample_cap)
-                .toPandas()
-            )
-            if len(samp) < 4 * n:  # degenerate tiny input: full key set
-                samp = keyproj.limit(sample_cap).toPandas()
-        if len(samp) == 0:
-            return df.repartition(n)
-        recs = [
-            tuple(
-                None
-                if pd.isna(v)
-                else (v.item() if hasattr(v, "item") else v)
-                for v in row
-            )
-            for row in samp.itertuples(index=False)
-        ]
-        vals = sorted(recs, key=_py_bound_key)
-        m = len(vals)
-        bounds = [vals[(i * (m - 1)) // n] for i in range(1, n)]
-        _BOUNDS_CACHE[memo_key] = bounds
-
-    st = F.struct(*[F.col(k) for k in keys])
-
-    def _lit_struct(bound: tuple):
-        return F.struct(
-            *[
-                F.lit(v).cast(dtypes[k]).alias(k)
-                for k, v in zip(keys, bound)
-            ]
-        )
-
-    def _bucket(lo: int, hi: int):
-        # binary search over buckets lo..hi; bounds[i] separates i|i+1
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(st <= _lit_struct(bounds[mid]), _bucket(lo, mid)).otherwise(
-            _bucket(mid + 1, hi)
-        )
-
-    pid = _bucket(0, len(bounds))
-    part_key = F.element_at(
-        F.array(*[F.lit(x).cast("bigint") for x in xs]), (pid + 1).cast("int")
-    )
-    return (
-        df.withColumn("_pk", part_key).repartition(n, F.col("_pk")).drop("_pk")
-    )
-
-
 def external_sort_df(
     df: DataFrame,
     keys: list[str],
@@ -311,12 +114,9 @@ def external_sort_df(
     after an upstream salted range partition).
     """
     if not skip_shuffle:
-        n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        parted = range_partition_fixed_bounds(df, keys, n)
-        df = (
-            parted
-            if parted is not None
-            else df.repartitionByRange(n, *[F.col(k) for k in keys])
+        # no salt, so key-only hashes suffice: the sample scans only keys
+        df = salted_repartition_by_range(
+            df, keys, salt_buckets=1, num_partitions=num_partitions, hash_cols=keys
         )
     metrics_dir = os.path.join(checkpoint_dir, "_metrics") if checkpoint_dir else None
     fn = _partition_kernel(
@@ -333,38 +133,48 @@ def external_sort_df(
     return df.mapInArrow(fn, schema=df.schema)
 
 
-_NUMERIC_KEY_TYPES = {"tinyint", "smallint", "int", "bigint"}
-_IDENTITY_KEYS_CACHE: dict[int, list[int]] = {}
-_BOUNDS_CACHE: dict[tuple, list[tuple]] = {}
+# key types whose Python values round-trip through F.lit(v).cast(type) and
+# whose Arrow sort order equals Spark's struct order (strings as UTF-8
+# bytes, NULLs first)
+_SORTABLE_BOUND_TYPES = {
+    "tinyint", "smallint", "int", "bigint", "string", "date", "boolean",
+}
+_SALT = "_salt"
+# the bounds sample keeps rows whose content hash is 0 mod _SAMPLE_MOD,
+# at most _SAMPLE_CAP of them
+_SAMPLE_MOD = 16
+_SAMPLE_CAP = 1 << 18
+_M32 = 0xFFFFFFFF
 
 
-def _identity_shuffle_keys(spark, n: int) -> list[int] | None:
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _murmur3_long(v: int, seed: int = 42) -> int:
+    """Spark's ``Murmur3_x86_32.hashLong`` as a signed 32-bit int: the
+    hash that ``F.hash`` and HashPartitioning apply to one BIGINT."""
+    h = seed
+    for word in (v & _M32, (v >> 32) & _M32):
+        k = _rotl32(word * 0xCC9E2D51 & _M32, 15) * 0x1B873593 & _M32
+        h = (_rotl32(h ^ k, 13) * 5 + 0xE6546B64) & _M32
+    h ^= 8
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & _M32
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _identity_shuffle_keys(n: int) -> list[int]:
     """x_t per target partition t with pmod(murmur3(x_t), n) == t, so
-    ``repartition(n, key)`` places bucket t in partition t exactly.
-    One tiny deterministic job per distinct n (murmur3 is fixed, so the
-    table is process-cacheable); F.hash is the same Murmur3(seed=42)
-    that HashPartitioning uses.
-
-    Returns None when even a widened scan leaves the preimage table
-    incomplete (astronomically unlikely at 4096n candidates, but a crash
-    would be the wrong failure mode) — the caller then degrades to
-    repartitionByRange instead of dying mid-job."""
-    if n in _IDENTITY_KEYS_CACHE:
-        return _IDENTITY_KEYS_CACHE[n]
-    for span in (64 * n, 4096 * n):
-        rows = (
-            spark.range(0, max(span, 1024))
-            .select(F.col("id"), F.pmod(F.hash(F.col("id")), F.lit(n)).alias("t"))
-            .groupBy("t")
-            .agg(F.min("id").alias("x"))
-            .collect()
-        )
-        lut = {int(r["t"]): int(r["x"]) for r in rows}
-        if len(lut) == n:
-            xs = [lut[t] for t in range(n)]
-            _IDENTITY_KEYS_CACHE[n] = xs
-            return xs
-    return None
+    ``repartition(n, x)`` over BIGINT x places bucket t in partition t:
+    the smallest non-negative preimage of each t (about n ln n hashes)."""
+    xs: dict[int, int] = {}
+    x = 0
+    while len(xs) < n:
+        xs.setdefault(_murmur3_long(x) % n, x)
+        x += 1
+    return [xs[t] for t in range(n)]
 
 
 def salted_repartition_by_range(
@@ -373,140 +183,81 @@ def salted_repartition_by_range(
     *,
     salt_buckets: int = 8,
     num_partitions: int | None = None,
-    salt_col: str = "_salt",
-    sample_mod: int = 16,
     hash_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Range partition on (key, salt) so hot keys split across
-    partitions while global key order stays contiguous.
+    """Deterministic range partition on ``keys`` (ascending, nulls
+    first): partition i holds the i-th key range, so sorting each
+    partition sorts the whole frame.
 
-    The salt is a deterministic hash of the whole row (xxhash64 of all
-    columns) mod ``salt_buckets`` — task-retry idempotent, unlike
-    ``rand()``.  Equal keys land in up to ``salt_buckets`` adjacent range
-    partitions; a downstream per-key merge (groupBy or the kernel's
-    multi-run merge) re-unifies them.
+    With ``salt_buckets > 1`` the range key is (keys..., salt), where the
+    salt is xxhash64(``hash_cols``) mod ``salt_buckets``, so one hot key
+    splits across adjacent partitions while key order stays contiguous;
+    a downstream per-key merge re-unifies them.  ``hash_cols`` (default:
+    every column) is the row identity fed to the salt and sample hashes;
+    a narrow set avoids hashing a wide payload.
 
-    Unlike ``repartitionByRange`` (whose range bounds come from a sample
-    seeded by the RDD id, so two runs of the SAME job deal rows
-    differently — silently defeating fingerprint-verified checkpoint
-    replay), this partitioner is fully deterministic for a single
-    integer key: bucket bounds are quantiles of the combined
-    (key * salt_buckets + salt) value, the bucket id is an explicit
-    column, and an identity murmur3-preimage mapping pins bucket i to
-    partition i (partition order == key-range order).  Non-integer or
-    multi-column keys fall back to ``repartitionByRange``.
+    Bounds are the exact lower quantiles of a content-hash sample, so
+    the same input is partitioned the same way on every run, which lets
+    fingerprint-verified checkpoint resume replay (``repartitionByRange``
+    samples with a seed taken from the RDD id).  Rows route to buckets
+    through a balanced binary tree of struct compares, and a Murmur3
+    preimage key pins bucket i to partition i.  Key types outside
+    ``_SORTABLE_BOUND_TYPES`` fall back to ``repartitionByRange``.
     """
     n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # hash_cols: the row-identity columns fed to BOTH per-row hashes
-    # (salt + sample filter).  Default = all columns (always correct);
-    # callers whose schema carries a wide payload (e.g. page text) can
-    # pass a narrow identity set — the salt/sample only need to be
-    # row-granular and deterministic, and hashing kilobytes of text
-    # twice per row is pure waste at 100 TB.
-    hcols = list(hash_cols) if hash_cols else list(df.columns)
-    salted = df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in hcols]), F.lit(salt_buckets))
-    )
+    hcols = [F.col(c) for c in (hash_cols or df.columns)]
+    salt = [_SALT] if salt_buckets > 1 else []
+    if salt:
+        df = df.withColumn(_SALT, F.pmod(F.xxhash64(*hcols), F.lit(salt_buckets)))
+    rkeys = [*keys, *salt]
     dtypes = dict(df.dtypes)
-    if len(keys) != 1 or dtypes.get(keys[0]) not in _NUMERIC_KEY_TYPES or n < 2:
-        parted = salted.repartitionByRange(n, *[F.col(k) for k in keys], F.col(salt_col))
-        return parted.drop(salt_col)
+    if not all(dtypes[k] in _SORTABLE_BOUND_TYPES for k in keys):
+        return df.repartitionByRange(n, *rkeys).drop(*salt)
+    if n < 2:
+        return df.repartition(1).drop(*salt)
 
-    # composite order = (key, salt) LEXICOGRAPHIC.  The driver composes
-    # ck = key * salt_buckets + salt in arbitrary-precision Python ints
-    # (sample-side only); the per-row Spark expressions compare (key,
-    # salt) tuple-wise against decomposed bounds — no int64 key
-    # multiplication anywhere in the row path, so extreme key domains
-    # (|key| > 2^63/salt_buckets) cannot silently wrap (r2 advice).
-    # bounds from a CONTENT-hash sample + exact driver-side quantiles:
-    # - content-based filter (xxhash64 of the key mod m) selects the
-    #   same rows regardless of partition layout or RDD ids — unlike
-    #   df.sample(seed), whose per-partition RNG makes two differently-
-    #   partitioned runs sample different rows;
-    # - exact quantiles of the collected sample avoid approxQuantile's
-    #   sketch-merge order (cluster task-completion order is not
-    #   stable), which could shift a bound between reruns and silently
-    #   defeat fingerprint-verified checkpoint replay.
-    # The sample is capped (~hash-rate 1/16) and only the sampled rows
-    # pay the salt hash.
+    def collect(src):
+        # the cap bounds the collected sample; while the sample fits under
+        # it, the collected set, and so the bounds, are exactly reproducible
+        return src.select(*rkeys).limit(_SAMPLE_CAP).toArrow()
 
-    # the sample hash must be ROW-granular (all columns), not key-
-    # granular: a hot key shared by 50% of rows is all-or-nothing under
-    # a key hash, so the sample would miss it entirely and the bounds
-    # could never split it across partitions
-    samp = df.filter(
-        F.pmod(
-            F.xxhash64(*[F.col(c) for c in hcols], F.lit(1337)),
-            F.lit(sample_mod),
-        )
-        == 0
-    ).withColumn(
-        salt_col,
-        F.pmod(F.xxhash64(*[F.col(c) for c in hcols]), F.lit(salt_buckets)),
+    # a content hash picks the same rows whatever the partition layout,
+    # unlike df.sample(seed).  A salted caller needs it row-granular: under
+    # a key hash a hot key shared by half the rows is all-or-nothing, and
+    # the bounds could never split it.
+    sample = collect(
+        df.filter(F.pmod(F.xxhash64(*hcols, F.lit(1337)), F.lit(_SAMPLE_MOD)) == 0)
     )
+    if sample.num_rows < 4 * n:  # degenerate tiny input: use the full data
+        sample = collect(df)
+    order = pc.sort_indices(
+        sample, sort_keys=[(k, "ascending") for k in rkeys], null_placement="at_start"
+    ).to_numpy()
+    m = len(order)
+    picks = [order[(i * (m - 1)) // n] for i in range(1, n)] if m else []
+    bounds = sample.take(picks).to_pylist()  # n - 1 rows, as dicts
 
-    def _collect_composites(src) -> list[int]:
-        # the limit() caps driver memory at any input size; whenever the
-        # hash sample fits under it (size the sample_mod for ~<=256k
-        # sampled rows) the collected set — and therefore the bounds —
-        # is exactly reproducible.  If the cap ever truncates, bounds
-        # may differ between runs and the kernel's fingerprint-verified
-        # resume safely recomputes instead of replaying.
-        # Arrow collect (toPandas): the row-based py4j collect measured
-        # ~0.4 s for the same sample; the composite fold is vectorized
-        pdf = (
-            src.select(
-                F.col(keys[0]).cast("bigint").alias("_k"), F.col(salt_col).alias("_s")
-            )
-            # null keys dropped SPARK-side so the collected column stays
-            # int64 (a NaN would coerce it to float64 and corrupt keys
-            # past 2^53); null rows route to bucket 0 anyway
-            .filter(F.col("_k").isNotNull())
-            .limit(1 << 18)
-            .toPandas()
-        )
-        ks = pdf["_k"].to_numpy(dtype="int64")
-        ss = pdf["_s"].to_numpy(dtype="int64")
-        return sorted(int(k) * salt_buckets + int(s) for k, s in zip(ks, ss))
+    row = F.struct(*rkeys)
 
-    vals = _collect_composites(samp)
-    if len(vals) < 4 * n:  # degenerate tiny input: use the full data
-        vals = _collect_composites(salted)
-    if len(vals) == 0:
-        return salted.repartition(n).drop(salt_col)
-    m = len(vals)
-    # exact "lower" quantiles of the sorted sample (same element
-    # np.quantile(method="lower") would pick), in Python ints
-    bounds = [vals[(i * (m - 1)) // n] for i in range(1, n)]
-    xs = _identity_shuffle_keys(df.sparkSession, n)
-    if xs is None:  # preimage table incomplete: degrade, don't crash
-        parted = salted.repartitionByRange(n, *[F.col(k) for k in keys], F.col(salt_col))
-        return parted.drop(salt_col)
-    # bucket id via a codegen'd CASE ladder (a lambda over an array
-    # literal would run interpreted per row).  Each bound decomposes
-    # back into (key_bound, salt_bound); the row-side test is the
-    # overflow-free tuple compare  key < kb  OR  (key == kb AND salt <=
-    # sb).  NULL keys route to bucket 0: the kernel sorts nulls FIRST,
-    # so nulls-first global order holds across partition ids
-    # (repartitionByRange semantics).
-    key_c = F.col(keys[0]).cast("bigint")
-    pid = F.lit(len(bounds))
-    for i in range(len(bounds) - 1, -1, -1):
-        kb, sb = divmod(int(bounds[i]), salt_buckets)
-        cond = (key_c < F.lit(kb)) | (
-            (key_c == F.lit(kb)) & (F.col(salt_col) <= F.lit(sb))
+    def bucket(lo: int, hi: int):
+        # bounds[i] separates bucket i from i + 1
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        bound = F.struct(
+            *[F.lit(bounds[mid][k]).cast(dtypes[k]).alias(k) for k in rkeys]
         )
-        pid = F.when(cond, F.lit(i)).otherwise(pid)
-    pid = F.when(F.col(keys[0]).isNull(), F.lit(0)).otherwise(pid)
-    # murmur3 is TYPE-sensitive: the preimage table hashed BIGINTs, so
-    # the literals must be BIGINT too or the mapping silently scrambles
+        return F.when(row <= bound, bucket(lo, mid)).otherwise(bucket(mid + 1, hi))
+
+    # murmur3 is type-sensitive: the preimages are BIGINT hashes
     part_key = F.element_at(
-        F.array(*[F.lit(x).cast("bigint") for x in xs]), (pid + 1).cast("int")
+        F.array(*[F.lit(x).cast("bigint") for x in _identity_shuffle_keys(n)]),
+        bucket(0, len(bounds)) + 1,
     )
     return (
-        salted.withColumn("_pk", part_key)
+        df.withColumn("_pk", part_key)
         .repartition(n, F.col("_pk"))
-        .drop(salt_col, "_pk")
+        .drop("_pk", *salt)
     )
 
 

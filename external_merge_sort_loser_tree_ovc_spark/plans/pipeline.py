@@ -3,7 +3,8 @@
   pages --geocode/cell-encode (codegen)--> morton key (+ 40-bit url-hash
         tiebreak, so the sort key is all-integer and packs into ONE
         uint64 per row: 24 morton bits + 40 hash bits)
-        --salted repartitionByRange (the explicit skew-safe shuffle)-->
+        --salted_repartition_by_range (deterministic range shuffle on
+          (morton, salt): the explicit skew-safe shuffle)-->
         per-partition OVC external merge sort (mapInArrow kernel,
         packed single-int compares, counted IN the production merge)
         --> point-in-polygon join (broadcast cover + ray-cast refine)
@@ -58,7 +59,6 @@ def flagship_pipeline(
     num_partitions: int | None = None,
     salt_buckets: int = 8,
     memory_budget_rows: int | None = None,
-    count_compares: bool = True,  # kept for API compat; counters are free now
     keep_lineage: bool = False,
     cache_input: bool = True,
     checkpoint_dir: str | None = None,
@@ -71,7 +71,6 @@ def flagship_pipeline(
     geometry the engine exists to demonstrate; pass an explicit value to
     pin the geometry (tests do).
     """
-    del count_compares  # counters now come from the production merge
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )

@@ -91,7 +91,7 @@ def _part1by1(x: np.ndarray) -> np.ndarray:
 def morton_id(xg, yg) -> np.ndarray:
     """Interleave (xg, yg) bits -> Z-order curve index (int64).
 
-    Used as the repartitionByRange / OVC-sort key: consecutive Morton
+    Used as the range-partition / OVC-sort key: consecutive Morton
     ranges are compact 2-D blocks, so each range partition covers a
     spatially local window — neighbour lookups (kNN rings) mostly stay
     within one partition at high resolution.

@@ -150,12 +150,12 @@ def test_flagship_resumes_from_external_checkpoint(spark, tmp_path):
     pages = synth_pages(spark, 12000, seed=3)
     m1 = flagship_pipeline(
         spark, pages, num_partitions=4, checkpoint_dir=ck,
-        count_compares=False, memory_budget_rows=1024,
+        memory_budget_rows=1024,
     )
     assert m1["partitions_resumed"] == 0
     m2 = flagship_pipeline(
         spark, pages, num_partitions=4, checkpoint_dir=ck,
-        count_compares=False, memory_budget_rows=1024,
+        memory_budget_rows=1024,
     )
     # every NON-EMPTY partition resumes (an empty partition commits no
     # runs — nothing to replay, recompute costs zero)
@@ -166,7 +166,6 @@ def test_flagship_resumes_from_external_checkpoint(spark, tmp_path):
     # changed input with the same checkpoint dir must NOT replay
     m3 = flagship_pipeline(
         spark, synth_pages(spark, 12000, seed=4), num_partitions=4,
-        checkpoint_dir=str(tmp_path / "ck"), count_compares=False,
-        memory_budget_rows=1024,
+        checkpoint_dir=str(tmp_path / "ck"), memory_budget_rows=1024,
     )
     assert m3["partitions_resumed"] == 0

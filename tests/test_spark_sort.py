@@ -1,12 +1,15 @@
 """Spark-level external sort: equivalence with orderBy, witness invariants,
 lineage metrics, salting, checkpoint/resume at the DataFrame level."""
 
+import datetime
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
+    _identity_shuffle_keys,
+    _murmur3_long,
     external_sort_df,
     read_lineage,
     salted_repartition_by_range,
@@ -25,14 +28,32 @@ def lineitem(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
 
 
+def _mixed_key_frame(spark):
+    """(string, int, date) keys with NULLs in every key column and
+    non-ASCII strings.  "\uffff" sorts before "\U0001F600" in UTF-8 byte
+    order (Spark's) but after it in UTF-16 order."""
+    words = ["a", "b", "\uffff", "\U0001F600", "\u00e9", None, "zz", ""]
+    rows = [
+        (
+            words[i % len(words)],
+            None if i % 11 == 0 else (i * 7919) % 53,
+            None if i % 13 == 0 else datetime.date(2020, 1, 1 + i % 17),
+            i,
+        )
+        for i in range(3000)
+    ]
+    return spark.createDataFrame(rows, "s string, k int, d date, v bigint")
+
+
 def test_external_sort_matches_orderby(spark, lineitem):
-    ours = external_sort_df(
-        lineitem, KEYS, num_partitions=4, memory_budget_rows=2000, batch_rows=500
-    )
-    theirs = lineitem.orderBy(*KEYS)
-    a = [tuple(r) for r in ours.select(*KEYS).collect()]
-    b = [tuple(r) for r in theirs.select(*KEYS).collect()]
-    assert a == b
+    for df, keys in ((lineitem, KEYS), (_mixed_key_frame(spark), ["s", "k", "d"])):
+        ours = external_sort_df(
+            df, keys, num_partitions=4, memory_budget_rows=2000, batch_rows=500
+        )
+        theirs = df.orderBy(*keys)
+        a = [tuple(r) for r in ours.select(*keys).collect()]
+        b = [tuple(r) for r in theirs.select(*keys).collect()]
+        assert a == b
 
 
 def test_witness_invariants_roundtrip(spark, lineitem):
@@ -103,7 +124,8 @@ def test_job_level_resume(spark, lineitem, tmp_path):
     """north_rule resumability: a re-run over the same checkpoint dir
     replays committed runs (resumed=True in every partition's lineage)
     instead of re-sorting.  Deterministic hash partitioning stands in
-    for a task retry with identical input."""
+    for a task retry with identical input; the sort's own range shuffle
+    must be just as reproducible."""
     from pyspark.sql import functions as F
 
     from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
@@ -125,6 +147,12 @@ def test_job_level_resume(spark, lineitem, tmp_path):
     lin2 = read_lineage(spark, ckpt).toPandas()
     assert n1 == n2 == lineitem.count()
     assert lin2.resumed.all(), f"expected all partitions resumed: {lin2.resumed.tolist()}"
+
+    ck = str(tmp_path / "resume-shuffle")
+    for _ in range(2):
+        external_sort_df(lineitem, keys, num_partitions=4, checkpoint_dir=ck).count()
+    lin = read_lineage(spark, ck).toPandas()
+    assert lin.resumed.all(), f"expected all partitions resumed: {lin.resumed.tolist()}"
 
 
 def test_salted_repartition_nulls_first_partition(spark):
@@ -168,3 +196,25 @@ def test_salted_repartition_nulls_first_partition(spark):
     nonempty = [r for r in ranges if r["lo"] is not None]
     for a, b in zip(nonempty, nonempty[1:]):
         assert a["hi"] <= b["lo"] + 0  # ranges ordered by partition id
+
+
+def test_identity_shuffle_keys_match_spark_hash(spark):
+    """The pure-Python Murmur3 equals F.hash on edge BIGINTs, and the
+    preimage table makes repartition(n, x) put bucket t in partition t."""
+    ids = [0, 1, -1, 42, 2**31 - 1, -(2**31), 2**32, 2**32 - 1, 2**63 - 1,
+           -(2**63), 12345678901234, -987654321]
+    df = spark.createDataFrame([(x,) for x in ids], "x bigint")
+    got = df.select(
+        "x", F.hash("x").alias("h"), F.pmod(F.hash("x"), F.lit(7)).alias("t")
+    ).collect()
+    assert all(r["h"] == _murmur3_long(r["x"]) for r in got)
+    assert all(r["t"] == _murmur3_long(r["x"]) % 7 for r in got)
+    for n in (2, 3, 8, 16):
+        xs = _identity_shuffle_keys(n)
+        placed = (
+            spark.createDataFrame(list(enumerate(xs)), "t int, x bigint")
+            .repartition(n, "x")
+            .select("t", F.spark_partition_id().alias("p"))
+            .collect()
+        )
+        assert sorted((r["t"], r["p"]) for r in placed) == [(t, t) for t in range(n)]
