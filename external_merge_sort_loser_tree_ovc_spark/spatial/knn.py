@@ -13,9 +13,11 @@ table, without a cross join:
            > (c * cell_span)^2 — a query whose k-th best is <= that
            bound can never improve, so it leaves the pending set.
 
-Every round is one shuffle-light Spark job over the shrinking
-unsatisfied set; the big point table is touched only through its cell
-index (a handful of cells per query), never cross-joined.
+A round runs two Spark actions: the checkpointed top-k of the pending
+queries' ring candidates merged with the previous top-k, and one count
+of the satisfied queries.  The big point table is cached once and
+touched only through its cell index (a handful of cells per query),
+never cross-joined; no round starts a Python worker.
 
 Metric: integer squared euclidean on fine-grid coords (exact in int64,
 so the DuckDB oracle — a brute-force cross join, ``knn_oracle_sql`` —
@@ -29,17 +31,27 @@ cell-ring expansion").
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import math
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def _offsets(lo: int, hi: int) -> list[tuple[int, int]]:
-    """All (dx, dy) with lo <= chebyshev(dx, dy) <= hi."""
-    return [
-        (dx, dy)
-        for dx in range(-hi, hi + 1)
-        for dy in range(-hi, hi + 1)
-        if lo <= max(abs(dx), abs(dy)) <= hi
-    ]
+def _ring(lo: int, hi: int) -> Column:
+    """Generator of all (_dx, _dy) with lo <= chebyshev(dx, dy) <= hi.
+
+    A JVM-side literal: offsets built with ``createDataFrame`` from a
+    Python list become a PythonRDD, which starts a second Python worker
+    pool beside the Arrow one."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(F.lit(dx).alias("_dx"), F.lit(dy).alias("_dy"))
+                for dx in range(-hi, hi + 1)
+                for dy in range(-hi, hi + 1)
+                if lo <= max(abs(dx), abs(dy)) <= hi
+            ]
+        )
+    )
 
 
 def knn_join(
@@ -60,6 +72,14 @@ def knn_join(
     tie-break (dist2, point_id).  Coords are nonnegative integers; the
     index cell is coord >> index_shift (cell_span = 2^index_shift).
 
+    A round explodes each pending query to its ring of cell offsets (a
+    JVM-side literal), joins the ring cells to the cached points, merges
+    the candidates with the previous top-k and materializes the new
+    top-k with one eager ``localCheckpoint``; one count of the queries
+    whose k-th best now beats the searched radius decides whether
+    another round runs.  Queries still pending after ``max_rounds``
+    raise ``RuntimeError`` rather than return an unproven top-k.
+
     ``index_shift=None`` picks the cell span ADAPTIVELY from the point
     density (one tiny aggregate over the cached point table): span ~
     sqrt(area * target_cell_points / n), so the radius-1 disk holds
@@ -68,15 +88,13 @@ def knn_join(
     (guide §2: make partitioning scale-adaptive, not a constant).  The
     shift NEVER affects results (the ring expansion is exact at any
     granularity), only candidate volume and round count."""
-    spark = points.sparkSession
-    raw_pts = points.select(
+    pts = points.select(
         F.col(point_id).alias("_pid"),
         F.col(x).cast("bigint").alias("_px"),
         F.col(y).cast("bigint").alias("_py"),
-    )
-    raw_pts.cache()
+    ).cache()
     if index_shift is None:
-        stats = raw_pts.agg(
+        stats = pts.agg(
             F.count(F.lit(1)).alias("n"),
             F.min("_px").alias("x0"),
             F.max("_px").alias("x1"),
@@ -90,41 +108,47 @@ def knn_join(
             area = max(1, (stats["x1"] - stats["x0"] + 1)) * max(
                 1, (stats["y1"] - stats["y0"] + 1)
             )
-            import math
-
             span_f = math.sqrt(area * target_cell_points / n_pts)
             index_shift = max(0, min(40, round(math.log2(max(1.0, span_f)))))
     span = 1 << index_shift
-    pts = raw_pts.select(
-        "_pid",
-        "_px",
-        "_py",
+    cells = pts.select(
+        "*",
         F.shiftright(F.col("_px"), index_shift).alias("_pcx"),
         F.shiftright(F.col("_py"), index_shift).alias("_pcy"),
     )
-    pts = pts.cache()
 
-    pending = queries.select(
+    qs = queries.select(
         F.col(query_id).alias("_qid"),
         F.col(x).cast("bigint").alias("_qx"),
         F.col(y).cast("bigint").alias("_qy"),
         F.shiftright(F.col(x).cast("bigint"), index_shift).alias("_qcx"),
         F.shiftright(F.col(y).cast("bigint"), index_shift).alias("_qcy"),
     )
-    best = None  # running top-k: (_qid, _pid, dist2)
+    n_queries = qs.count()
+    pending, n_pending = qs, n_queries
+    best = None  # running top-k: (_qid, _pid, dist2, rank)
     searched = -1  # max Chebyshev radius fully searched so far
+    w = Window.partitionBy("_qid").orderBy(F.col("dist2"), F.col("_pid"))
     rounds = 0
-    n_pending = pending.count()
-    while rounds < max_rounds and n_pending > 0:
+    while n_pending > 0:
+        if rounds == max_rounds:
+            pts.unpersist()
+            raise RuntimeError(
+                f"knn_join: {n_pending} of {n_queries} queries still pending "
+                f"after {max_rounds} rounds (cell radius {searched} searched, "
+                f"cell span {span})"
+            )
         lo, hi = searched + 1, max(searched + 1, start_radius if rounds == 0 else 0)
-        off_df = F.broadcast(
-            spark.createDataFrame(_offsets(lo, hi), ["_dx", "_dy"])
-        )
         cand = (
-            pending.crossJoin(off_df)
-            .withColumn("_pcx", F.col("_qcx") + F.col("_dx"))
-            .withColumn("_pcy", F.col("_qcy") + F.col("_dy"))
-            .join(pts, ["_pcx", "_pcy"])
+            pending.select("*", _ring(lo, hi))
+            .select(
+                "_qid",
+                "_qx",
+                "_qy",
+                (F.col("_qcx") + F.col("_dx")).alias("_pcx"),
+                (F.col("_qcy") + F.col("_dy")).alias("_pcy"),
+            )
+            .join(cells, ["_pcx", "_pcy"])
             .select(
                 "_qid",
                 "_pid",
@@ -139,50 +163,39 @@ def knn_join(
             if best is None
             else cand.unionByName(best.select("_qid", "_pid", "dist2"))
         )
-        w = Window.partitionBy("_qid").orderBy(F.col("dist2"), F.col("_pid"))
-        topk = (
+        # localCheckpoint, not cache + count: a cached loop keeps the
+        # previous rounds in its plan, which grows ~3x per round until
+        # printing it runs the driver out of heap
+        best = (
             merged.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        topk.count()  # cut lineage before the old cache goes away
-        if best is not None:
-            best.unpersist()
-        best = topk
         searched = hi
-        # a query stays pending unless it has k hits whose worst dist2
-        # can no longer be beaten by anything outside radius `searched`
+        # a query is done once it has k hits whose worst dist2 can no
+        # longer be beaten by anything outside radius `searched`; the
+        # bound only grows, so a done query never becomes pending again
         bound = (searched * span) * (searched * span)
-        kth = topk.groupBy("_qid").agg(
-            F.max("dist2").alias("_dk"), F.count(F.lit(1)).alias("_nk")
-        )
-        new_pending = (
-            pending.join(kth, "_qid", "left")
-            .filter(
-                F.col("_nk").isNull()
-                | (F.col("_nk") < k)
-                | (F.col("_dk") > F.lit(bound))
-            )
-            .select("_qid", "_qx", "_qy", "_qcx", "_qcy")
-            .cache()  # cut lineage: otherwise round r recomputes rounds 1..r-1
-        )
-        n_pending = new_pending.count()
-        pending.unpersist()
-        pending = new_pending
+        done = best.filter(
+            (F.col("rank") == k) & (F.col("dist2") <= F.lit(bound))
+        ).select("_qid")
+        n_pending = n_queries - done.count()
+        pending = qs.join(done, "_qid", "left_anti")
         rounds += 1
     pts.unpersist()
-    raw_pts.unpersist()
-    if best is None:
-        return spark.createDataFrame(
-            [], f"{query_id} long, {point_id} long, dist2 long, rank int"
+    if best is None:  # no queries: an empty frame typed like the result
+        best = qs.select(
+            "_qid",
+            F.lit(None).cast("bigint").alias("_pid"),
+            F.lit(None).cast("bigint").alias("dist2"),
+            F.lit(None).cast("int").alias("rank"),
         )
-    out = best.select(
+    return best.select(
         F.col("_qid").alias(query_id),
         F.col("_pid").alias(point_id),
         F.col("dist2").cast("bigint").alias("dist2"),
         F.col("rank").cast("int").alias("rank"),
     )
-    return out
 
 
 def knn_oracle_sql(

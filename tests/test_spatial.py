@@ -196,6 +196,10 @@ def test_knn_matches_bruteforce(spark):
         }
     )
     qs = pts.iloc[::40].rename(columns={"point_id": "query_id"}).reset_index(drop=True)
+    # a query far outside the point square: 10 ring rounds at span 512,
+    # each one a checkpointed plan of the same size
+    far = pd.DataFrame({"query_id": [n], "xi": [4096 + 5000], "yi": [2000]})
+    qs = pd.concat([qs, far], ignore_index=True)
     k = 5
     got = (
         knn_join(
@@ -219,6 +223,28 @@ def test_knn_matches_bruteforce(spark):
     assert len(got) == len(expect)
     for c in ["query_id", "point_id", "dist2", "rank"]:
         assert (got[c].to_numpy() == expect[c].to_numpy()).all(), c
+
+
+def test_knn_round_cap_raises(spark):
+    from external_merge_sort_loser_tree_ovc_spark.spatial.knn import knn_join
+
+    rng = np.random.default_rng(5)
+    pts = pd.DataFrame(
+        {
+            "point_id": np.arange(200, dtype=np.int64),
+            "xi": rng.integers(0, 4096, 200),
+            "yi": rng.integers(0, 4096, 200),
+        }
+    )
+    qs = pd.DataFrame({"query_id": [0], "xi": [4096 + 4500], "yi": [2000]})
+    with pytest.raises(RuntimeError, match="1 of 1 queries still pending after 1 rounds"):
+        knn_join(
+            spark.createDataFrame(pts),
+            spark.createDataFrame(qs),
+            5,
+            index_shift=9,
+            max_rounds=1,
+        )
 
 
 def test_raster_tiles(spark, pages):
