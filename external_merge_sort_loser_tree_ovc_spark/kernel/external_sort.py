@@ -5,7 +5,8 @@ task.  Phases mirror the reference's ``SortIterator`` lifecycle
 (reference ``Sort.cpp:21-136``):
 
   pass 0  run formation — buffer Arrow batches up to the memory budget,
-          sort each full buffer vectorized, spill as an Arrow run file;
+          sort each full buffer vectorized, spill as an Arrow run file
+          of ``batch_rows`` pages;
           the final partial buffer stays IN MEMORY (the analogue of the
           reference's graceful internal→external degradation, reference
           ``DRAM.cpp:75-134``: only what exceeds memory is spilled, so
@@ -13,8 +14,15 @@ task.  Phases mirror the reference's ``SortIterator`` lifecycle
   passes 1..d-1  intermediate merges while more than B runs remain,
           smallest runs first, initial fan-in X = (W-2) % (B-1) + 2
           (reference ``Sort.cpp:85``, ``DRAM.cpp:460``),
-  final   lazy merge of ≤ B runs, emitted batch-by-batch on demand
+  final   merge of ≤ B runs, emitted one ``emit_rows`` slice at a time
           (reference ``Sort.cpp:125-134``).
+
+Every fast-mode merge, intermediate or final, holds bounded memory
+(``_merge_stream``): the merge order is computed from the runs' key
+columns alone, then the payload is gathered one output slice at a time
+through a page cursor per run (reference ``DRAM.cpp:551-596``), so a
+merge holds one page per input run, one output slice, and 8-16 bytes of
+key codes per row -- never a whole-partition table.
 
 The data plane is Arrow end to end: key normalization reads Arrow
 buffers directly (keys_arrow.py), row reordering is ``Table.take``
@@ -48,7 +56,7 @@ from . import vmerge
 from .keys_arrow import key_matrix_table, row_fingerprint_table
 from .loser_tree import LoserTreeMerge
 from .planner import initial_fan_in, merge_depth
-from .runs import RunStore
+from .runs import PageCursor, RunStore
 
 
 @dataclass
@@ -104,10 +112,16 @@ def _is_trivial(order: np.ndarray) -> bool:
     return bool(len(order) == 0 or (order == np.arange(len(order))).all())
 
 
-def _merge_tables(
+def _pages(tbl: pa.Table, rows: int) -> Iterator[pa.Table]:
+    return (tbl.slice(i, rows) for i in range(0, tbl.num_rows, rows))
+
+
+def _merge_order(
     tables: list[pa.Table], key_cols: list[str], counters: dict | None = None
-) -> pa.Table:
-    """Vectorized merge of sorted Arrow tables into one sorted table.
+) -> np.ndarray:
+    """Merge order of sorted Arrow tables: int64 gather indices into their
+    concatenation.  Only ``key_cols`` are read, so callers pass the key
+    columns alone.
 
     ``counters``: optional {"ovc", "col"} dict accumulated with the
     packed-path comparison counts (``vmerge.merge2_compare_counts``) —
@@ -115,8 +129,6 @@ def _merge_tables(
     matrix/collation fallbacks perform no countable head-to-head events
     (one stable lexsort) and leave the counters untouched.
     """
-    if len(tables) == 1:
-        return tables[0]
     big = pa.concat_tables(tables, promote_options="default")
     # normalize ONCE over the concatenation, then slice per-run ranges:
     # per-run matrices are not mutually comparable when nulls are
@@ -134,14 +146,14 @@ def _merge_tables(
         packed = K.pack_columns_shared(mats)
         if packed is not None:
             # O(n log k), single-int compares
-            idx = vmerge.merge_runs_packed(packed, counters)
-        else:
-            idx = vmerge.merge_runs_matrix(mats)
-        return big.take(pa.array(idx))
+            return vmerge.merge_runs_packed(packed, counters)
+        return vmerge.merge_runs_matrix(mats)
+    # a stable sort of runs sorted in the same collation is a merge:
+    # every run is still consumed in order
     idx = pc.sort_indices(
         big, sort_keys=_sort_keys(key_cols), null_placement="at_start"
     )
-    return big.take(idx)
+    return idx.to_numpy().astype(np.int64)
 
 
 def _to_table(b) -> pa.Table:
@@ -256,10 +268,7 @@ class ExternalSorter:
             else:
                 self._invalidate(candidate[0])
                 store = staging
-                if self.checkpoint_inputs and tail is not None and tail.num_rows:
-                    info = store.write_run(tail)
-                    self._run_cache = (info, tail)  # write-through: no read-back
-                    tail = None
+                tail = self._spill_tail(store, tail)
                 store.commit("runs_formed", self._commit_extra(tail))
         else:
             store = RunStore(self.spill_dir)
@@ -267,19 +276,37 @@ class ExternalSorter:
             if tail is _INLINE_DONE:
                 self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
                 return
-            if self.checkpoint_inputs and tail is not None and tail.num_rows:
-                info = store.write_run(tail)
-                self._run_cache = (info, tail)  # write-through: no read-back
-                tail = None
+            tail = self._spill_tail(store, tail)
             store.commit("runs_formed", self._commit_extra(tail))
 
         yield from self._merge_all(store, tail)
         self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
 
-    def _read_run(self, store: RunStore, r):
-        if self._run_cache is not None and self._run_cache[0] is r:
+    def _in_memory(self, src) -> pa.Table | None:
+        """The table behind a merge source: the in-memory tail, the
+        write-through cached run, or None for a run read from disk."""
+        if isinstance(src, pa.Table):
+            return src
+        if self._run_cache is not None and self._run_cache[0] is src:
             return self._run_cache[1]
-        return store.read_run(r)
+        return None
+
+    def _read_run(self, store: RunStore, src, columns=None) -> pa.Table:
+        tbl = self._in_memory(src)
+        if tbl is None:
+            return store.read_run(src, columns)
+        return tbl if columns is None else tbl.select(columns)
+
+    def _open(self, store: RunStore, src) -> PageCursor:
+        tbl = self._in_memory(src)
+        return store.open_run(src) if tbl is None else PageCursor.of_table(tbl)
+
+    def _spill_tail(self, store: RunStore, tail):
+        if self.checkpoint_inputs and tail is not None and tail.num_rows:
+            info = store.write_run(_pages(tail, self.batch_rows))
+            self._run_cache = (info, tail)  # write-through: no read-back
+            return None
+        return tail
 
     def _commit_extra(self, tail) -> dict:
         return {
@@ -327,7 +354,9 @@ class ExternalSorter:
                 start = 0
                 while tbl.num_rows - start >= budget:
                     chunk = tbl.slice(start, budget)
-                    store.write_run(_sort_table(chunk, self.key_cols))
+                    store.write_run(
+                        _pages(_sort_table(chunk, self.key_cols), self.batch_rows)
+                    )
                     spilled_any = True
                     start += budget
                 rest = tbl.slice(start)
@@ -344,7 +373,7 @@ class ExternalSorter:
             self.metrics.passes = 1
             self.metrics.rows_out = 0 if tail is None else tail.num_rows
             if tail is not None:
-                yield from self._emit_table(tail)
+                yield from _pages(tail, self._emit_step())
             return _INLINE_DONE
         return tail
 
@@ -368,62 +397,112 @@ class ExternalSorter:
             take = m.initial_fan_in if first_step else min(b, len(store.runs))
             first_step = False
             batch = store.runs[:take]
-            tables = [self._read_run(store, r) for r in batch]
             gen = 1 + max(r.generation for r in batch)
             max_gen = max(max_gen, gen)
-            merged = _merge_tables(tables, self.key_cols, self._cmp)
-            store.remove_runs(batch)
+            # the merged run streams into its file page by page; the
+            # inputs are removed only once it is complete
+            merged = self._merge_stream(store, batch, self.batch_rows)
             store.write_run(merged, generation=gen)
-            store.commit(
-                "runs_formed",
-                {
-                    "rows_in": m.rows_in,
-                    "covers_all": tail_tbl is None,
-                    "fingerprint": f"{self._fingerprint:016x}",
-                },
-            )
+            if self._run_cache is not None and any(
+                r is self._run_cache[0] for r in batch
+            ):
+                self._run_cache = None
+            store.remove_runs(batch)
+            store.commit("runs_formed", self._commit_extra(tail_tbl))
         # passes executed: formation + intermediate generations + final merge
         m.passes = 1 + max_gen + (1 if w > 1 else 0)
         m.spill_rows = store.spill_rows
 
-        final_tables = [self._read_run(store, r) for r in store.runs]
+        sources = list(store.runs)
         if tail_tbl is not None:
-            final_tables.append(tail_tbl)
-        # the whole-row loser tree (reference semantics: every column is
-        # a key column) is only valid when key_cols IS the whole schema
-        # — runs are sorted by key_cols, and a tree comparing extra
-        # payload columns would assume an order the runs don't have
-        whole_row_key = bool(final_tables) and list(self.key_cols) == list(
-            final_tables[0].schema.names
-        )
-        if self.mode == "exact" and whole_row_key and self._all_int(final_tables):
-            yield from self._final_exact(final_tables)
-        elif self.mode == "exact" and self._exact_keys_supported(final_tables):
-            yield from self._final_exact_coded(final_tables)
+            sources.append(tail_tbl)
+        exact = self._final_exact_merge(store, sources) if self.mode == "exact" else None
+        if exact is not None:
+            yield from exact
         else:
-            out = (
-                _merge_tables(final_tables, self.key_cols, self._cmp)
-                if final_tables
-                else None
-            )
-            if out is not None:
-                m.rows_out += out.num_rows
-                yield from self._emit_table(out)
+            if sources:
+                for out in self._merge_stream(store, sources, self._emit_step()):
+                    m.rows_out += out.num_rows
+                    yield out
             # instrumentation comes from the one production merge path
             # (packed merge-path counts) whenever it performed the final
             # merge — including an exact-mode schema the tree can't code
             # (exact tree paths overwrite with reference-faithful counts)
             m.ovc_compares = self._cmp.get("ovc", 0)
             m.col_compares = self._cmp.get("col", 0)
-        store.commit(
-            "done",
-            {
-                "rows_in": m.rows_in,
-                "covers_all": tail_tbl is None,
-                "fingerprint": f"{self._fingerprint:016x}",
-                "metrics": m.as_dict(),
-            },
+        store.commit("done", {**self._commit_extra(tail_tbl), "metrics": m.as_dict()})
+
+    def _merge_stream(self, store: RunStore, sources: list, step: int):
+        """Merge sorted ``sources`` (runs or in-memory tables) into sorted
+        tables of ``step`` rows.
+
+        The order comes from the key columns alone (``_merge_order``).
+        A merge consumes every source in order, so each output slice
+        takes a contiguous range from each source: it is read through
+        that source's page cursor, the ranges are concatenated, and one
+        ``take`` with the slice-local permutation puts them in order.
+        """
+        sizes = [s.num_rows if isinstance(s, pa.Table) else s.rows for s in sources]
+        bounds = np.cumsum([0] + sizes)
+        idx = None
+        if len(sources) > 1:
+            keys = [self._read_run(store, s, self.key_cols) for s in sources]
+            idx = _merge_order(keys, self.key_cols, self._cmp)
+            del keys
+        cursors: list[PageCursor] = []
+        try:
+            for s in sources:
+                cursors.append(self._open(store, s))
+            schema = cursors[0].schema
+            if any(not c.schema.equals(schema) for c in cursors):
+                schema = pa.unify_schemas(
+                    [c.schema for c in cursors], promote_options="default"
+                )
+            done = np.zeros(len(sources), dtype=np.int64)  # rows read per source
+            for i in range(0, int(bounds[-1]), step):
+                if idx is None:
+                    yield cursors[0].read(min(step, int(bounds[-1]) - i))
+                    continue
+                sl = idx[i : i + step]
+                src = np.searchsorted(bounds, sl, side="right") - 1
+                counts = np.bincount(src, minlength=len(sources))
+                # position of global row g of source r within the
+                # concatenated ranges: g - bounds[r] - done[r] + offset[r]
+                shift = np.zeros(len(sources), dtype=np.int64)
+                parts, offset = [], 0
+                for r in np.flatnonzero(counts):
+                    parts.append(cursors[r].read(int(counts[r])))
+                    shift[r] = offset - done[r] - bounds[r]
+                    offset += counts[r]
+                done += counts
+                out = pa.concat_tables(parts, promote_options="default")
+                if len(parts) > 1:
+                    out = out.take(pa.array(sl + shift[src]))
+                if not out.schema.equals(schema):
+                    out = pa.concat_tables(
+                        [schema.empty_table(), out], promote_options="default"
+                    )
+                yield out
+        finally:
+            for c in cursors:
+                c.close()
+
+    def _final_exact_merge(self, store: RunStore, sources: list):
+        """The counted loser-tree final merge over fully read runs, or
+        None when the schema suits neither tree."""
+        tables = [self._read_run(store, s) for s in sources]
+        # the whole-row loser tree (reference semantics: every column is
+        # a key column) is only valid when key_cols IS the whole schema
+        # — runs are sorted by key_cols, and a tree comparing extra
+        # payload columns would assume an order the runs don't have
+        whole_row_key = bool(tables) and list(self.key_cols) == list(
+            tables[0].schema.names
         )
+        if whole_row_key and self._all_int(tables):
+            return self._final_exact(tables)
+        if self._exact_keys_supported(tables):
+            return self._final_exact_coded(tables)
+        return None
 
     # -- final merge, exact loser-tree mode ------------------------------------
     def _all_int(self, tables: list[pa.Table]) -> bool:
@@ -555,7 +634,7 @@ class ExternalSorter:
         self.metrics.col_compares = tree.col_compares
 
     # -- emission ---------------------------------------------------------------
-    def _emit_table(self, table: pa.Table):
+    def _emit_step(self) -> int:
         # emission slices are decoupled from batch_rows (see emit_rows
         # field doc): geometry pages can be tiny without pushing
         # thousands of micro-batches into the downstream Arrow stream
@@ -563,9 +642,7 @@ class ExternalSorter:
             # range(0, n, step<=0) would silently emit NOTHING — make the
             # misconfiguration loud instead of losing the sorted output
             raise ValueError(f"emit_rows must be >= 1, got {self.emit_rows}")
-        step = self.emit_rows if self.emit_rows else max(self.batch_rows, 8192)
-        for i in range(0, table.num_rows, step):
-            yield table.slice(i, step)
+        return self.emit_rows if self.emit_rows else max(self.batch_rows, 8192)
 
 
 class _InlineDone:

@@ -8,6 +8,11 @@ Plays the role of the reference's ``HDD`` (reference ``HDD.h:8-31``):
   ``HDD.cpp:83-90``),
 - unlike the reference's in-process vectors, runs are real compressed
   Arrow IPC files on local disk (lz4 default, SPARK_GRAFT_RUN_CODEC) (the executor-local spill path at cluster scale),
+- a run file is a sequence of pages: one IPC record batch per table
+  chunk the writer hands in (the sorter writes ``batch_rows`` pages), and
+  a ``PageCursor`` reads it back one page at a time (the reference's
+  per-run page buffer, ``DRAM.cpp:551-596``); a merge reads only the key
+  columns whole (``read_run(columns=...)``),
 - the manifest is a JSON checkpoint committed by atomic rename; a
   partition that died mid-merge resumes from the last committed state
   instead of re-reading its input (the north_rule's "resumable from
@@ -16,9 +21,11 @@ Plays the role of the reference's ``HDD`` (reference ``HDD.h:8-31``):
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import uuid
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -47,7 +54,16 @@ class RunStore:
         os.makedirs(self.root, exist_ok=True)
 
     # -- spill ---------------------------------------------------------------
-    def write_run(self, table: pa.Table, generation: int = 0) -> RunInfo:
+    def write_run(
+        self, tables: pa.Table | Iterable[pa.Table], generation: int = 0
+    ) -> RunInfo:
+        """Spill one sorted run from a table or a non-empty stream of
+        tables (a merge writes its output as it goes); every table chunk
+        becomes one page."""
+        if isinstance(tables, pa.Table):
+            tables = [tables]
+        it = iter(tables)
+        first = next(it)
         seq = self.next_seq
         self.next_seq += 1
         path = os.path.join(self.root, f"run-{seq:06d}-{uuid.uuid4().hex}.arrow")
@@ -62,13 +78,14 @@ class RunStore:
         # whose disks/bus are the bottleneck flip SPARK_GRAFT_RUN_CODEC.
         codec = os.environ.get("SPARK_GRAFT_RUN_CODEC", "lz4")
         opts = ipc.IpcWriteOptions(compression=codec)
-        with ipc.new_file(tmp, table.schema, options=opts) as w:
-            w.write_table(table)
+        rows = 0
+        with ipc.new_file(tmp, first.schema, options=opts) as w:
+            for t in itertools.chain([first], it):
+                w.write_table(t)
+                rows += t.num_rows
         os.rename(tmp, path)
-        info = RunInfo(
-            path=path, rows=table.num_rows, generation=generation, seq=seq
-        )
-        self.spill_rows += table.num_rows
+        info = RunInfo(path=path, rows=rows, generation=generation, seq=seq)
+        self.spill_rows += rows
         # size-ascending order (HDD.cpp:14-27); ties broken by creation
         # order so merge order (and thus comparison counts) is
         # DETERMINISTIC — a uuid-name tie-break reshuffled equal-size
@@ -77,9 +94,29 @@ class RunStore:
         self.runs.sort(key=lambda r: (r.rows, r.seq))
         return info
 
-    def read_run(self, info: RunInfo) -> pa.Table:
-        with ipc.open_file(pa.memory_map(info.path)) as r:
-            return r.read_all()
+    def read_run(self, info: RunInfo, columns: list[str] | None = None) -> pa.Table:
+        """The whole run, or only ``columns`` of it (the other columns'
+        buffers are never read).  Regular file reads, not a memory map:
+        mapped pages would count in the worker's RSS."""
+        with pa.OSFile(info.path) as f:
+            opts = None
+            if columns is not None:
+                names = ipc.open_file(f).schema.names
+                opts = ipc.IpcReadOptions(
+                    included_fields=[names.index(c) for c in columns]
+                )
+            tbl = ipc.open_file(f, options=opts).read_all()
+        return tbl if columns is None else tbl.select(columns)
+
+    def open_run(self, info: RunInfo) -> "PageCursor":
+        f = pa.OSFile(info.path)
+        try:
+            r = ipc.open_file(f)
+        except BaseException:
+            f.close()
+            raise
+        pages = (r.get_batch(i) for i in range(r.num_record_batches))
+        return PageCursor(r.schema, pages, f.close)
 
     def remove_runs(self, infos: list[RunInfo]):
         for info in infos:
@@ -138,3 +175,42 @@ class RunStore:
         store.runs = runs
         store.next_seq = 1 + max((r.seq for r in runs), default=-1)
         return store, doc
+
+
+class PageCursor:
+    """Sequential reader over one run's pages: ``read(n)`` returns the
+    next ``n`` rows and holds at most one decoded page.  Pages may have
+    any size (a run written as one batch is one page)."""
+
+    def __init__(
+        self,
+        schema: pa.Schema,
+        pages: Iterator[pa.RecordBatch],
+        close: Callable[[], None] | None = None,
+    ):
+        self.schema = schema
+        self._pages = pages
+        self._page: pa.RecordBatch | None = None
+        self._pos = 0
+        self._close = close
+
+    @classmethod
+    def of_table(cls, table: pa.Table) -> "PageCursor":
+        return cls(table.schema, iter(table.to_batches()))
+
+    def read(self, n: int) -> pa.Table:
+        out = []
+        while n > 0:
+            if self._page is None or self._pos == self._page.num_rows:
+                self._page = next(self._pages)
+                self._pos = 0
+            k = min(n, self._page.num_rows - self._pos)
+            out.append(self._page.slice(self._pos, k))
+            self._pos += k
+            n -= k
+        return pa.Table.from_batches(out, self.schema)
+
+    def close(self):
+        self._page = None
+        if self._close is not None:
+            self._close()

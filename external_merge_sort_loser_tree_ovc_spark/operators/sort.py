@@ -20,10 +20,12 @@ keeps the global (key, salt) order contiguous, which downstream
 cell-merge operators re-unify — this is exactly the reference's
 multi-run merge reused at the partition level (SURVEY §7 risk list).
 
-At 100 TB: the kernel only ever holds ``memory_budget_rows`` rows plus
-one Arrow batch in memory per task; everything else is spilled run files,
-so partition sizing is governed by disk, not RAM.  AQE remains enabled as
-a backstop, but the salt is explicit per north_rule.
+At 100 TB: while forming runs the kernel holds at most
+``memory_budget_rows`` rows per task; a merge holds one page
+(``batch_rows`` rows) per input run, one emitted slice, and 8-16 bytes
+of key codes per partition row.  Everything else is spilled run files,
+so partition sizing is governed by disk, not RAM.  AQE remains enabled
+as a backstop, but the salt is explicit per north_rule.
 """
 
 from __future__ import annotations

@@ -308,3 +308,169 @@ def test_exact_mode_subset_keys_sorted(tmp_path):
     # multiset preserved
     assert sorted(out["payload"]) == sorted(frame["payload"])
     assert m.ovc_compares > 0
+
+
+# -- bounded-memory merge: key-only order, payload gathered page by page -------
+
+
+def _arrow_sort(tbl, keys, mem, batch, step=None, **kw):
+    """Sort ``tbl`` with the kernel from ``step``-row input batches; the
+    output tables and the sorter."""
+    import pyarrow as pa
+
+    sorter = ExternalSorter(
+        key_cols=keys,
+        memory_budget_rows=mem,
+        batch_rows=batch,
+        **kw,
+    )
+    step = step or batch
+    batches = (tbl.slice(i, step) for i in range(0, tbl.num_rows, step))
+    return pa.concat_tables(list(sorter.sort_tables(batches))), sorter
+
+
+@pytest.mark.parametrize("checkpoint", [False, True])
+@pytest.mark.parametrize("batch", [500, 1000])  # 1000: W > B, intermediate pass
+def test_merge_memory_bounded_by_pages(tmp_path, batch, checkpoint):
+    """No merge materializes the partition: the Arrow pool peak while the
+    sorted output streams stays under half the input's size (a merge that
+    gathered whole runs held about twice the input)."""
+    import pyarrow as pa
+
+    n = 100_000
+    rng = np.random.default_rng(41)
+    pad = "x" * 110
+    tbl = pa.table({
+        "k": pa.array(rng.permutation(n).astype(np.int64)),
+        "text": pa.array([f"{pad}{i:010d}" for i in range(n)]),
+    })
+    sorter = ExternalSorter(
+        key_cols=["k"], spill_dir=str(tmp_path / "s"), memory_budget_rows=10_000,
+        batch_rows=batch, checkpoint_inputs=checkpoint,
+    )
+    base = pa.total_allocated_bytes()
+    peak, rows, last = 0, 0, -1
+    batches = (tbl.slice(i, 5000) for i in range(0, n, 5000))
+    for out in sorter.sort_tables(batches):
+        peak = max(peak, pa.total_allocated_bytes() - base)
+        k = out.column("k").to_numpy()
+        assert k[0] >= last and (np.diff(k) >= 0).all()
+        last = k[-1]
+        rows += out.num_rows
+        del out
+    assert rows == n
+    assert (sorter.metrics.passes > 2) == (batch == 1000)
+    assert peak < 0.5 * tbl.nbytes, (peak, tbl.nbytes)
+
+
+def _order_path_table(path, n, rng):
+    import decimal
+
+    import pyarrow as pa
+
+    ids = rng.permutation(n).astype(np.int64)
+    if path == "packed":
+        return pa.table({"a": rng.integers(0, 50, n), "id": ids}), ["a", "id"]
+    if path == "matrix":
+        full = np.iinfo(np.int64)
+        return pa.table({
+            "a": rng.integers(full.min, full.max, n, dtype=np.int64),
+            "b": rng.integers(full.min, full.max, n, dtype=np.int64),
+            "id": ids,
+        }), ["a", "b"]
+    if path == "string":
+        words = np.array(["", "alpha", "alphaa", "Beta", "η-eta", "zeta-long-word"])
+        return pa.table({"s": rng.choice(words, n), "id": ids}), ["s", "id"]
+    if path == "decimal":
+        vals = [decimal.Decimal(int(v)).scaleb(-2) for v in ids - n // 2]
+        return pa.table({"d": pa.array(vals, pa.decimal128(12, 2)), "id": ids}), ["d"]
+    # NULL keys only in the first third of the input, so in the first runs
+    k = pa.array(
+        [None if i < n // 3 and i % 3 else int(v) for i, v in enumerate(ids % 97)],
+        pa.int64(),
+    )
+    return pa.table({"k": k, "id": ids}), ["k", "id"]
+
+
+@pytest.mark.parametrize("checkpoint", [False, True])
+@pytest.mark.parametrize("path", ["packed", "matrix", "string", "decimal", "nulls"])
+def test_streamed_gather_order_paths(tmp_path, path, checkpoint):
+    """Every merge-order path (packed codes, full-width key matrix,
+    string ranks, decimal collation fallback, uneven NULLs), through
+    intermediate and final merges with W > B, matches a stable Arrow
+    sort row for row, payload included."""
+    import pyarrow.compute as pc
+
+    rng = np.random.default_rng(sum(map(ord, path)))
+    tbl, keys = _order_path_table(path, 6000, rng)
+    out, sorter = _arrow_sort(
+        tbl, keys, 600, 100, step=350, spill_dir=str(tmp_path / "s"),
+        emit_rows=256, checkpoint_inputs=checkpoint,
+    )
+    m = sorter.metrics
+    assert m.runs_formed > m.fan_in and m.passes > 2
+    want = tbl.take(pc.sort_indices(
+        tbl, sort_keys=[(c, "ascending") for c in keys], null_placement="at_start"
+    ))
+    assert out.equals(want)
+    counted = m.ovc_compares + m.col_compares > 0
+    assert counted == (path in ("packed", "string", "nulls"))
+
+
+def test_resume_from_single_batch_runs(tmp_path):
+    """A checkpoint whose runs are one record batch each (the layout
+    before runs were paged) still replays: page cursors assume no page
+    size."""
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+
+    from external_merge_sort_loser_tree_ovc_spark.kernel.runs import RunStore
+
+    n, mem, batch = 6000, 1000, 100
+    frame = kernel_frame(n, 4, 7, 0, seed=37)
+    s1 = _ck_sorter(tmp_path, frame, mem, batch)
+    out1 = pd.concat(list(s1.sort(_chunks(frame, batch))), ignore_index=True)
+    store, doc = RunStore.load(str(tmp_path / "ck"))
+    assert doc["covers_all"] and len(store.runs) > 1
+    for r in store.runs:
+        with ipc.open_file(pa.OSFile(r.path)) as f:
+            assert f.num_record_batches > 1
+            tbl = f.read_all().combine_chunks()
+        with ipc.new_file(r.path, tbl.schema) as w:
+            w.write_batch(tbl.to_batches()[0])
+        with ipc.open_file(pa.OSFile(r.path)) as f:
+            assert f.num_record_batches == 1
+
+    s2 = _ck_sorter(tmp_path, frame, mem, batch)
+    out2 = pd.concat(list(s2.sort(_chunks(frame, batch))), ignore_index=True)
+    assert s2.metrics.resumed
+    pd.testing.assert_frame_equal(out1, out2)
+    s3 = _ck_sorter(tmp_path, frame, mem, batch, resume_trust=True)
+    out3 = pd.concat(list(s3.sort(iter([]))), ignore_index=True)
+    assert s3.metrics.resumed
+    pd.testing.assert_frame_equal(out1, out3)
+
+
+def test_merge_unifies_run_schemas(tmp_path):
+    """Runs formed from all-NULL pandas chunks carry a null-typed column;
+    every emitted slice still has the promoted schema, even a slice drawn
+    from such runs alone."""
+    import pyarrow as pa
+
+    n = 400
+    rng = np.random.default_rng(1)
+    frame = pd.DataFrame({  # the NULL rows: 6 whole chunks, the smallest keys
+        "k": np.concatenate([rng.permutation(192), 192 + rng.permutation(208)]),
+        "p": [None] * 192 + [f"v{i}" for i in range(208)],
+    })
+    sorter = ExternalSorter(
+        key_cols=["k"], spill_dir=str(tmp_path / "s"), memory_budget_rows=64,
+        batch_rows=32, emit_rows=16,
+    )
+    outs = list(sorter.sort_tables(
+        pa.Table.from_pandas(frame.iloc[i : i + 32], preserve_index=False)
+        for i in range(0, n, 32)
+    ))
+    assert {o.schema.field("p").type for o in outs} == {pa.string()}
+    got = pa.concat_tables(outs).to_pandas()
+    pd.testing.assert_frame_equal(got, frame.sort_values("k", ignore_index=True))

@@ -18,7 +18,7 @@ import pytest
 
 from external_merge_sort_loser_tree_ovc_spark.kernel.external_sort import (
     ExternalSorter,
-    _merge_tables,
+    _merge_order,
 )
 from external_merge_sort_loser_tree_ovc_spark.kernel.keys_arrow import (
     normalize_arrow_column,
@@ -61,7 +61,8 @@ def test_merge_runs_with_uneven_nulls(tmp_path):
 def test_merge_tables_null_flag_width_direct():
     t_null = pa.table({"k": pa.array([None, 1, 2], type=pa.int64())})
     t_clean = pa.table({"k": pa.array([0, 3, 5], type=pa.int64())})
-    merged = _merge_tables([t_null, t_clean], ["k"])
+    idx = _merge_order([t_null, t_clean], ["k"])
+    merged = pa.concat_tables([t_null, t_clean]).take(pa.array(idx))
     assert merged.column("k").to_pylist() == [None, 0, 1, 2, 3, 5]
 
 
