@@ -459,7 +459,7 @@ def main():
 
     if args.flagship_only:
         m = run_flagship_once(CPUS, args.pages, args.input)
-        print(json.dumps({k: v for k, v in m.items() if k != "lineage"}))
+        print(json.dumps(m))
         return
     if args.scaling:
         levels = [int(x) for x in args.scaling.split(",")]

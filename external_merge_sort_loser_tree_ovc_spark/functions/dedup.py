@@ -51,18 +51,6 @@ def _drop_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
 
 # --- exact ------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """One surviving id per distinct text: (text-group, survivor_id,
-    dup_count).  Shuffles a hash of the text, not the text itself."""
-    return (
-        df.groupBy(F.xxhash64(F.col(text_col)).alias("text_hash"))
-        .agg(
-            F.min(id_col).alias("survivor_id"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
-    )
-
-
 def exact_dedup_scale_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Aggregate fingerprint of the SCALE-path exact dedup (group on
     ``xxhash64(text)`` so the shuffle key is 8 bytes, never the text):

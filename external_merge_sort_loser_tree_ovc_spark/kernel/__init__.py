@@ -1,7 +1,7 @@
 from .external_sort import ExternalSorter, SortMetrics
 from .loser_tree import LoserTreeMerge, run_relative_ovc
 from .ovc import compare_ovc, run_ovc_codes, update_loser_ovc
-from .planner import initial_fan_in, merge_depth, plan_merge
+from .planner import initial_fan_in, merge_depth
 from .runs import RunInfo, RunStore
 
 __all__ = [
@@ -14,7 +14,6 @@ __all__ = [
     "update_loser_ovc",
     "initial_fan_in",
     "merge_depth",
-    "plan_merge",
     "RunInfo",
     "RunStore",
 ]

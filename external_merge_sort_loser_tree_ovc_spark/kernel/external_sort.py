@@ -34,7 +34,7 @@ seconds per 250k-row partition).
 
 Instrumentation mirrors the reference's printouts (``Sort.cpp:90-100``,
 ``Sort.cpp:189-191``): W, B, X, merge depth, spill rows, pass count,
-plus comparison counts when the exact loser-tree mode is selected.
+plus comparison counts from whichever merge ran (see ``SortMetrics``).
 """
 
 from __future__ import annotations
@@ -69,8 +69,13 @@ class SortMetrics:
     depth: int = 0                # 1 + ceil(log_B W)
     passes: int = 0
     spill_rows: int = 0
-    ovc_compares: int = 0         # exact mode only
-    col_compares: int = 0         # exact mode only
+    # Comparison counts, by mode.  fast: pairwise merge-path head-to-
+    # head events, over every packed merge, whose packed codes differ
+    # (ovc) or tie (col) -- vmerge.merge2_compare_counts; both stay 0
+    # when the matrix or collation fallback did the merge.  exact: the
+    # loser tree's OVC-resolved (ovc) and column (col) comparisons.
+    ovc_compares: int = 0
+    col_compares: int = 0
     resumed: bool = False
     mode: str = "fast"
     wall_ms: float = 0.0

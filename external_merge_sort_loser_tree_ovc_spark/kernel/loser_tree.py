@@ -110,12 +110,6 @@ class LoserTreeMerge:
                 self._cur_val.append(int(rs.ovc_val[rs.pos]))
                 self._cur_row.append(rs.rows[rs.pos])
 
-    def _head(self, run_idx: int):
-        """(cols, [offset, value]) of a run's current row; fence if OOB."""
-        if 0 <= run_idx < self.num_runs and self._cur_row[run_idx] is not None:
-            return self._cur_row[run_idx], run_idx
-        return None, run_idx
-
     def _advance(self, run_idx: int):
         rs = self._runs[run_idx]
         rs.pos += 1

@@ -1,4 +1,4 @@
-"""Merge planning: fan-in, pass schedule, merge depth.
+"""Merge planning: fan-in, initial fan-in, merge depth.
 
 Reproduces the reference's cost-model formulas exactly (they are part of
 the metrics contract in BASELINE.md):
@@ -9,15 +9,14 @@ the metrics contract in BASELINE.md):
   at full fan-in B — the "1-step to n-step graceful degradation"
   (reference ``Sort.cpp:85``, ``DRAM.cpp:460``),
 - merge depth ``1 + ceil(log_B W)`` (pass 0 = run formation,
-  reference ``Sort.cpp:88``),
-- smallest runs merge first to minimize re-read I/O (reference
-  ``HDD.cpp:14-27``, ``README.md:9``).
+  reference ``Sort.cpp:88``).
+
+``ExternalSorter._merge_all`` runs the schedule these describe.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
 
 
 def initial_fan_in(num_runs: int, fan_in: int) -> int:
@@ -32,59 +31,3 @@ def merge_depth(num_runs: int, fan_in: int) -> int:
     if num_runs <= 1:
         return 1
     return 1 + math.ceil(math.log(num_runs) / math.log(fan_in))
-
-
-@dataclass
-class MergeStep:
-    run_ids: list[int]       # ids of input runs (into the live run list)
-    pass_no: int
-    fan_in: int
-
-
-@dataclass
-class MergePlan:
-    num_runs: int
-    fan_in: int
-    initial_fan_in: int
-    depth: int
-    steps: list[MergeStep] = field(default_factory=list)
-
-
-def plan_merge(run_sizes: list[int], fan_in: int) -> MergePlan:
-    """Static schedule of intermediate merge passes.
-
-    ``run_sizes`` must already be sorted ascending (smallest-first policy).
-    Produces steps until <= ``fan_in`` runs remain; the FINAL merge is not
-    scheduled here — it streams on demand (reference ``Sort.cpp:125-134``).
-    Step 0 merges only ``X`` runs; later steps use full fan-in.
-    """
-    if fan_in < 2:
-        raise ValueError("fan-in must be >= 2")
-    w = len(run_sizes)
-    plan = MergePlan(
-        num_runs=w,
-        fan_in=fan_in,
-        initial_fan_in=initial_fan_in(w, fan_in),
-        depth=merge_depth(max(w, 1), fan_in),
-    )
-    if w <= fan_in:
-        return plan
-    # live run list: (id, size, generation); merged runs get fresh ids.
-    live: list[tuple[int, int, int]] = sorted(
-        ((i, s, 0) for i, s in enumerate(run_sizes)), key=lambda t: (t[1], t[0])
-    )
-    next_id = w
-    first = True
-    while len(live) > fan_in:
-        take = plan.initial_fan_in if first else min(fan_in, len(live))
-        first = False
-        batch, live = live[:take], live[take:]
-        gen = 1 + max(g for _, _, g in batch)
-        plan.steps.append(
-            MergeStep(run_ids=[i for i, _, _ in batch], pass_no=gen, fan_in=take)
-        )
-        # keep the live list sorted by size (HDD.cpp:14-27 insert policy)
-        live.append((next_id, sum(s for _, s, _ in batch), gen))
-        next_id += 1
-        live.sort(key=lambda t: (t[1], t[0]))
-    return plan

@@ -7,7 +7,8 @@ Plays the role of the reference's ``HDD`` (reference ``HDD.h:8-31``):
 - ``spill_rows`` counts every row ever written to the store (reference
   ``HDD.cpp:83-90``),
 - unlike the reference's in-process vectors, runs are real compressed
-  Arrow IPC files on local disk (lz4 default, SPARK_GRAFT_RUN_CODEC) (the executor-local spill path at cluster scale),
+  lz4-compressed Arrow IPC files on local disk (the executor-local
+  spill path at cluster scale),
 - a run file is a sequence of pages: one IPC record batch per table
   chunk the writer hands in (the sorter writes ``batch_rows`` pages), and
   a ``PageCursor`` reads it back one page at a time (the reference's
@@ -72,12 +73,9 @@ class RunStore:
         # lz4 decodes ~5x cheaper and wins when every core is busy
         # (32-way flagship best: lz4 11.2s vs zstd 17.0s sort); zstd
         # writes ~2.3x fewer bytes (5.9 -> 2.5 MB per 30k pages) and
-        # won the bandwidth-starved low-core runs (best 2->8 scaling
-        # 0.698, local[8] 273k pages/s).  Default lz4 (CPU is usually
-        # the binding resource at full executor occupancy); deployments
-        # whose disks/bus are the bottleneck flip SPARK_GRAFT_RUN_CODEC.
-        codec = os.environ.get("SPARK_GRAFT_RUN_CODEC", "lz4")
-        opts = ipc.IpcWriteOptions(compression=codec)
+        # won only the bandwidth-starved low-core runs.  CPU is usually
+        # the binding resource at full executor occupancy, so lz4.
+        opts = ipc.IpcWriteOptions(compression="lz4")
         rows = 0
         with ipc.new_file(tmp, first.schema, options=opts) as w:
             for t in itertools.chain([first], it):

@@ -14,8 +14,11 @@ neighbours so equal keys provably resolve in run order —
 at NumPy/C speed.
 
 Falls back to a stable ``np.lexsort`` over the (n, k) key matrix when
-keys cannot pack into 64 bits, and to pandas ``sort_values`` when a key
-column is a string (prefix codes are not a total order).
+keys cannot pack into 64 bits.  String keys enter as exact dense ranks,
+so they take these integer paths too; only keys that cannot be
+normalized exactly fall back to ``pc.sort_indices`` (in the caller,
+``external_sort._merge_order``).  Only the packed path counts
+comparisons.
 """
 
 from __future__ import annotations

@@ -30,13 +30,12 @@ as a backstop, but the salt is explicit per north_rule.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
-import uuid
 
 import pyarrow.compute as pc
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.external_sort import ExternalSorter
@@ -45,10 +44,24 @@ DEFAULT_BUDGET_ROWS = 1 << 20
 DEFAULT_BATCH_ROWS = 1 << 16
 
 
-def _partition_kernel(
-    key_cols, budget, batch_rows, mode, checkpoint_dir, metrics_dir, checkpoint_inputs
-):
-    """Build the mapInArrow function (must be picklable, import-light)."""
+class _SortMetricsParam(AccumulatorParam):
+    """Accumulator value ``{partition_id: record}``.  Per partition the
+    record of the highest task attempt wins (ties: the later add), so a
+    retried or recomputed task is counted once."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        for pid, rec in value2.items():
+            if pid not in value1 or rec["attempt"] >= value1[pid]["attempt"]:
+                value1[pid] = rec
+        return value1
+
+
+def _partition_kernel(key_cols, budget, batch_rows, mode, checkpoint_dir, metrics):
+    """Build the mapInArrow function (must be picklable, import-light).
+    Each task adds its sorter's metrics to the ``metrics`` accumulator."""
 
     def run(iterator):
         import pyarrow as pa
@@ -73,22 +86,19 @@ def _partition_kernel(
             memory_budget_rows=budget,
             batch_rows=batch_rows,
             mode=mode,
-            checkpoint_inputs=checkpoint_inputs,
+            checkpoint_inputs=checkpoint_dir is not None,
         )
         try:
             tables = (pa.Table.from_batches([b]) for b in iterator)
             for out in sorter.sort_tables(tables):
                 yield from out.to_batches()
+            # only a fully drained sort reports: a consumer that stops
+            # early (limit) leaves partial counts, which are not sent
+            record = sorter.metrics.as_dict()
+            record["partition_id"] = pid
+            record["attempt"] = ctx.attemptNumber() if ctx is not None else 0
+            metrics.add({pid: record})
         finally:
-            if metrics_dir:
-                os.makedirs(metrics_dir, exist_ok=True)
-                doc = sorter.metrics.as_dict()
-                doc["partition_id"] = pid
-                doc["attempt"] = ctx.attemptNumber() if ctx is not None else 0
-                tmp = os.path.join(metrics_dir, f".tmp-{uuid.uuid4().hex}")
-                with open(tmp, "w") as f:
-                    json.dump(doc, f)
-                os.replace(tmp, os.path.join(metrics_dir, f"partition-{pid:05d}.json"))
             if cleanup:
                 shutil.rmtree(spill, ignore_errors=True)
 
@@ -109,8 +119,8 @@ def external_sort_df(
     """Globally sort ``df`` by ``keys`` (ascending, nulls first) using the
     OVC kernel.  Functionally equivalent to ``df.orderBy(*keys)`` — the
     pytest suite asserts exactly that — but executes the sort in our
-    instrumented kernel with spill/merge metrics and optional
-    checkpoint/resume.
+    instrumented kernel with spill/merge metrics (``sort_metrics``) and
+    optional checkpoint/resume.
 
     ``skip_shuffle=True`` sorts within existing partitions only (useful
     after an upstream salted range partition).
@@ -120,19 +130,29 @@ def external_sort_df(
         df = salted_repartition_by_range(
             df, keys, salt_buckets=1, num_partitions=num_partitions, hash_cols=keys
         )
-    metrics_dir = os.path.join(checkpoint_dir, "_metrics") if checkpoint_dir else None
+    metrics = df.sparkSession.sparkContext.accumulator({}, _SortMetricsParam())
     fn = _partition_kernel(
-        keys,
-        memory_budget_rows,
-        batch_rows,
-        mode,
-        checkpoint_dir,
-        metrics_dir,
-        checkpoint_inputs=checkpoint_dir is not None,
+        keys, memory_budget_rows, batch_rows, mode, checkpoint_dir, metrics
     )
     # mapInArrow: the kernel is Arrow-native — skip Spark's
     # arrow<->pandas conversion entirely (strings stay in Arrow buffers)
-    return df.mapInArrow(fn, schema=df.schema)
+    out = df.mapInArrow(fn, schema=df.schema)
+    out._emsort_metrics = metrics  # read through sort_metrics(out)
+    return out
+
+
+def sort_metrics(df: DataFrame) -> list[dict]:
+    """Per-partition lineage and metrics of an ``external_sort_df`` frame
+    — the north_rule's 'per-partition lineage + metrics'.  One record
+    per partition whose sort task ran to completion, ordered by
+    ``partition_id``: rows in/out, runs (W), fan-in (B), X, depth,
+    passes, spill rows, comparison counts, resume flag, task attempt.
+    Records arrive as tasks finish, so read them after an action."""
+    metrics = getattr(df, "_emsort_metrics", None)
+    if metrics is None:
+        raise ValueError("sort_metrics needs a frame returned by external_sort_df")
+    value = metrics.value
+    return [value[pid] for pid in sorted(value)]
 
 
 # key types whose Python values round-trip through F.lit(v).cast(type) and
@@ -262,11 +282,3 @@ def salted_repartition_by_range(
         .drop("_pk", *salt)
     )
 
-
-def read_lineage(spark, checkpoint_dir: str) -> DataFrame:
-    """Per-partition lineage/metrics table for a checkpointed sort run —
-    the north_rule's 'per-partition lineage + metrics'.  One row per
-    partition: rows in/out, runs (W), fan-in (B), X, depth, passes,
-    spill rows, comparison counts, resume flag."""
-    path = os.path.join(checkpoint_dir, "_metrics")
-    return spark.read.json(f"file://{path}/partition-*.json")

@@ -34,7 +34,6 @@ Throughput definitions (unambiguous, reported side by side):
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
@@ -43,7 +42,11 @@ import time
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.sort import external_sort_df, salted_repartition_by_range
+from ..operators.sort import (
+    external_sort_df,
+    salted_repartition_by_range,
+    sort_metrics,
+)
 from ..runtime import default_spill_root
 from ..operators.witness import witness_summary
 from ..spatial.ops import pip_join, with_grid, with_morton, with_tile
@@ -59,8 +62,6 @@ def flagship_pipeline(
     num_partitions: int | None = None,
     salt_buckets: int = 8,
     memory_budget_rows: int | None = None,
-    keep_lineage: bool = False,
-    cache_input: bool = True,
     checkpoint_dir: str | None = None,
 ) -> dict:
     """Run the full pipeline; returns a metrics dict (wall seconds per
@@ -100,14 +101,15 @@ def flagship_pipeline(
     # synthesized/derived plan, recomputing it per pass times the
     # generator, not the engine — persist serialized (rows go to
     # spark.local.dir scratch if memory is short).
-    if cache_input:
-        enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
+    enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
 
     spill_root = default_spill_root()
     # an explicit checkpoint_dir persists across invocations: re-running
     # the job with the same dir replays committed per-partition runs
     # (fingerprint-verified) instead of re-sorting — the north_rule's
-    # resumability.  Without one, a private dir is used and removed.
+    # resumability.  Without one, a private dir is used and removed; it
+    # is still a checkpoint dir, so every row spills (spill_rows ==
+    # n_pages) and the sorted runs cover the whole input.
     own_ckpt = checkpoint_dir is None
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="emsort-flagship-", dir=spill_root)
     os.makedirs(ckpt, exist_ok=True)
@@ -178,32 +180,23 @@ def flagship_pipeline(
 
         # lineage / instrumentation from the kernel's per-partition
         # metrics — including the production-merge comparison counters
-        mdir = os.path.join(ckpt, "_metrics")
-        lineage = []
-        if os.path.isdir(mdir):
-            for f_ in sorted(os.listdir(mdir)):
-                if f_.startswith("partition-"):
-                    with open(os.path.join(mdir, f_)) as fh:
-                        lineage.append(json.load(fh))
-        out["spill_rows"] = sum(m.get("spill_rows", 0) for m in lineage)
-        out["runs_formed"] = sum(m.get("runs_formed", 0) for m in lineage)
-        out["merge_passes_max"] = max((m.get("passes", 0) for m in lineage), default=0)
-        out["partitions_resumed"] = sum(1 for m in lineage if m.get("resumed"))
-        out["ovc_compares"] = sum(m.get("ovc_compares", 0) for m in lineage)
-        out["col_compares"] = sum(m.get("col_compares", 0) for m in lineage)
+        lineage = sort_metrics(sorted_df)
+        out["spill_rows"] = sum(m["spill_rows"] for m in lineage)
+        out["runs_formed"] = sum(m["runs_formed"] for m in lineage)
+        out["merge_passes_max"] = max((m["passes"] for m in lineage), default=0)
+        out["partitions_resumed"] = sum(1 for m in lineage if m["resumed"])
+        out["ovc_compares"] = sum(m["ovc_compares"] for m in lineage)
+        out["col_compares"] = sum(m["col_compares"] for m in lineage)
         out["merge_comparisons_per_sec"] = (
             (out["ovc_compares"] + out["col_compares"]) / out["s_sort"]
             if out["s_sort"] > 0
             else 0.0
         )
-        if keep_lineage:
-            out["lineage"] = lineage
         sorted_df.unpersist()
     finally:
         if own_ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
-        if cache_input:
-            enc.unpersist()
+        enc.unpersist()
 
     total = time.perf_counter() - t0
     out["total_sec"] = total

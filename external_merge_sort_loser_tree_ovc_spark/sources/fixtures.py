@@ -13,8 +13,6 @@ B) ``pages`` synthesizes the Common-Crawl-style web-page table from
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 
@@ -149,13 +147,3 @@ def pages_frame(n: int, seed: int = 42, scenario: str = "geo_uniform") -> pd.Dat
     if scenario == "geo_sorted" and n:
         df = df.sort_values(["lat", "lon"], ignore_index=True)
     return df
-
-
-def text_sha(df: pd.DataFrame) -> str:
-    """Order-independent digest of (url, text) — the byte-identical
-    text-per-url invariant from input_hint."""
-    h = 0
-    for u, t in zip(df["url"], df["text"]):
-        d = hashlib.sha256((str(u) + "\x00" + str(t)).encode()).digest()
-        h ^= int.from_bytes(d[:8], "big")
-    return f"{h:016x}"

@@ -100,11 +100,6 @@ class Polygon:
         return "((" + " + ".join(terms) + ") % 2 = 1)"
 
 
-def pip_flags(polygons: list[Polygon], lon, lat) -> dict[int, np.ndarray]:
-    """poly_id -> bool mask over the given points (refinement kernel)."""
-    return {p.poly_id: p.contains(lon, lat) for p in polygons}
-
-
 def default_polygons() -> list[Polygon]:
     """Deterministic small polygon set used by tests/queries: a triangle,
     a convex pentagon, and a non-convex 'arrow' — covering convex,

@@ -58,7 +58,7 @@ def main(argv=None):
         salt_buckets=args.salt_buckets,
         checkpoint_dir=args.checkpoint,
     )
-    doc = json.dumps({k: v for k, v in metrics.items() if k != "lineage"})
+    doc = json.dumps(metrics)
     print(doc)
     if args.json_out:
         with open(args.json_out, "w") as f:

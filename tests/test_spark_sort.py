@@ -10,9 +10,10 @@ from pyspark.sql import functions as F
 from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
     _identity_shuffle_keys,
     _murmur3_long,
+    _SortMetricsParam,
     external_sort_df,
-    read_lineage,
     salted_repartition_by_range,
+    sort_metrics,
 )
 from external_merge_sort_loser_tree_ovc_spark.operators.witness import (
     assert_globally_sorted,
@@ -79,8 +80,11 @@ def test_int_parity_matches_reference_formula(spark):
     assert int_parity(df, ["a", "b"]) == (1 ^ 3 ^ 5) ^ ((2 ^ 4 ^ 6) << 1)
 
 
-def test_lineage_metrics(spark, lineitem, tmp_path):
-    ck = str(tmp_path / "ck")
+@pytest.mark.parametrize("checkpointed", [True, False], ids=["checkpoint_dir", "none"])
+def test_lineage_metrics(spark, lineitem, tmp_path, checkpointed):
+    """Every sort reports per-partition metrics through its accumulator,
+    checkpointed or not; nothing is written beside the checkpoint."""
+    ck = str(tmp_path / "ck") if checkpointed else None
     out = external_sort_df(
         lineitem,
         KEYS,
@@ -91,11 +95,12 @@ def test_lineage_metrics(spark, lineitem, tmp_path):
     )
     n = out.count()
     assert n == lineitem.count()
-    lin = read_lineage(spark, ck).toPandas()
+    lin = sort_metrics(out)
     assert len(lin) == 2
-    assert lin.rows_in.sum() == n
-    assert (lin.runs_formed >= 1).all()
-    assert set(lin.columns) >= {
+    assert sum(m["rows_in"] for m in lin) == n
+    assert all(m["runs_formed"] >= 1 for m in lin)
+    assert [m["partition_id"] for m in lin] == [0, 1]
+    assert set(lin[0]) >= {
         "rows_in",
         "runs_formed",
         "fan_in",
@@ -105,6 +110,22 @@ def test_lineage_metrics(spark, lineitem, tmp_path):
         "spill_rows",
         "partition_id",
     }
+    if checkpointed:
+        assert not os.path.exists(os.path.join(ck, "_metrics"))
+    with pytest.raises(ValueError):
+        sort_metrics(lineitem)
+
+
+@pytest.mark.parametrize("order", [(0, 1), (1, 0)], ids=["retry_last", "retry_first"])
+def test_sort_metrics_keep_latest_attempt(order):
+    """A retried task's record replaces the failed attempt's, in either
+    arrival order, so a partition is counted once."""
+    param = _SortMetricsParam()
+    recs = {a: {0: {"partition_id": 0, "attempt": a, "rows_in": 10 + a}} for a in (0, 1)}
+    acc = param.zero({})
+    for a in order:
+        acc = param.addInPlace(acc, recs[a])
+    assert acc == recs[1]
 
 
 def test_salted_repartition_splits_hot_key(spark):
@@ -126,33 +147,27 @@ def test_job_level_resume(spark, lineitem, tmp_path):
     instead of re-sorting.  Deterministic hash partitioning stands in
     for a task retry with identical input; the sort's own range shuffle
     must be just as reproducible."""
-    from pyspark.sql import functions as F
-
-    from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
-        external_sort_df,
-        read_lineage,
-    )
-
     ckpt = str(tmp_path / "resume-ckpt")
     df = lineitem.repartition(4, F.col("l_orderkey"))
     keys = ["l_returnflag", "l_linestatus", "l_orderkey", "l_linenumber"]
 
     out1 = external_sort_df(df, keys, checkpoint_dir=ckpt, skip_shuffle=True)
     n1 = out1.count()
-    lin1 = read_lineage(spark, ckpt).toPandas()
-    assert not lin1.resumed.any()
+    resumed1 = [m["resumed"] for m in sort_metrics(out1)]
+    assert not any(resumed1)
 
     out2 = external_sort_df(df, keys, checkpoint_dir=ckpt, skip_shuffle=True)
     n2 = out2.count()
-    lin2 = read_lineage(spark, ckpt).toPandas()
+    resumed2 = [m["resumed"] for m in sort_metrics(out2)]
     assert n1 == n2 == lineitem.count()
-    assert lin2.resumed.all(), f"expected all partitions resumed: {lin2.resumed.tolist()}"
+    assert all(resumed2), f"expected all partitions resumed: {resumed2}"
 
     ck = str(tmp_path / "resume-shuffle")
     for _ in range(2):
-        external_sort_df(lineitem, keys, num_partitions=4, checkpoint_dir=ck).count()
-    lin = read_lineage(spark, ck).toPandas()
-    assert lin.resumed.all(), f"expected all partitions resumed: {lin.resumed.tolist()}"
+        out = external_sort_df(lineitem, keys, num_partitions=4, checkpoint_dir=ck)
+        out.count()
+    resumed = [m["resumed"] for m in sort_metrics(out)]
+    assert all(resumed), f"expected all partitions resumed: {resumed}"
 
 
 def test_salted_repartition_nulls_first_partition(spark):
