@@ -6,13 +6,14 @@ with a Tree-of-Losers priority queue and offset-value-coding key
 comparisons), re-expressed Spark-first:
 
 - the sort/merge core is a vectorized Arrow/pandas kernel that runs
-  per-partition inside ``mapInPandas`` (``kernel/``),
+  per-partition inside ``mapInArrow`` (``kernel/``),
 - everything around it (scan, filter, joins, aggregation, dedup,
   similarity, text analysis) is plain DataFrame / Spark SQL so Catalyst
   and Tungsten do the heavy lifting (``operators/``, ``spatial/``),
 - spatial indexing (cell encoding, point-in-polygon, kNN via cell-ring
-  expansion, raster-tile assignment) is pure NumPy inside pandas UDFs —
-  no per-row Python (``spatial/``).
+  expansion, raster-tile assignment) is built from Spark column
+  expressions that run in the JVM — no Python worker stage
+  (``spatial/``).
 
 Reference parity is documented per-module with ``file:line`` citations
 into the reference repo; nothing is translated line-by-line.

@@ -6,8 +6,9 @@ Design rules (SURVEY §4.3):
   whole scan+encode stage is JVM-side; zero Python in the hot path);
 - the polygon cover set is tiny -> ``F.broadcast`` join, the page side
   never shuffles;
-- exact point-in-polygon refinement is the only Python stage and runs
-  vectorized (NumPy ray cast over Arrow batches via mapInPandas).
+- exact point-in-polygon refinement is one Catalyst expression per
+  polygon (the even-odd ray cast unrolled over its edges), so the PIP
+  join, like the encode, runs no Python worker stage.
 """
 
 from __future__ import annotations
@@ -16,8 +17,8 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .pip import Polygon
 
@@ -90,6 +91,25 @@ def polygon_cover_df(spark, polygons: Iterable[Polygon], res: int) -> DataFrame:
     )
 
 
+def _ray_cast(poly: Polygon, lon: Column, lat: Column) -> Column:
+    """``Polygon.contains`` as one boolean Column: the XOR-fold of its
+    per-edge crossing terms, with double literals and the same operation
+    order, so the result is bit-identical under IEEE arithmetic.
+    Horizontal edges never cross and are left out, so no term divides by
+    zero (ANSI mode raises on that)."""
+    inside = F.lit(False)
+    j = len(poly.vx) - 1
+    for i in range(len(poly.vx)):
+        xi, yi = float(poly.vx[i]), float(poly.vy[i])
+        xj, yj = float(poly.vx[j]), float(poly.vy[j])
+        if yi != yj:
+            cross = (F.lit(yi) > lat) != (F.lit(yj) > lat)
+            xint = F.lit(xj - xi) * (lat - F.lit(yi)) / F.lit(yj - yi) + F.lit(xi)
+            inside = inside != (cross & (lon < xint))
+        j = i
+    return inside
+
+
 def pip_join(
     pages: DataFrame,
     polygons: list[Polygon],
@@ -102,45 +122,23 @@ def pip_join(
     """Pages inside any polygon -> one row per (page, poly_id).
 
     Plan: encode cell (codegen) -> broadcast-join tiny cover set
-    (candidates only; big side does NOT shuffle) -> vectorized ray-cast
-    refine (mapInPandas) -> filter hits.
+    (candidates only; big side does NOT shuffle) -> filter on the exact
+    even-odd test, picked per candidate by ``poly_id`` through one
+    ``F.when`` chain (codegen; no Python worker).  Raises ``ValueError``
+    unless the polygons carry distinct ``poly_id``s.
     """
-    spark = pages.sparkSession
+    ids = [p.poly_id for p in polygons]
+    if not ids or len(set(ids)) < len(ids):
+        raise ValueError(f"pip_join needs polygons with distinct poly_ids, got {ids}")
     keep_cols = keep_cols or pages.columns
     enc = with_grid(pages, lat_col, lon_col, res)
-    cover = polygon_cover_df(spark, polygons, res)
+    cover = polygon_cover_df(pages.sparkSession, polygons, res)
     cand = enc.join(F.broadcast(cover), "cell")
-
-    out_fields = [cand.schema[c] for c in keep_cols] + [
-        StructField("poly_id", LongType()),
-        StructField("inside", BooleanType()),
-    ]
-    out_schema = StructType(out_fields)
-    polys = {p.poly_id: (p.vx.tolist(), p.vy.tolist()) for p in polygons}
-    cols = list(keep_cols)
-
-    def refine(it):
-        pmap = {
-            pid: Polygon(pid, list(zip(vx, vy))) for pid, (vx, vy) in polys.items()
-        }
-        for pdf in it:
-            if pdf.empty:
-                continue
-            res_parts = []
-            for pid, grp in pdf.groupby("poly_id", sort=False):
-                mask = pmap[int(pid)].contains(
-                    grp[lon_col].to_numpy(), grp[lat_col].to_numpy()
-                )
-                sub = grp[cols].copy()
-                sub["poly_id"] = np.int64(pid)
-                sub["inside"] = mask
-                res_parts.append(sub)
-            yield pd.concat(res_parts, ignore_index=True)
-
-    # lat/lon must reach the refine kernel even when not in keep_cols
-    sel = list(dict.fromkeys(cols + [lat_col, lon_col, "poly_id"]))
-    refined = cand.select(*sel).mapInPandas(refine, schema=out_schema)
-    return refined.filter(F.col("inside")).drop("inside")
+    lon, lat = F.col(lon_col).cast("double"), F.col(lat_col).cast("double")
+    inside = F  # F.when starts the chain, Column.when extends it
+    for p in polygons:
+        inside = inside.when(F.col("poly_id") == p.poly_id, _ray_cast(p, lon, lat))
+    return cand.filter(inside).select(*keep_cols, "poly_id")
 
 
 # --- raster tiles -----------------------------------------------------------

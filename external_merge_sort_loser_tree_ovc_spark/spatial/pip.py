@@ -1,4 +1,4 @@
-"""Point-in-polygon join (vectorized ray casting + cell-cover prefilter).
+"""Point-in-polygon join (even-odd ray casting + cell-cover prefilter).
 
 The reference engine has no joins (SURVEY.md §2.2); this is the spatial
 join capability the north_star mandates, built the Spark-first way:
@@ -7,16 +7,18 @@ join capability the north_star mandates, built the Spark-first way:
      touches at resolution ``res`` (driver-side, polygons are small);
   2. *prefilter join*: pages carry their cell id; a **broadcast** join
      pages ⋈ cover(cells) yields candidates — no shuffle of the big side;
-  3. *refine*: exact even-odd ray casting, vectorized over all
-     (candidate point, polygon edge) pairs in NumPy inside mapInPandas.
+  3. *refine*: exact even-odd ray casting as one Catalyst expression
+     per polygon (``spatial/ops.py``), unrolled over its edges and
+     compiled with the join by WholeStageCodegen — no Python worker.
 
 At 100 TB the page side never shuffles: the cover set is tiny (cells ×
-polygons) and broadcast; refinement is embarrassingly parallel per input
-partition.  For huge polygon sets, swap step 2 for the OVC sort-merge on
-cell keys (operators/sort.py) — same cover representation.
+polygons) and broadcast; refinement is a per-row predicate on the join.
+For huge polygon sets, swap step 2 for the OVC sort-merge on cell keys
+(operators/sort.py) — same cover representation.
 
-``sql_pip_expr`` emits the *identical* even-odd test as ANSI SQL (one
-CASE term per edge) so DuckDB oracles verify the join row-for-row.
+``Polygon.contains`` (NumPy) and ``sql_pip_expr`` (ANSI SQL, one CASE
+term per edge) state the *identical* even-odd test, so NumPy and DuckDB
+oracles verify the join row-for-row.
 
 Boundary convention: strictly-inside per the even-odd rule with
 half-open edges ([min(y), max(y)) vertical span, strict x crossing) —
@@ -66,7 +68,8 @@ class Polygon:
         return cell_id(gx.ravel(), gy.ravel(), res)
 
     def contains(self, lon, lat) -> np.ndarray:
-        """Vectorized even-odd ray cast; returns bool array."""
+        """Vectorized even-odd ray cast; returns bool array.  The NumPy
+        oracle the Spark join is checked against."""
         lon = np.asarray(lon, dtype=np.float64)
         lat = np.asarray(lat, dtype=np.float64)
         n = len(self.vx)

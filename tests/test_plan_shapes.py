@@ -40,11 +40,25 @@ def test_pip_join_broadcasts_cover(spark):
     from external_merge_sort_loser_tree_ovc_spark.spatial.ops import pip_join
     from external_merge_sort_loser_tree_ovc_spark.spatial.pip import default_polygons
 
-    plan = plan_of(pip_join(pages, default_polygons(), res=6, keep_cols=["url"]))
+    hits = pip_join(pages, default_polygons(), res=6, keep_cols=["url"])
+    plan = plan_of(hits)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     # the big (pages) side must not be exchanged before the join
     before_join = plan.split("BroadcastHashJoin")[0]
     assert "Exchange hashpartitioning" not in before_join
+    # the exact refine is a JVM expression: no Python node anywhere
+    for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+    # whichever operator evaluates it (its Filter, or the join condition
+    # the optimizer pushes it into) is compiled by WholeStageCodegen;
+    # codegen ids show once AQE has finalized the plan
+    hits.collect()
+    refine = [
+        sec.splitlines()[0]
+        for sec in plan_of(hits).split("\n\n")
+        if "CASE WHEN (poly_id" in sec
+    ]
+    assert any("codegen id" in head for head in refine), refine
 
 
 def test_cell_encode_no_shuffle_codegen(spark):

@@ -111,10 +111,15 @@ def test_pip_numpy_vs_sql_and_bbox():
         assert 0 < mask.sum() < len(mask)
 
 
-def test_pip_known_points():
+def test_pip_known_points(spark):
+    from external_merge_sort_loser_tree_ovc_spark.spatial.ops import pip_join
+
     tri = Polygon(9, [(0.0, 0.0), (10.0, 0.0), (0.0, 10.0)])
-    inside = tri.contains(np.array([1.0, 9.0, 5.01]), np.array([1.0, 0.5, 5.1]))
-    assert inside.tolist() == [True, True, False]
+    pts = spark.createDataFrame(
+        pd.DataFrame({"id": [0, 1, 2], "lon": [1.0, 9.0, 5.01], "lat": [1.0, 0.5, 5.1]})
+    )
+    got = pip_join(pts, [tri], res=6, keep_cols=["id"]).collect()
+    assert sorted((r["id"], r["poly_id"]) for r in got) == [(0, 9), (1, 9)]
 
 
 def test_cover_cells_superset():
@@ -181,6 +186,65 @@ def test_pip_join_matches_bruteforce(spark, pages):
     assert len(got) == len(expect) > 0
     assert (got["url"].to_numpy() == expect["url"].to_numpy()).all()
     assert (got["poly_id"].to_numpy() == expect["poly_id"].to_numpy()).all()
+
+
+def _edge_case_points(polys: list[Polygon]) -> pd.DataFrame:
+    """Points where the even-odd test is decided by one comparison:
+    every vertex latitude (and one ulp either side), points along each
+    horizontal edge, and points exactly on each edge's computed crossing
+    ``xint`` at those latitudes (and one ulp either side)."""
+    lon, lat = [], []
+    for p in polys:
+        ys = np.unique(p.vy)
+        probe = np.concatenate(
+            [ys, np.nextafter(ys, -np.inf), np.nextafter(ys, np.inf), (ys[1:] + ys[:-1]) / 2]
+        )
+        j = len(p.vx) - 1
+        for i in range(len(p.vx)):
+            xi, yi, xj, yj = p.vx[i], p.vy[i], p.vx[j], p.vy[j]
+            if yi == yj:
+                on = np.linspace(min(xi, xj), max(xi, xj), 7)
+                for y in (np.nextafter(yi, -np.inf), yi, np.nextafter(yi, np.inf)):
+                    lon += on.tolist()
+                    lat += [y] * len(on)
+            else:
+                ylo, yhi = min(yi, yj), max(yi, yj)
+                for y in probe[(probe >= ylo) & (probe <= yhi)]:
+                    xint = (xj - xi) * (y - yi) / (yj - yi) + xi
+                    for x in (np.nextafter(xint, -np.inf), xint, np.nextafter(xint, np.inf)):
+                        lon.append(x)
+                        lat.append(y)
+            j = i
+    return pd.DataFrame({"id": np.arange(len(lon)), "lon": lon, "lat": lat})
+
+
+def test_pip_join_exact_at_edge_cases(spark):
+    """Spark's expression refine equals the NumPy ray cast row for row
+    where one ulp flips the answer, under the session's default ANSI
+    mode (a horizontal edge must not divide by zero)."""
+    from external_merge_sort_loser_tree_ovc_spark.spatial.ops import pip_join
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    polys = default_polygons()
+    pdf = _edge_case_points(polys)
+    got = pip_join(spark.createDataFrame(pdf), polys, res=6, keep_cols=["id"]).collect()
+    expect = [
+        (int(i), p.poly_id)
+        for p in polys
+        for i in pdf["id"][p.contains(pdf["lon"].to_numpy(), pdf["lat"].to_numpy())]
+    ]
+    assert 0 < len(expect) < len(pdf)
+    assert sorted((r["id"], r["poly_id"]) for r in got) == sorted(expect)
+
+
+def test_pip_join_rejects_duplicate_poly_ids(pages):
+    """Two polygons sharing a poly_id cannot be told apart by the refine;
+    pip_join refuses them instead of dropping one polygon's points."""
+    from external_merge_sort_loser_tree_ovc_spark.spatial.ops import pip_join
+
+    a, b = default_polygons()[:2]
+    with pytest.raises(ValueError, match="distinct poly_ids"):
+        pip_join(pages, [a, Polygon(a.poly_id, list(zip(b.vx, b.vy)))], res=6)
 
 
 def test_knn_matches_bruteforce(spark):
