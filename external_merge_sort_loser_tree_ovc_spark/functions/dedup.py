@@ -178,37 +178,6 @@ WHERE a.{id_col} < b.{id_col}
 """
 
 
-# --- simhash -------------------------------------------------------------------
-
-def simhash_pairs(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Pairs whose 16-bit simhash is identical (hamming-0 collisions on
-    the feature-extraction simhash).  Small-scale / diagnostic only: 16
-    bits = 65,536 buckets, a quadratic trap on big corpora — use
-    ``simhash_hamming_pairs`` (wide banded, hamming<=k) at scale."""
-    from .textops import with_text_features
-
-    sh = with_text_features(df.select(id_col, text_col), text_col).select(
-        F.col(id_col), F.col("simhash16").alias("sh")
-    )
-    a = sh.select(F.col(id_col).alias("id_a"), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh")
-    return (
-        a.join(b, "sh").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    )
-
-
-def simhash_pairs_oracle_sql(table: str, id_col: str, text_col: str = "text") -> str:
-    d = _DUCK
-    wh = T.whash_arr(d, text_col)
-    return f"""
-WITH sh AS (
-  SELECT {id_col}, CAST({T.simhash_sql(d, wh)} AS BIGINT) AS sh FROM {table}
-)
-SELECT a.{id_col} AS id_a, b.{id_col} AS id_b
-FROM sh a JOIN sh b ON a.sh = b.sh AND a.{id_col} < b.{id_col}
-"""
-
-
 # --- banded wide simhash (hamming <= K, the scale path) -----------------------
 
 def simhash_band_table(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:

@@ -665,44 +665,6 @@ FROM {table}
 """
 
 
-def frame_sample(
-    df: DataFrame, bin_col: str, id_col: str, *, every_n: int = 10, allow_fake: bool = False
-) -> DataFrame:
-    """COMPRESSED-video frame-sampling stub: emits one row per sampled
-    'frame' (deterministic count = n_bytes // (64 * every_n) + 1).
-    Real impl: ffmpeg seek + decode every_n-th frame.  For RAW video
-    the REAL, oracle-gated path is ``sample_y4m_media`` below — this
-    stub remains only for codec formats that need ffmpeg."""
-    if not allow_fake:
-        raise NotImplementedError("no video decoder in this container")
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_no", IntegerType()),
-            StructField("frame_bytes", LongType()),
-        ]
-    )
-
-    def run(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            n = pdf[bin_col].str.len().to_numpy(dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            counts = n // (64 * every_n) + 1
-            rep = np.repeat(np.arange(len(ids)), counts)
-            frame_no = np.concatenate([np.arange(c) for c in counts])
-            yield pd.DataFrame(
-                {
-                    "media_id": ids[rep],
-                    "frame_no": frame_no.astype(np.int32),
-                    "frame_bytes": (n[rep] - frame_no * 64).clip(min=1),
-                }
-            )
-
-    return rebalance_scan(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=schema)
-
-
 # --- REAL decode path: YUV4MPEG2 (y4m) raw video + frame sampling --------------
 #
 # YUV4MPEG2 is a real, public, uncompressed video container (header

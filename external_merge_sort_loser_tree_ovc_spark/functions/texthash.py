@@ -256,17 +256,3 @@ def lsh_band_sql(sig_cols: list[str], band: int) -> str:
     for s in sig_cols[BAND_R * band + 1 : BAND_R * (band + 1)]:
         acc = f"((({acc}) * 1000003 + {s}) % {P})"
     return f"CAST({acc} AS BIGINT)"
-
-
-# --- NumPy twin (used by kernel-side paths + property tests) ---------------
-
-def whash_np(words) -> "np.ndarray":
-    import numpy as np
-
-    out = np.zeros(len(words), dtype=np.int64)
-    for k, w in enumerate(words):  # test-only helper; engine path is SQL
-        h = 0
-        for i, ch in enumerate(w[:8]):
-            h += ord(ch) * 31**i
-        out[k] = h % P
-    return out

@@ -212,12 +212,6 @@ def extract_text_sql(d: T.Dialect, html_col: str) -> str:
     return f"trim({x})"
 
 
-def extract_text(df: DataFrame, html_col: str = "html", out_col: str = "text_extracted") -> DataFrame:
-    """Append ``out_col`` with the plain text extracted from the binary
-    html column (vectorized built-ins; see extract_text_sql)."""
-    return df.withColumn(out_col, F.expr(extract_text_sql(_SPARK, html_col)))
-
-
 def minhash_sigs(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """(id, s0..s{J-1}) minhash signatures over 3-word shingles, with the
     shingle + permutation arithmetic of :func:`minhash_oracle_select`

@@ -53,10 +53,16 @@ import pyarrow.compute as pc
 
 from . import keys as K
 from . import vmerge
-from .keys_arrow import key_matrix_table, row_fingerprint_table
+from .keys_arrow import key_matrix_table
 from .loser_tree import LoserTreeMerge
 from .planner import initial_fan_in, merge_depth
 from .runs import PageCursor, RunStore
+
+# The hidden column ``external_sort_df`` appends to a checkpointed sort's
+# input: one xxhash64 per row, computed by Spark.  The kernel folds it
+# into the input fingerprint and drops it before run formation.
+ROW_HASH_COL = "_emsort_row_hash"
+_U64 = (1 << 64) - 1
 
 
 @dataclass
@@ -192,20 +198,20 @@ class ExternalSorter:
     # in memory (the reference's graceful-degradation spill minimum,
     # DRAM.cpp:75-134).
     checkpoint_inputs: bool = False
-    # Resume protocol.  A committed manifest records an order-independent
-    # fingerprint of the input (row count + xor-folded row hashes).  On a
-    # rerun, input is consumed and fingerprinted again (run formation
-    # into a staging dir); if the fingerprint matches, the staged runs
-    # are discarded and the committed runs replay — merge passes are
-    # skipped; if it differs (e.g. nondeterministic upstream
-    # partitioning re-dealt the rows), the stale checkpoint is discarded
-    # and the staged runs proceed as a fresh sort.  ``resume_trust=True``
-    # skips re-reading input entirely — only safe when the caller
-    # guarantees identical partition input (e.g. deterministic
-    # partitioning, or replaying a job with no upstream available).
-    resume_trust: bool = False
+    # Resume protocol (checkpoint_inputs only).  The input fingerprint is
+    # (rows, XOR, wrapping uint64 sum) over the ROW_HASH_COL values; the
+    # sum keeps rows that occur an even number of times from cancelling
+    # out of the XOR.  A committed manifest records it.  A rerun forms
+    # runs in a staging dir while folding its own fingerprint: if the two
+    # are equal, the staged runs are discarded and the committed runs
+    # replay (merge passes skipped); otherwise (e.g. nondeterministic
+    # upstream partitioning re-dealt the rows) the stale checkpoint is
+    # discarded and the staged runs proceed as a fresh sort.  Input
+    # without the column records no fingerprint, and a manifest without
+    # one never replays.  Without checkpoint_inputs no manifest is read
+    # or written: the spill dir belongs to one sort.
     metrics: SortMetrics = field(default_factory=SortMetrics)
-    _fingerprint: int = 0
+    _fingerprint: tuple[int, int, int] | None = None
     # production-path comparison counters ({"ovc", "col"}), accumulated
     # by every packed vectorized merge (vmerge.merge2_compare_counts)
     _cmp: dict = field(default_factory=dict)
@@ -225,64 +231,36 @@ class ExternalSorter:
         t0 = time.perf_counter()
         self.metrics.mode = self.mode
 
-        committed = RunStore.load(self.spill_dir)
-        candidate = None
-        if (
-            committed is not None
-            and committed[1].get("state") in ("runs_formed", "done")
-            and committed[1].get("covers_all", False)
-            and committed[0].runs
-        ):
-            candidate = committed
-
-        if candidate is not None and self.resume_trust:
-            store = candidate[0]
-            self.metrics.resumed = True
-            self.metrics.rows_in = candidate[1].get(
-                "rows_in", sum(r.rows for r in store.runs)
-            )
-            self._fingerprint = int(candidate[1].get("fingerprint", "0"), 16)
-            yield from self._merge_all(store, None)
-            self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
-            return
-
-        if candidate is not None:
-            # verified resume: form runs in a staging dir while
-            # fingerprinting the input, then decide replay vs recompute.
-            staging = RunStore(
+        self._fingerprint = (0, 0, 0) if self.checkpoint_inputs else None
+        committed = RunStore.load(self.spill_dir) if self.checkpoint_inputs else None
+        if committed is not None and not committed[0].runs:
+            committed = None  # an empty partition: nothing to replay
+        if committed is None:
+            store = RunStore(self.spill_dir)
+        else:
+            # form runs in a staging dir while fingerprinting the input,
+            # then decide replay vs recompute
+            store = RunStore(
                 os.path.join(self.spill_dir, f"staging-{uuid.uuid4().hex}"),
                 manifest_dir=self.spill_dir,
             )
-            tail = yield from self._form_runs(batches, staging)
-            if tail is _INLINE_DONE:
-                # inline fast path already emitted (fresh, no spill);
-                # invalidate the stale checkpoint so nobody replays it.
-                self._invalidate(candidate[0])
-                shutil.rmtree(staging.root, ignore_errors=True)
-                self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
-                return
-            if (
-                self.metrics.rows_in == candidate[1].get("rows_in")
-                and f"{self._fingerprint:016x}" == candidate[1].get("fingerprint")
-            ):
-                # identical input: replay committed runs, drop staging
-                shutil.rmtree(staging.root, ignore_errors=True)
-                store = candidate[0]
-                self.metrics.resumed = True
-                tail = None
-            else:
-                self._invalidate(candidate[0])
-                store = staging
-                tail = self._spill_tail(store, tail)
-                store.commit("runs_formed", self._commit_extra(tail))
+        tail = yield from self._form_runs(batches, store)
+        if tail is _INLINE_DONE:
+            self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
+            return
+        fingerprint = self._fingerprint_hex()
+        if committed is not None and fingerprint is not None and (
+            fingerprint == committed[1].get("fingerprint")
+        ):
+            # identical input: replay committed runs, drop staging
+            shutil.rmtree(store.root, ignore_errors=True)
+            store, tail = committed[0], None
+            self.metrics.resumed = True
         else:
-            store = RunStore(self.spill_dir)
-            tail = yield from self._form_runs(batches, store)
-            if tail is _INLINE_DONE:
-                self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
-                return
+            if committed is not None:
+                self._invalidate(committed[0])
             tail = self._spill_tail(store, tail)
-            store.commit("runs_formed", self._commit_extra(tail))
+            self._commit(store, "runs_formed")
 
         yield from self._merge_all(store, tail)
         self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
@@ -313,12 +291,31 @@ class ExternalSorter:
             return None
         return tail
 
-    def _commit_extra(self, tail) -> dict:
-        return {
-            "rows_in": self.metrics.rows_in,
-            "covers_all": tail is None,
-            "fingerprint": f"{self._fingerprint:016x}",
-        }
+    def _fingerprint_hex(self) -> str | None:
+        if self._fingerprint is None:
+            return None
+        rows, xor, total = self._fingerprint
+        return f"{rows}:{xor:016x}:{total:016x}"
+
+    def _commit(self, store: RunStore, state: str, **extra):
+        if self.checkpoint_inputs:
+            store.commit(state, {"fingerprint": self._fingerprint_hex(), **extra})
+
+    def _without_row_hash(self, b: pa.Table) -> pa.Table:
+        """``b`` without ROW_HASH_COL, folded into the fingerprint first."""
+        i = b.schema.get_field_index(ROW_HASH_COL)
+        if i < 0:
+            self._fingerprint = None
+            return b
+        if self._fingerprint is not None:
+            h = b.column(i).to_numpy().view(np.uint64)
+            rows, xor, total = self._fingerprint
+            self._fingerprint = (
+                rows + len(h),
+                xor ^ int(np.bitwise_xor.reduce(h)),
+                (total + int(h.sum(dtype=np.uint64))) & _U64,
+            )
+        return b.remove_column(i)
 
     def _invalidate(self, store: RunStore):
         try:
@@ -338,16 +335,10 @@ class ExternalSorter:
         budget = max(self.batch_rows, self.memory_budget_rows - self.batch_rows)
         spilled_any = False
         for b in batches:
+            b = self._without_row_hash(b)
             if b.num_rows == 0:
                 continue
             self.metrics.rows_in += b.num_rows
-            # checkpoint/resume validation needs a FULL content
-            # fingerprint (a prefix+length hash would replay a stale
-            # checkpoint over input that changed past byte 8); ephemeral
-            # spill dirs never resume, so they keep the cheap one
-            self._fingerprint ^= row_fingerprint_table(
-                b, full=self.checkpoint_inputs
-            )
             buf.append(b)
             buf_rows += b.num_rows
             if buf_rows >= budget:
@@ -413,7 +404,7 @@ class ExternalSorter:
             ):
                 self._run_cache = None
             store.remove_runs(batch)
-            store.commit("runs_formed", self._commit_extra(tail_tbl))
+            self._commit(store, "runs_formed")
         # passes executed: formation + intermediate generations + final merge
         m.passes = 1 + max_gen + (1 if w > 1 else 0)
         m.spill_rows = store.spill_rows
@@ -435,7 +426,7 @@ class ExternalSorter:
             # (exact tree paths overwrite with reference-faithful counts)
             m.ovc_compares = self._cmp.get("ovc", 0)
             m.col_compares = self._cmp.get("col", 0)
-        store.commit("done", {**self._commit_extra(tail_tbl), "metrics": m.as_dict()})
+        self._commit(store, "done", metrics=m.as_dict())
 
     def _merge_stream(self, store: RunStore, sources: list, step: int):
         """Merge sorted ``sources`` (runs or in-memory tables) into sorted

@@ -1,11 +1,10 @@
-"""Arrow-native key normalization + row fingerprints (zero per-row Python).
+"""Arrow-native key normalization (zero per-row Python).
 
 Codes follow the ``NormalizedKey`` contract of keys.py, sourced straight
 from Arrow buffers, so the kernel never materializes pandas object arrays
-for strings.  The string
-prefix code is built by vectorized gather over the (offsets, data)
-buffers; the row fingerprint folds normalized codes, lengths, and (for
-resume-grade fingerprints) a per-element full-content siphash.
+for strings.  The string prefix code is built by vectorized gather over
+the (offsets, data) buffers; exact string codes are dense dictionary
+ranks.
 """
 
 from __future__ import annotations
@@ -15,9 +14,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .keys import NormalizedKey, _float_to_u64, _int_to_u64
-
-_GOLD = np.uint64(0x9E3779B97F4A7C15)
-
 
 def _chunks(arr) -> list[pa.Array]:
     if isinstance(arr, pa.ChunkedArray):
@@ -57,33 +53,6 @@ def _string_prefix_u64_chunk(chunk: pa.Array) -> np.ndarray:
     idx = starts[:, None] + j
     buf[mask] = data[idx[mask]]
     return buf.view(">u8").ravel().astype(np.uint64)
-
-
-def _string_lens(arr) -> np.ndarray:
-    parts = []
-    for chunk in _chunks(arr):
-        if len(chunk) == 0:
-            continue
-        starts, lens, _ = _string_buffers(chunk)
-        parts.append(lens)
-    return np.concatenate(parts) if parts else np.zeros(0, np.int64)
-
-
-def _full_content_hash(col) -> np.ndarray:
-    """Per-row full-content hash of a string/binary column.
-
-    pandas' vectorized siphash (``hash_pandas_object``, fixed default
-    key -> deterministic across processes): one C pass per element with
-    tiny temporaries.  The numpy alternatives (padded word-fold /
-    flat weighted byte walk) allocate O(bytes) index matrices per call
-    and collapse ~50x when 32 executor workers contend for this box's
-    memory bandwidth — measured 2.9 s vs 22 ms per 15k rows at 32-way
-    concurrency.  Value depends only on the element -> batching- and
-    chunking-invariant."""
-    import pandas as pd
-
-    s = col.to_pandas() if not isinstance(col, pd.Series) else col
-    return pd.util.hash_pandas_object(s, index=False).to_numpy().astype(np.uint64)
 
 
 def string_prefix_u64(arr) -> np.ndarray:
@@ -233,141 +202,3 @@ def _is_scalar_key_type(t) -> bool:
         or pa.types.is_boolean(t)
         or _is_stringish(t)
     )
-
-
-_FP_W = np.array(
-    [1, 31, 131, 257, 8191, 524287, 2147483647, 3, 7, 127, 911, 5381, 40503,
-     69061, 99991, 15485863],
-    dtype=np.uint64,
-)
-
-
-def _segment_weighted_sum(codes: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Per-row position-weighted fold of variable-length per-value codes."""
-    n = len(lens)
-    total = int(lens.sum())
-    if total == 0:
-        return np.zeros(n, dtype=np.uint64)
-    row_start = np.cumsum(lens) - lens
-    pos = np.arange(total, dtype=np.int64) - np.repeat(row_start, lens)
-    contrib = codes.astype(np.uint64, copy=False) * _FP_W[pos & 15]
-    sums = np.concatenate([[np.uint64(0)], np.cumsum(contrib, dtype=np.uint64)])
-    ends = np.cumsum(lens)
-    return (sums[ends] - sums[ends - lens]).astype(np.uint64)
-
-
-def _fp_column(col, *, full: bool, depth: int = 0) -> list[np.ndarray]:
-    """Per-row uint64 hash component arrays for ANY column type.
-
-    Key columns must pass ``normalize_arrow_column`` (which rejects
-    unsupported types); fingerprints cover the WHOLE row, so a table
-    that merely carries an embedding array / decimal / struct column
-    must not crash run formation — those fold through here instead."""
-    t = col.type
-    n = len(col)  # works for both Array and ChunkedArray
-    if _is_scalar_key_type(t):
-        nk = normalize_arrow_column(col)
-        # the null-flag component is mixed UNCONDITIONALLY (zeros when
-        # the chunk has no nulls): a conditional component makes the
-        # same row hash differently depending on whether its batch-mates
-        # happen to include a null -> batching invariance breaks
-        isnull = (
-            nk.isnull.astype(np.uint64)
-            if nk.isnull is not None
-            else np.zeros(n, dtype=np.uint64)
-        )
-        parts = [nk.codes, isnull]
-        if _is_stringish(t):
-            parts.append(_string_lens(col).astype(np.uint64))
-            if full:
-                parts.append(_full_content_hash(col))
-        return parts
-    if pa.types.is_null(t):
-        return [np.zeros(n, dtype=np.uint64)]
-    if pa.types.is_decimal(t):
-        # hash decimals from their exact string form, NOT a float64 cast:
-        # two inputs differing only past 53-bit mantissa precision would
-        # otherwise fingerprint identically, weakening the resume guard
-        return _fp_column(pc.cast(col, pa.string()), full=full, depth=depth)
-    if pa.types.is_dictionary(t):
-        return _fp_column(pc.cast(col, t.value_type), full=full, depth=depth)
-    if depth < 3 and (
-        pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t)
-    ):
-        # per-row fold over the flattened child values (the embedding-
-        # column case): value codes from the child type, position-
-        # weighted segment sum + element count per row
-        lens = (
-            pc.fill_null(pc.list_value_length(col), 0)
-            .cast(pa.int64())
-            .to_numpy(zero_copy_only=False)
-        )
-        values = pc.list_flatten(col)
-        vparts = _fp_column(values, full=full, depth=depth + 1)
-        vcodes = vparts[0]
-        for extra in vparts[1:]:
-            vcodes = vcodes ^ (extra * _GOLD)
-        parts = [_segment_weighted_sum(vcodes, lens), lens.astype(np.uint64)]
-        parts.append(
-            np.asarray(pc.is_null(col)).astype(np.uint64)
-            if col.null_count
-            else np.zeros(n, dtype=np.uint64)
-        )
-        return parts
-    if depth < 3 and pa.types.is_struct(t):
-        parts = []
-        combined = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-        for i in range(t.num_fields):
-            parts.extend(_fp_column(combined.field(i), full=full, depth=depth + 1))
-        parts.append(
-            np.asarray(pc.is_null(col)).astype(np.uint64)
-            if col.null_count
-            else np.zeros(n, dtype=np.uint64)
-        )
-        return parts
-    # last resort (map/union/deep nesting): validity + a type constant —
-    # weaker (content-insensitive) but never blocks sorting a table that
-    # carries an exotic non-key column
-    import zlib
-
-    isnull = (
-        np.asarray(pc.is_null(col)).astype(np.uint64)
-        if col.null_count
-        else np.zeros(n, dtype=np.uint64)
-    )
-    # crc32, NOT hash(): Python's str hash is PYTHONHASHSEED-randomized,
-    # which would make fingerprints differ across processes and
-    # permanently defeat checkpoint resume for such schemas
-    tconst = np.uint64(zlib.crc32(str(t).encode()) & 0xFFFFFFFF)
-    return [isnull + tconst]
-
-
-def row_fingerprint_table(tbl: pa.Table, *, full: bool = False) -> int:
-    """Order-independent 64-bit content fingerprint: xor-fold of per-row
-    mixed hashes over ALL columns.  Batching-invariant; vectorized.
-
-    Default (fast): normalized codes (8-byte prefix for strings) +
-    string lengths — discriminates re-dealt partitions via any unique
-    column prefix at ~0 cost.  ``full=True`` additionally folds a
-    position-weighted sum over every string byte (content-sensitive past
-    the prefix; ~3x the fingerprint cost on text-heavy rows) — the
-    resume-validation path uses this so a stale checkpoint can never be
-    replayed over input that changed beyond byte 8."""
-    n = tbl.num_rows
-    if n == 0:
-        return 0
-    acc = np.full(n, _GOLD, dtype=np.uint64)
-
-    def mix(a, v):
-        v = v.astype(np.uint64, copy=False)
-        a ^= v + _GOLD + (a << np.uint64(6)) + (a >> np.uint64(2))
-        return a
-
-    for name in tbl.schema.names:
-        for part in _fp_column(tbl.column(name), full=full):
-            acc = mix(acc, part)
-    # final per-row avalanche then xor-fold
-    acc ^= acc >> np.uint64(33)
-    acc *= np.uint64(0xFF51AFD7ED558CCD)
-    acc ^= acc >> np.uint64(33)
-    return int(np.bitwise_xor.reduce(acc))

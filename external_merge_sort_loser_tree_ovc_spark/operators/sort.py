@@ -38,7 +38,7 @@ import pyarrow.compute as pc
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, functions as F
 
-from ..kernel.external_sort import ExternalSorter
+from ..kernel.external_sort import ROW_HASH_COL, ExternalSorter
 
 DEFAULT_BUDGET_ROWS = 1 << 20
 DEFAULT_BATCH_ROWS = 1 << 16
@@ -124,6 +124,24 @@ def external_sort_df(
 
     ``skip_shuffle=True`` sorts within existing partitions only (useful
     after an upstream salted range partition).
+
+    With ``checkpoint_dir``, each partition's runs persist in its own
+    subdirectory, and a rerun over identical partition input replays
+    them instead of merging again.  The identity check is a hidden
+    ``_emsort_row_hash`` column added after the range shuffle, just
+    before the kernel: ``xxhash64`` over every column plus ``isnull`` of
+    each nullable one (Spark's hash skips NULLs, so without the flags
+    ``(NULL, 'x')`` and ``('x', NULL)`` would hash alike).  The kernel
+    folds it into a per-partition fingerprint and drops it; the output
+    schema is ``df.schema``.  Spark's ``xxhash64`` rejects map columns
+    when the plan is built (``DATATYPE_MISMATCH.HASH_MAP_TYPE``), so a
+    checkpointed sort of a frame that carries a map fails loudly; the
+    checkpointing callers (``flagship_pipeline`` and
+    ``jobs/flagship_job.py``) carry none.
+
+    Each call registers one accumulator, whose small per-partition dict
+    PySpark keeps for the life of the driver: the footprint grows with
+    the number of calls, not with the input.
     """
     if not skip_shuffle:
         # no salt, so key-only hashes suffice: the sample scans only keys
@@ -134,9 +152,19 @@ def external_sort_df(
     fn = _partition_kernel(
         keys, memory_budget_rows, batch_rows, mode, checkpoint_dir, metrics
     )
+    src = df
+    if checkpoint_dir is not None:
+        fields = df.schema.fields
+        src = df.withColumn(
+            ROW_HASH_COL,
+            F.xxhash64(
+                *[F.col(f.name) for f in fields],
+                *[F.isnull(f.name) for f in fields if f.nullable],
+            ),
+        )
     # mapInArrow: the kernel is Arrow-native — skip Spark's
     # arrow<->pandas conversion entirely (strings stay in Arrow buffers)
-    out = df.mapInArrow(fn, schema=df.schema)
+    out = src.mapInArrow(fn, schema=df.schema)
     out._emsort_metrics = metrics  # read through sort_metrics(out)
     return out
 
@@ -220,7 +248,7 @@ def salted_repartition_by_range(
 
     Bounds are the exact lower quantiles of a content-hash sample, so
     the same input is partitioned the same way on every run, which lets
-    fingerprint-verified checkpoint resume replay (``repartitionByRange``
+    a checkpointed ``external_sort_df`` replay (``repartitionByRange``
     samples with a seed taken from the RDD id).  Rows route to buckets
     through a balanced binary tree of struct compares, and a Murmur3
     preimage key pins bucket i to partition i.  Key types outside

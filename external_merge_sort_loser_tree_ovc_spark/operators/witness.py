@@ -42,21 +42,6 @@ def witness_summary(df: DataFrame, cols: list[str] | None = None) -> dict:
     return {"rows": row["rows"], "parity": row["parity"] or 0}
 
 
-def int_parity(df: DataFrame, cols: list[str]) -> int:
-    """The reference's exact parity for integer columns:
-    xor over (col_i << i) (Witness.cpp:47)."""
-    exprs = [
-        F.expr(f"bit_xor(shiftleft(cast(`{c}` as bigint), {min(i, 32)}))").alias(f"p{i}")
-        for i, c in enumerate(cols)
-    ]
-    row = df.agg(*exprs).collect()[0]
-    p = 0
-    for i in range(len(cols)):
-        v = row[f"p{i}"]
-        p ^= int(v) if v is not None else 0
-    return p
-
-
 def sortedness_report(
     df: DataFrame,
     keys: list[str],

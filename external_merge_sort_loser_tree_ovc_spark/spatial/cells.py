@@ -12,9 +12,9 @@ quadtree grid with the same *algebra* the engine needs:
   range-partitioning / sort key at scale (preserves 2-D locality across
   range partitions far better than row-major; the OVC sort-merge kernel
   sorts on it),
-- ``parent / children``       resolution hierarchy (exact quadtree),
-- ``ring(xg, yg, k)``         k-ring neighbours (kNN cell-ring expansion,
-  the H3 ``grid_ring`` analogue).
+- ``parent_cell``             resolution hierarchy (exact quadtree),
+- ``neighbours``              cell-offset neighbours (the NumPy form of
+  kNN's cell-ring expansion, the H3 ``grid_ring`` analogue).
 
 Longitude wraps (x neighbours mod 2^res); latitude clamps at the poles.
 All functions are vectorized over NumPy arrays — no per-row Python
@@ -70,11 +70,6 @@ def cell_to_xy(cid, res: int) -> tuple[np.ndarray, np.ndarray]:
     return cid & mask, cid >> np.int64(res)
 
 
-def encode_cell(lat, lon, res: int) -> np.ndarray:
-    xg, yg = encode_grid(lat, lon, res)
-    return cell_id(xg, yg, res)
-
-
 # --- Z-order (Morton) id: the scale-path sort/partition key ---------------
 
 def _part1by1(x: np.ndarray) -> np.ndarray:
@@ -101,21 +96,6 @@ def morton_id(xg, yg) -> np.ndarray:
     return (_part1by1(xg) | (_part1by1(yg) << np.uint64(1))).astype(np.int64)
 
 
-def morton_to_xy(m) -> tuple[np.ndarray, np.ndarray]:
-    m = np.asarray(m, dtype=np.uint64)
-
-    def compact(v):
-        v = v & np.uint64(0x5555555555555555)
-        v = (v | (v >> np.uint64(1))) & np.uint64(0x3333333333333333)
-        v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
-        v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
-        v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
-        return v.astype(np.int64)
-
-    return compact(m), compact(m >> np.uint64(1))
-
-
 # --- hierarchy -------------------------------------------------------------
 
 def parent_cell(cid, res: int, parent_res: int) -> np.ndarray:
@@ -127,40 +107,7 @@ def parent_cell(cid, res: int, parent_res: int) -> np.ndarray:
     return cell_id(xg >> d, yg >> d, parent_res)
 
 
-def children_cells(cid: int, res: int, child_res: int) -> np.ndarray:
-    """All child cell ids of one cell at a finer resolution."""
-    if child_res < res:
-        raise ValueError("child_res must be >= res")
-    d = child_res - res
-    xg, yg = cell_to_xy(np.asarray([cid]), res)
-    side = 1 << d
-    dx, dy = np.meshgrid(np.arange(side), np.arange(side))
-    cx = (xg[0] << d) + dx.ravel()
-    cy = (yg[0] << d) + dy.ravel()
-    return cell_id(cx, cy, child_res)
-
-
 # --- k-ring neighbourhood (kNN expansion) ----------------------------------
-
-def ring_offsets(k: int) -> np.ndarray:
-    """(dx, dy) offsets of the hollow ring at Chebyshev distance k."""
-    if k == 0:
-        return np.zeros((1, 2), dtype=np.int64)
-    side = np.arange(-k, k + 1, dtype=np.int64)
-    top = np.stack([side, np.full_like(side, -k)], axis=1)
-    bot = np.stack([side, np.full_like(side, k)], axis=1)
-    mid = np.arange(-k + 1, k, dtype=np.int64)
-    left = np.stack([np.full_like(mid, -k), mid], axis=1)
-    right = np.stack([np.full_like(mid, k), mid], axis=1)
-    return np.concatenate([top, bot, left, right])
-
-
-def disk_offsets(k: int) -> np.ndarray:
-    """(dx, dy) offsets of the full (2k+1)^2 disk (rings 0..k)."""
-    side = np.arange(-k, k + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(side, side)
-    return np.stack([dx.ravel(), dy.ravel()], axis=1)
-
 
 def neighbours(xg, yg, res: int, offsets: np.ndarray):
     """Apply offsets to each (xg, yg); lon wraps, lat clamps (out-of-range

@@ -30,3 +30,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def with_row_hash():
+    """Adds the hidden row-hash column that ``external_sort_df`` feeds a
+    checkpointed kernel to a pandas chunk.  pandas' per-row hash stands
+    in for Spark's xxhash64: the kernel only folds the values."""
+    import pandas as pd
+
+    from external_merge_sort_loser_tree_ovc_spark.kernel.external_sort import (
+        ROW_HASH_COL,
+    )
+
+    def add(chunk):
+        h = pd.util.hash_pandas_object(chunk, index=False).to_numpy()
+        return chunk.assign(**{ROW_HASH_COL: h.view("int64")})
+
+    return add

@@ -46,15 +46,28 @@ def emb(spark):
     return spark.read.parquet(EMB)
 
 
+def whash_np(words) -> np.ndarray:
+    """Word hash by definition: sum of the first 8 code points times
+    31^i, mod P."""
+    from external_merge_sort_loser_tree_ovc_spark.functions.texthash import P
+
+    return np.array(
+        [sum(ord(ch) * 31**i for i, ch in enumerate(w[:8])) % P for w in words],
+        dtype=np.int64,
+    )
+
+
 def test_whash_np_matches_sql():
     from external_merge_sort_loser_tree_ovc_spark.functions import texthash as T
+    from external_merge_sort_loser_tree_ovc_spark.functions.textops import _whash_np
 
     words = ["the", "a", "", "abcdefghijk", "Zz9 ~"]
-    expect = T.whash_np(words)
+    expect = whash_np(words)
     pdf = pd.DataFrame({"w": words})
     duckdb.register("wtab", pdf)
     got = duckdb.sql(f"SELECT {T.whash_sql('w')} AS h FROM wtab").fetchnumpy()["h"]
     assert (got == expect).all()
+    assert (_whash_np(words) == expect).all()
 
 
 def test_text_features_vs_oracle(spark, docs):
@@ -99,17 +112,6 @@ def test_minhash_lsh_vs_oracle(spark, docs):
         pairs = set(zip(out.id_a, out.id_b))
         for a, b in zip(dups.a, dups.b):
             assert (a, b) in pairs
-
-
-def test_simhash_pairs_vs_oracle(spark, docs):
-    from external_merge_sort_loser_tree_ovc_spark.functions.dedup import (
-        simhash_pairs,
-        simhash_pairs_oracle_sql,
-    )
-
-    got = simhash_pairs(docs, "doc_id")
-    exp = _duck(simhash_pairs_oracle_sql("documents", "doc_id"))
-    _cmp(got, exp, ["id_a", "id_b"])
 
 
 def test_ngram_jaccard_vs_oracle(spark, docs):
@@ -548,7 +550,6 @@ def test_media_metadata_vs_oracle(spark, docs):
 def test_decode_media_stub(spark, docs):
     from external_merge_sort_loser_tree_ovc_spark.functions.multimodal import (
         decode_media,
-        frame_sample,
     )
     from pyspark.sql import functions as F
 
@@ -558,9 +559,6 @@ def test_decode_media_stub(spark, docs):
     out = decode_media(media, "payload", "doc_id", allow_fake=True).toPandas()
     assert len(out) == docs.count()
     assert out.features.map(len).eq(4).all()
-    frames = frame_sample(media, "payload", "doc_id", allow_fake=True).toPandas()
-    assert len(frames) >= docs.count()
-    assert (frames.frame_bytes >= 1).all()
 
 
 def test_neardup_lsh_equals_exact_on_adversarial_pairs(spark):
@@ -746,20 +744,24 @@ def test_extract_text_northstar_invariant(spark):
     url over the synthesized Common-Crawl-style page table."""
     from pyspark.sql import functions as F
 
-    from external_merge_sort_loser_tree_ovc_spark.functions.textops import extract_text
+    from external_merge_sort_loser_tree_ovc_spark.functions.textops import (
+        _SPARK,
+        extract_text_sql,
+    )
     from external_merge_sort_loser_tree_ovc_spark.sources.pages import synth_pages
 
     pages = synth_pages(spark, 5000)
-    bad = (
-        extract_text(pages, "html")
-        .filter(F.col("text_extracted") != F.col("text"))
-        .count()
-    )
+    bad = pages.filter(F.expr(extract_text_sql(_SPARK, "html")) != F.col("text")).count()
     assert bad == 0
 
 
 def test_extract_text_strips_script_style_entities(spark):
-    from external_merge_sort_loser_tree_ovc_spark.functions.textops import extract_text
+    from pyspark.sql import functions as F
+
+    from external_merge_sort_loser_tree_ovc_spark.functions.textops import (
+        _SPARK,
+        extract_text_sql,
+    )
 
     cases = [
         (b"<html><body><p>Hello &amp; welcome</p>"
@@ -771,7 +773,8 @@ def test_extract_text_strips_script_style_entities(spark):
     ]
     pdf = pd.DataFrame({"i": range(len(cases)), "html": [c[0] for c in cases]})
     got = (
-        extract_text(spark.createDataFrame(pdf), "html")
+        spark.createDataFrame(pdf)
+        .withColumn("text_extracted", F.expr(extract_text_sql(_SPARK, "html")))
         .toPandas()
         .sort_values("i")["text_extracted"]
         .tolist()

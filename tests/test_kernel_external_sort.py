@@ -118,57 +118,48 @@ def test_exact_mode_counts_comparisons(tmp_path):
     assert m.col_compares < 4 * m.ovc_compares
 
 
-def _ck_sorter(tmp_path, frame, mem, batch, **kw):
+def _ck_sorter(tmp_path, frame, mem, batch):
     return ExternalSorter(
         key_cols=list(frame.columns),
         spill_dir=str(tmp_path / "ck"),
         memory_budget_rows=mem,
         batch_rows=batch,
         checkpoint_inputs=True,
-        **kw,
     )
 
 
-def _chunks(frame, batch):
-    return iter([frame.iloc[i : i + batch] for i in range(0, len(frame), batch)])
+def _chunks(frame, batch, with_row_hash):
+    """``frame`` in ``batch``-row chunks carrying the row-hash column."""
+    return iter(
+        [with_row_hash(frame.iloc[i : i + batch]) for i in range(0, len(frame), batch)]
+    )
 
 
-def test_checkpoint_resume_verified(tmp_path):
+def test_checkpoint_resume_verified(tmp_path, with_row_hash):
     """Verified resume: identical re-fed input -> replay committed runs
     (merge passes skipped); the manifest fingerprint gates it."""
     n, mem, batch = 12000, 1000, 200
     frame = kernel_frame(n, 4, 7, 0, seed=23)
     s1 = _ck_sorter(tmp_path, frame, mem, batch)
-    out1 = pd.concat(list(s1.sort(_chunks(frame, batch))), ignore_index=True)
+    out1 = pd.concat(list(s1.sort(_chunks(frame, batch, with_row_hash))), ignore_index=True)
     assert not s1.metrics.resumed
+    assert list(out1.columns) == list(frame.columns)  # the hash column is dropped
 
     s2 = _ck_sorter(tmp_path, frame, mem, batch)
-    out2 = pd.concat(list(s2.sort(_chunks(frame, batch))), ignore_index=True)
+    out2 = pd.concat(list(s2.sort(_chunks(frame, batch, with_row_hash))), ignore_index=True)
     assert s2.metrics.resumed
     pd.testing.assert_frame_equal(out1, out2)
     assert_sorted(out2, list(frame.columns))
 
 
-def test_checkpoint_resume_trusted_empty_input(tmp_path):
-    """resume_trust=True rebuilds from the manifest without any input."""
-    n, mem, batch = 6000, 1000, 200
-    frame = kernel_frame(n, 4, 7, 0, seed=29)
-    s1 = _ck_sorter(tmp_path, frame, mem, batch)
-    out1 = pd.concat(list(s1.sort(_chunks(frame, batch))), ignore_index=True)
-    s2 = _ck_sorter(tmp_path, frame, mem, batch, resume_trust=True)
-    out2 = pd.concat(list(s2.sort(iter([]))), ignore_index=True)
-    assert s2.metrics.resumed
-    pd.testing.assert_frame_equal(out1, out2)
-
-
-def test_checkpoint_rejects_changed_input(tmp_path):
+def test_checkpoint_rejects_changed_input(tmp_path, with_row_hash):
     """If the re-fed input differs (nondeterministic upstream
     partitioning), the stale checkpoint must NOT replay — the kernel
     recomputes from the new input."""
     n, mem, batch = 6000, 1000, 200
     frame1 = kernel_frame(n, 4, 7, 0, seed=31)
     s1 = _ck_sorter(tmp_path, frame1, mem, batch)
-    pd.concat(list(s1.sort(_chunks(frame1, batch))), ignore_index=True)
+    pd.concat(list(s1.sort(_chunks(frame1, batch, with_row_hash))), ignore_index=True)
 
     frame2 = kernel_frame(n - 500, 4, 7, 0, seed=32)
     s2 = ExternalSorter(
@@ -178,7 +169,7 @@ def test_checkpoint_rejects_changed_input(tmp_path):
         batch_rows=batch,
         checkpoint_inputs=True,
     )
-    out2 = pd.concat(list(s2.sort(_chunks(frame2, batch))), ignore_index=True)
+    out2 = pd.concat(list(s2.sort(_chunks(frame2, batch, with_row_hash))), ignore_index=True)
     assert not s2.metrics.resumed
     assert len(out2) == n - 500
     exp = frame2.sort_values(list(frame2.columns), kind="stable", ignore_index=True)
@@ -188,7 +179,7 @@ def test_checkpoint_rejects_changed_input(tmp_path):
     )
     # and a third run with frame2 again DOES resume from the new manifest
     s3 = _ck_sorter(tmp_path, frame2, mem, batch)
-    out3 = pd.concat(list(s3.sort(_chunks(frame2, batch))), ignore_index=True)
+    out3 = pd.concat(list(s3.sort(_chunks(frame2, batch, with_row_hash))), ignore_index=True)
     assert s3.metrics.resumed
     assert_sorted(out3, list(frame2.columns))
 
@@ -413,7 +404,7 @@ def test_streamed_gather_order_paths(tmp_path, path, checkpoint):
     assert counted == (path in ("packed", "string", "nulls"))
 
 
-def test_resume_from_single_batch_runs(tmp_path):
+def test_resume_from_single_batch_runs(tmp_path, with_row_hash):
     """A checkpoint whose runs are one record batch each (the layout
     before runs were paged) still replays: page cursors assume no page
     size."""
@@ -425,9 +416,13 @@ def test_resume_from_single_batch_runs(tmp_path):
     n, mem, batch = 6000, 1000, 100
     frame = kernel_frame(n, 4, 7, 0, seed=37)
     s1 = _ck_sorter(tmp_path, frame, mem, batch)
-    out1 = pd.concat(list(s1.sort(_chunks(frame, batch))), ignore_index=True)
+    out1 = pd.concat(list(s1.sort(_chunks(frame, batch, with_row_hash))), ignore_index=True)
     store, doc = RunStore.load(str(tmp_path / "ck"))
-    assert doc["covers_all"] and len(store.runs) > 1
+    # the manifest records (rows, XOR, wrapping sum) of the row hashes
+    h = with_row_hash(frame).iloc[:, -1].to_numpy().view(np.uint64)
+    xor, total = np.bitwise_xor.reduce(h), h.sum(dtype=np.uint64)
+    assert doc["fingerprint"] == f"{n}:{int(xor):016x}:{int(total):016x}"
+    assert len(store.runs) > 1
     for r in store.runs:
         with ipc.open_file(pa.OSFile(r.path)) as f:
             assert f.num_record_batches > 1
@@ -438,13 +433,9 @@ def test_resume_from_single_batch_runs(tmp_path):
             assert f.num_record_batches == 1
 
     s2 = _ck_sorter(tmp_path, frame, mem, batch)
-    out2 = pd.concat(list(s2.sort(_chunks(frame, batch))), ignore_index=True)
+    out2 = pd.concat(list(s2.sort(_chunks(frame, batch, with_row_hash))), ignore_index=True)
     assert s2.metrics.resumed
     pd.testing.assert_frame_equal(out1, out2)
-    s3 = _ck_sorter(tmp_path, frame, mem, batch, resume_trust=True)
-    out3 = pd.concat(list(s3.sort(iter([]))), ignore_index=True)
-    assert s3.metrics.resumed
-    pd.testing.assert_frame_equal(out1, out3)
 
 
 def test_merge_unifies_run_schemas(tmp_path):

@@ -286,9 +286,12 @@ def test_text_extract_stays_codegen(spark):
     """html->text extraction must be narrow built-in exprs: no shuffle,
     no Python evals."""
     pages = synth_pages(spark, 1000)
-    from external_merge_sort_loser_tree_ovc_spark.functions.textops import extract_text
+    from external_merge_sort_loser_tree_ovc_spark.functions.textops import (
+        _SPARK,
+        extract_text_sql,
+    )
 
-    plan = plan_of(extract_text(pages, "html"))
+    plan = plan_of(pages.withColumn("t", F.expr(extract_text_sql(_SPARK, "html"))))
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 

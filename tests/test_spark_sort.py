@@ -17,7 +17,6 @@ from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
 )
 from external_merge_sort_loser_tree_ovc_spark.operators.witness import (
     assert_globally_sorted,
-    int_parity,
     witness_summary,
 )
 
@@ -72,12 +71,6 @@ def test_witness_invariants_roundtrip(spark, lineitem):
         assert rep.rows.sum() == before["rows"]
     finally:
         out.unpersist()
-
-
-def test_int_parity_matches_reference_formula(spark):
-    df = spark.createDataFrame([(1, 2), (3, 4), (5, 6)], ["a", "b"])
-    # xor over a<<0, b<<1: (1^3^5) ^ ((2^4^6)<<1) = 7 ^ (0<<1) = 7
-    assert int_parity(df, ["a", "b"]) == (1 ^ 3 ^ 5) ^ ((2 ^ 4 ^ 6) << 1)
 
 
 @pytest.mark.parametrize("checkpointed", [True, False], ids=["checkpoint_dir", "none"])

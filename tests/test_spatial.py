@@ -10,9 +10,60 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from external_merge_sort_loser_tree_ovc_spark.sources.fixtures import pages_frame
+from external_merge_sort_loser_tree_ovc_spark.sources.pages import synth_pages
 from external_merge_sort_loser_tree_ovc_spark.spatial import cells
 from external_merge_sort_loser_tree_ovc_spark.spatial.pip import Polygon, default_polygons
+
+
+# --- NumPy oracles -------------------------------------------------------------
+
+def encode_cell(lat, lon, res: int) -> np.ndarray:
+    xg, yg = cells.encode_grid(lat, lon, res)
+    return cells.cell_id(xg, yg, res)
+
+
+def morton_to_xy(m) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of ``cells.morton_id``: de-interleave the bits."""
+    m = np.asarray(m, dtype=np.uint64)
+
+    def compact(v):
+        v = v & np.uint64(0x5555555555555555)
+        v = (v | (v >> np.uint64(1))) & np.uint64(0x3333333333333333)
+        v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+        v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
+        v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
+        v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
+        return v.astype(np.int64)
+
+    return compact(m), compact(m >> np.uint64(1))
+
+
+def children_cells(cid: int, res: int, child_res: int) -> np.ndarray:
+    """All child cell ids of one cell at a finer resolution."""
+    d = child_res - res
+    xg, yg = cells.cell_to_xy(np.asarray([cid]), res)
+    dx, dy = np.meshgrid(np.arange(1 << d), np.arange(1 << d))
+    return cells.cell_id((xg[0] << d) + dx.ravel(), (yg[0] << d) + dy.ravel(), child_res)
+
+
+def ring_offsets(k: int) -> np.ndarray:
+    """(dx, dy) offsets of the hollow ring at Chebyshev distance k."""
+    if k == 0:
+        return np.zeros((1, 2), dtype=np.int64)
+    side = np.arange(-k, k + 1, dtype=np.int64)
+    top = np.stack([side, np.full_like(side, -k)], axis=1)
+    bot = np.stack([side, np.full_like(side, k)], axis=1)
+    mid = np.arange(-k + 1, k, dtype=np.int64)
+    left = np.stack([np.full_like(mid, -k), mid], axis=1)
+    right = np.stack([np.full_like(mid, k), mid], axis=1)
+    return np.concatenate([top, bot, left, right])
+
+
+def disk_offsets(k: int) -> np.ndarray:
+    """(dx, dy) offsets of the full (2k+1)^2 disk (rings 0..k)."""
+    side = np.arange(-k, k + 1, dtype=np.int64)
+    dx, dy = np.meshgrid(side, side)
+    return np.stack([dx.ravel(), dy.ravel()], axis=1)
 
 
 # --- cells -------------------------------------------------------------------
@@ -35,7 +86,7 @@ def test_cell_sql_expr_matches_numpy():
     lat = rng.uniform(-90, 90, 2000)
     lon = rng.uniform(-180, 180, 2000)
     res = 7
-    expect = cells.encode_cell(lat, lon, res)
+    expect = encode_cell(lat, lon, res)
     df = pd.DataFrame({"lat": lat, "lon": lon})
     got = duckdb.sql(
         f"SELECT {cells.sql_cell_expr('lat', 'lon', res)} AS c FROM df"
@@ -48,7 +99,7 @@ def test_morton_roundtrip_and_locality():
     xg = rng.integers(0, 1 << 20, 5000)
     yg = rng.integers(0, 1 << 20, 5000)
     m = cells.morton_id(xg, yg)
-    bx, by = cells.morton_to_xy(m)
+    bx, by = morton_to_xy(m)
     assert (bx == xg).all() and (by == yg).all()
     # locality: sorting by morton gives smaller mean neighbour distance
     # than sorting by row-major id
@@ -64,27 +115,36 @@ def test_morton_roundtrip_and_locality():
 
 
 def test_parent_children():
-    cid = cells.encode_cell(np.array([40.0]), np.array([-3.0]), 10)
-    kids = cells.children_cells(int(cid[0]), 10, 12)
+    cid = encode_cell(np.array([40.0]), np.array([-3.0]), 10)
+    kids = children_cells(int(cid[0]), 10, 12)
     assert len(kids) == 16
     back = cells.parent_cell(kids, 12, 10)
     assert (back == cid[0]).all()
 
 
-def test_ring_offsets():
-    assert len(cells.ring_offsets(0)) == 1
-    for k in (1, 2, 5):
-        ring = cells.ring_offsets(k)
-        assert len(ring) == 8 * k
-        cheb = np.abs(ring).max(axis=1)
-        assert (cheb == k).all()
-    disk = cells.disk_offsets(3)
+def test_ring_offsets(spark):
+    """kNN's JVM-side ring generator yields exactly the NumPy rings and
+    disks."""
+    from external_merge_sort_loser_tree_ovc_spark.spatial.knn import _ring
+
+    def offsets(lo, hi):
+        rows = spark.range(1).select(_ring(lo, hi)).collect()
+        return sorted((r["_dx"], r["_dy"]) for r in rows)
+
+    assert len(ring_offsets(0)) == 1
+    for k in (0, 1, 2, 5):
+        ring = ring_offsets(k)
+        assert len(ring) == max(1, 8 * k)
+        assert (np.abs(ring).max(axis=1) == k).all()
+        assert offsets(k, k) == sorted(map(tuple, ring.tolist()))
+    disk = disk_offsets(3)
     assert len(disk) == 49
+    assert offsets(0, 3) == sorted(map(tuple, disk.tolist()))
 
 
 def test_neighbours_wrap_and_clamp():
     res = 4  # 16x16 grid
-    idx, nx, ny = cells.neighbours([0], [0], res, cells.disk_offsets(1))
+    idx, nx, ny = cells.neighbours([0], [0], res, disk_offsets(1))
     # lat clamps: ny=-1 dropped -> 6 of 9 remain; lon wraps: x=-1 -> 15
     assert len(nx) == 6
     assert 15 in nx.tolist()
@@ -130,7 +190,7 @@ def test_cover_cells_superset():
     lon = rng.uniform(-180, 180, 20000)
     lat = rng.uniform(-90, 90, 20000)
     mask = poly.contains(lon, lat)
-    hit_cells = set(cells.encode_cell(lat[mask], lon[mask], res).tolist())
+    hit_cells = set(encode_cell(lat[mask], lon[mask], res).tolist())
     assert hit_cells <= cover
 
 
@@ -138,8 +198,7 @@ def test_cover_cells_superset():
 
 @pytest.fixture(scope="module")
 def pages(spark):
-    pdf = pages_frame(3000, seed=42)
-    return spark.createDataFrame(pdf)
+    return synth_pages(spark, 3000, seed=42)
 
 
 def test_with_grid_matches_numpy(spark, pages):
@@ -152,7 +211,7 @@ def test_with_grid_matches_numpy(spark, pages):
         .toPandas()
         .sort_values("url", ignore_index=True)
     )
-    expect = cells.encode_cell(got["lat"].to_numpy(), got["lon"].to_numpy(), res)
+    expect = encode_cell(got["lat"].to_numpy(), got["lon"].to_numpy(), res)
     assert (got["cell"].to_numpy() == expect).all()
 
 
