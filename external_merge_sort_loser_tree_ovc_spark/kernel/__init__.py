@@ -1,6 +1,6 @@
 from .external_sort import ExternalSorter, SortMetrics
 from .loser_tree import LoserTreeMerge, run_relative_ovc
-from .ovc import compare_ovc, run_ovc_codes, update_loser_ovc
+from .ovc import compare_ovc, update_loser_ovc
 from .planner import initial_fan_in, merge_depth
 from .runs import RunInfo, RunStore
 
@@ -10,7 +10,6 @@ __all__ = [
     "LoserTreeMerge",
     "run_relative_ovc",
     "compare_ovc",
-    "run_ovc_codes",
     "update_loser_ovc",
     "initial_fan_in",
     "merge_depth",

@@ -24,11 +24,13 @@ through a page cursor per run (reference ``DRAM.cpp:551-596``), so a
 merge holds one page per input run, one output slice, and 8-16 bytes of
 key codes per row -- never a whole-partition table.
 
-The data plane is Arrow end to end: key normalization reads Arrow
-buffers directly (keys_arrow.py), row reordering is ``Table.take``
-(C++), spills are Arrow IPC files, and the non-exact fallback sort is
-``pyarrow.compute.sort_indices`` (C++ stable sort) — pandas appears
-only in the compatibility adapter ``sort()``.  This removed the
+The data plane is Arrow end to end: one key matrix
+(``keys.key_matrix_table``, read straight from Arrow buffers) drives run
+formation, every fast merge and the counted loser-tree merge; row
+reordering is ``Table.take`` (C++), spills are Arrow IPC files, and key
+types with no code fall back to ``pyarrow.compute.sort_indices`` (C++
+stable sort) — pandas appears only in the compatibility adapter
+``sort()``.  This removed the
 pandas<->Arrow string round-trips that dominated the profile (5 of 9
 seconds per 250k-row partition).
 
@@ -53,7 +55,7 @@ import pyarrow.compute as pc
 
 from . import keys as K
 from . import vmerge
-from .keys_arrow import key_matrix_table
+from .keys import key_matrix_table
 from .loser_tree import LoserTreeMerge
 from .planner import initial_fan_in, merge_depth
 from .runs import PageCursor, RunStore
@@ -78,7 +80,7 @@ class SortMetrics:
     # Comparison counts, by mode.  fast: pairwise merge-path head-to-
     # head events, over every packed merge, whose packed codes differ
     # (ovc) or tie (col) -- vmerge.merge2_compare_counts; both stay 0
-    # when the matrix or collation fallback did the merge.  exact: the
+    # when the lexsort or collation fallback did the merge.  exact: the
     # loser tree's OVC-resolved (ovc) and column (col) comparisons.
     ovc_compares: int = 0
     col_compares: int = 0
@@ -90,33 +92,30 @@ class SortMetrics:
         return dict(self.__dict__)
 
 
-def _sort_keys(key_cols: list[str]):
-    return [(c, "ascending") for c in key_cols]
-
-
 def _sort_table(tbl: pa.Table, key_cols: list[str]) -> pa.Table:
     """Vectorized single-buffer sort (run formation).
 
-    Exact-normalizable keys -> uint64 matrix + np.lexsort (the cache-run
-    analogue of the reference's in-RAM sort, ``DRAM.cpp:362-445``, with
-    ``take`` instead of the in-place permutation ``DRAM.cpp:338-354``).
-    Otherwise -> Arrow's C++ stable sort (full string collation).
+    Key matrix + np.lexsort (the cache-run analogue of the reference's
+    in-RAM sort, ``DRAM.cpp:362-445``, with ``take`` instead of the
+    in-place permutation ``DRAM.cpp:338-354``); key types with no code
+    -> Arrow's C++ stable sort.
     """
     if tbl.num_rows == 0:
         return tbl
-    # string_ranks: string keys become exact per-buffer dense ranks, so
-    # even string-keyed buffers sort on the integer matrix (no
-    # whole-column string comparison sort)
-    mat, exact = key_matrix_table(tbl, key_cols, string_ranks=True)
-    if exact:
-        order = K.lexsort_indices(mat)
-        if _is_trivial(order):
-            return tbl
-        return tbl.take(pa.array(order))
-    idx = pc.sort_indices(
-        tbl, sort_keys=_sort_keys(key_cols), null_placement="at_start"
+    mat = key_matrix_table(tbl, key_cols)
+    if mat is None:
+        return tbl.take(_collation_order(tbl, key_cols))
+    order = K.lexsort_indices(mat)
+    if _is_trivial(order):
+        return tbl
+    return tbl.take(pa.array(order))
+
+
+def _collation_order(tbl: pa.Table, key_cols: list[str]) -> pa.Array:
+    return pc.sort_indices(
+        tbl, sort_keys=[(c, "ascending") for c in key_cols],
+        null_placement="at_start",
     )
-    return tbl.take(idx)
 
 
 def _is_trivial(order: np.ndarray) -> bool:
@@ -137,34 +136,27 @@ def _merge_order(
     ``counters``: optional {"ovc", "col"} dict accumulated with the
     packed-path comparison counts (``vmerge.merge2_compare_counts``) —
     instrumentation from the PRODUCTION merge, not a shadow sort.  The
-    matrix/collation fallbacks perform no countable head-to-head events
-    (one stable lexsort) and leave the counters untouched.
+    lexsort/collation fallbacks perform no countable head-to-head events
+    (one stable sort) and leave the counters untouched.
     """
     big = pa.concat_tables(tables, promote_options="default")
     # normalize ONCE over the concatenation, then slice per-run ranges:
-    # per-run matrices are not mutually comparable when nulls are
-    # unevenly distributed (the null-flag column exists only for runs
-    # that contain nulls -> misaligned widths); one shared matrix makes
-    # width AND packing parameters consistent by construction.
-    # string_ranks: string key columns get exact dense ranks over the
-    # concatenation (shared dictionary -> mutually comparable), so even
-    # string-keyed merges run the counted integer merge instead of a
-    # full collation re-sort
-    mat, exact = key_matrix_table(big, key_cols, string_ranks=True)
-    if exact:
-        bounds = np.cumsum([0] + [t.num_rows for t in tables])
-        mats = [mat[bounds[i] : bounds[i + 1]] for i in range(len(tables))]
-        packed = K.pack_columns_shared(mats)
-        if packed is not None:
-            # O(n log k), single-int compares
-            return vmerge.merge_runs_packed(packed, counters)
-        return vmerge.merge_runs_matrix(mats)
-    # a stable sort of runs sorted in the same collation is a merge:
-    # every run is still consumed in order
-    idx = pc.sort_indices(
-        big, sort_keys=_sort_keys(key_cols), null_placement="at_start"
+    # string ranks are only comparable within one table, and the null
+    # flag column exists only when some run has nulls
+    mat = key_matrix_table(big, key_cols)
+    if mat is None:
+        # a stable sort of runs sorted in the same collation is a merge:
+        # every run is still consumed in order
+        return _collation_order(big, key_cols).to_numpy().astype(np.int64)
+    bounds = np.cumsum([0] + [t.num_rows for t in tables])
+    packed = K.pack_columns_shared(
+        [mat[bounds[i] : bounds[i + 1]] for i in range(len(tables))]
     )
-    return idx.to_numpy().astype(np.int64)
+    if packed is not None:
+        # O(n log k), single-int compares
+        return vmerge.merge_runs_packed(packed, counters)
+    # a stable lexsort of the concatenation keeps ties in run order
+    return K.lexsort_indices(mat)
 
 
 def _to_table(b) -> pa.Table:
@@ -422,8 +414,8 @@ class ExternalSorter:
                     yield out
             # instrumentation comes from the one production merge path
             # (packed merge-path counts) whenever it performed the final
-            # merge — including an exact-mode schema the tree can't code
-            # (exact tree paths overwrite with reference-faithful counts)
+            # merge — including an exact-mode key the tree can't code
+            # (the exact tree sets its own reference-faithful counts)
             m.ovc_compares = self._cmp.get("ovc", 0)
             m.col_compares = self._cmp.get("col", 0)
         self._commit(store, "done", metrics=m.as_dict())
@@ -485,147 +477,59 @@ class ExternalSorter:
 
     def _final_exact_merge(self, store: RunStore, sources: list):
         """The counted loser-tree final merge over fully read runs, or
-        None when the schema suits neither tree."""
-        tables = [self._read_run(store, s) for s in sources]
-        # the whole-row loser tree (reference semantics: every column is
-        # a key column) is only valid when key_cols IS the whole schema
-        # — runs are sorted by key_cols, and a tree comparing extra
-        # payload columns would assume an order the runs don't have
-        whole_row_key = bool(tables) and list(self.key_cols) == list(
-            tables[0].schema.names
-        )
-        if whole_row_key and self._all_int(tables):
-            return self._final_exact(tables)
-        if self._exact_keys_supported(tables):
-            return self._final_exact_coded(tables)
-        return None
+        None when there is nothing to merge or a key type has no code.
 
-    # -- final merge, exact loser-tree mode ------------------------------------
-    def _all_int(self, tables: list[pa.Table]) -> bool:
-        return all(
-            pa.types.is_integer(f.type)
-            for t in tables
-            for f in t.schema
-        )
-
-    def _exact_keys_supported(self, tables: list[pa.Table]) -> bool:
-        """Exact (counted loser-tree) mode handles any KEY columns of
-        scalar type — ints/floats/timestamps/bools via order-preserving
-        u64 codes, strings via a global dense rank over the final tables
-        (all in memory at final-merge time).  Non-key payload columns
-        are carried by gather index and can be anything."""
-        from .keys_arrow import _is_scalar_key_type
-
-        if not tables:
-            return False
-        schema = tables[0].schema
-        return all(
-            c in schema.names and _is_scalar_key_type(schema.field(c).type)
-            for c in self.key_cols
-        )
-
-    def _final_exact(self, tables: list[pa.Table]):
-        """On-demand loser-tree merge with OVC counters (keys == whole row,
-        like the reference; only valid for all-integer schemas)."""
-        runs = [
-            np.column_stack([t.column(c).to_numpy() for c in t.schema.names]).astype(
-                np.int64
-            )
-            if t.num_rows
-            else np.zeros((0, len(t.schema.names)), np.int64)
-            for t in tables
-        ]
-        schema = tables[0].schema
-        cols = schema.names
-        tree = LoserTreeMerge(runs)
-        out_buf = []
-
-        def flush(buf):
-            mat = np.vstack(buf)
-            arrays = [
-                pa.array(mat[:, j]).cast(schema.field(j).type)
-                for j in range(len(cols))
-            ]
-            return pa.Table.from_arrays(arrays, names=list(cols))
-
-        while True:
-            row = tree.pop()
-            if row is None:
-                break
-            out_buf.append(row)
-            if len(out_buf) >= self.batch_rows:
-                t = flush(out_buf)
-                self.metrics.rows_out += t.num_rows
-                yield t
-                out_buf = []
-        if out_buf:
-            t = flush(out_buf)
-            self.metrics.rows_out += t.num_rows
-            yield t
-        self.metrics.ovc_compares = tree.ovc_compares
-        self.metrics.col_compares = tree.col_compares
-
-    def _final_exact_coded(self, tables: list[pa.Table]):
-        """Counted loser-tree final merge for key columns beyond the
-        all-int whole-row case — the round-2 gap where exact mode
-        silently fell back for any string key.
-
-        Each KEY column (only the key columns — the runs are sorted by
-        exactly those) is mapped to an order-preserving int64 code:
-        numerics/timestamps through the same u64 normalization the fast
-        path uses, strings through a global dense rank over the final
-        tables (``keys_arrow._string_rank_codes`` — legal here: all
-        final runs are materialized for the merge anyway).  A global
-        row-index column is appended as the last key column: it breaks
-        key ties deterministically (runs are key-sorted, so (key, index)
-        is sorted within every run) AND doubles as the gather index
-        mapping merged code-rows back to the original Arrow rows,
-        payload columns included.
+        The tree's rows are the key matrix shifted by 2^63 into int64
+        (an order-preserving map).  When the key is the whole schema,
+        every column is an integer and no key has NULLs, those rows ARE
+        the output (reference semantics: every column is a key column),
+        rebuilt column by column.  Otherwise a global row-index column is
+        appended: it breaks key ties deterministically (runs are
+        key-sorted, so (key, index) is sorted within every run) and
+        gathers the merged Arrow rows, payload columns included.
         """
-        from .keys_arrow import (
-            _is_stringish,
-            _string_rank_codes,
-            normalize_arrow_column,
-        )
-
+        if not sources:
+            return None
+        tables = [self._read_run(store, s) for s in sources]
         big = pa.concat_tables(tables, promote_options="default")
-        n = big.num_rows
-        if n == 0:
-            return
-        cols: list[np.ndarray] = []
-        for name in self.key_cols:
-            col = big.column(name)
-            if _is_stringish(col.type):
-                nk = _string_rank_codes(col)
-                codes = nk.codes.astype(np.int64)  # dense ranks: small ints
-            else:
-                nk = normalize_arrow_column(col)
-                # u64 -> order-preserving int64 (shift by 2^63)
-                codes = (nk.codes ^ np.uint64(1 << 63)).view(np.int64)
-            if nk.isnull is not None:
-                cols.append((~nk.isnull).astype(np.int64))  # null flag: 0 first
-                codes = np.where(nk.isnull, np.int64(0), codes)
-            cols.append(codes)
-        cols.append(np.arange(n, dtype=np.int64))  # gather index / final tiebreak
-        mat = np.column_stack(cols)
+        mat = key_matrix_table(big, self.key_cols)
+        if mat is None:
+            return None
+        mat = (mat ^ K.SIGN64).view(np.int64)
+        whole_row = (
+            list(self.key_cols) == big.schema.names
+            and mat.shape[1] == len(self.key_cols)  # no NULL flag column
+            and all(pa.types.is_integer(f.type) for f in big.schema)
+        )
+        if not whole_row:
+            mat = np.column_stack([mat, np.arange(big.num_rows, dtype=np.int64)])
         bounds = np.cumsum([0] + [t.num_rows for t in tables])
-        runs = [mat[bounds[i] : bounds[i + 1]] for i in range(len(tables))]
-        tree = LoserTreeMerge(runs)
-        buf: list[int] = []
-        while True:
-            row = tree.pop()
-            if row is None:
-                break
-            buf.append(int(row[-1]))
+        tree = LoserTreeMerge(
+            [mat[bounds[i] : bounds[i + 1]] for i in range(len(tables))]
+        )
+        return self._drain_tree(tree, big, whole_row)
+
+    def _drain_tree(self, tree: LoserTreeMerge, big: pa.Table, whole_row: bool):
+        def emit(rows):
+            if whole_row:
+                m = np.vstack(rows)
+                t = pa.Table.from_arrays(
+                    [pa.array(m[:, j]).cast(f.type) for j, f in enumerate(big.schema)],
+                    names=big.schema.names,
+                )
+            else:
+                t = big.take(pa.array(np.array([r[-1] for r in rows], dtype=np.int64)))
+            self.metrics.rows_out += t.num_rows
+            return t
+
+        buf = []
+        while (row := tree.pop()) is not None:
+            buf.append(row)
             if len(buf) >= self.batch_rows:
-                t = big.take(pa.array(np.asarray(buf, dtype=np.int64)))
-                self.metrics.rows_out += t.num_rows
-                yield t
+                yield emit(buf)
                 buf = []
         if buf:
-            t = big.take(pa.array(np.asarray(buf, dtype=np.int64)))
-            self.metrics.rows_out += t.num_rows
-            yield t
+            yield emit(buf)
         self.metrics.ovc_compares = tree.ovc_compares
         self.metrics.col_compares = tree.col_compares
 

@@ -1,57 +1,122 @@
-"""Order-preserving key normalization for the vectorized OVC sort kernel.
+"""Order-preserving key codes for the sort kernel: the one place that
+decides how a key column becomes ``uint64`` codes.
 
 The reference engine sorts rows of int32 columns lexicographically
 (reference ``TreeOfLosers.cpp:13-37``).  Our kernel generalizes the key
-domain to the types a web-page table needs (ints, floats, timestamps,
-strings/bytes) by normalizing every key column into ``uint64`` codes such
-that ``uint64`` compare == original compare.  This is the vectorized
-analogue of the reference's OVC thesis ("most comparisons become a single
-machine-integer compare", reference ``README.md:4-5``): after
-normalization, one array compare per column — and, when the packed width
-allows, one compare for the *whole* key.
+domain to the types a web-page table needs (ints, floats, dates,
+timestamps, booleans, strings/bytes) by reading every key column
+straight from its Arrow buffers into ``uint64`` codes such that
+``uint64`` compare == Spark's ascending compare.  This is the vectorized
+analogue of the reference's OVC thesis ("most comparisons become a
+single machine-integer compare", reference ``README.md:4-5``): after
+normalization, one array compare per column — and, when the packed
+width allows, one compare for the *whole* key.
 
-Strings are prefix-coded (first 8 bytes, big-endian); a prefix tie does
-NOT imply a key tie, so every normalization reports whether it is
-*exact* (total order preserved) or a *prefix* (needs a fallback compare
-on ties).  The sort paths only use single-uint64 fast paths when every
-column is exact.
+Every code is exact (no false ties).  Strings and binaries take dense
+ranks of their dictionary, so their codes are comparable only within
+the table they were computed from; callers normalize the concatenation
+of everything they compare.  Key types with no code (decimal, nested)
+make ``key_matrix_table`` return None, and the caller sorts with
+Arrow's typed collation instead.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
-_SIGN64 = np.uint64(0x8000000000000000)
-
-
-@dataclass(frozen=True)
-class NormalizedKey:
-    """One key column normalized to uint64 codes.
-
-    codes : (n,) uint64, order-preserving (ties in codes may hide real
-            differences only when ``exact`` is False).
-    exact : True if code order == value order with no ties introduced.
-    width : number of significant low bits actually used (64 if unknown).
-    """
-
-    codes: np.ndarray
-    exact: bool
-    width: int
-    isnull: np.ndarray | None = None  # (n,) bool when the column has nulls
+SIGN64 = np.uint64(0x8000000000000000)
+_MAX64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
 def _int_to_u64(arr: np.ndarray) -> np.ndarray:
-    return arr.astype(np.int64, copy=False).view(np.uint64) ^ _SIGN64
+    return arr.astype(np.int64, copy=False).view(np.uint64) ^ SIGN64
 
 
 def _float_to_u64(arr: np.ndarray) -> np.ndarray:
     # IEEE-754 total-order trick: flip all bits for negatives, sign bit
-    # for non-negatives.  NaNs sort last (all-ones exponent pattern).
-    bits = np.ascontiguousarray(arr, dtype=np.float64).view(np.uint64)
-    mask = np.where(bits >> np.uint64(63) == 1, np.uint64(0xFFFFFFFFFFFFFFFF), _SIGN64)
-    return bits ^ mask
+    # for non-negatives.  Every NaN, whatever its sign or payload, takes
+    # the largest code: Spark sorts NaN above +inf and all NaNs equal.
+    vals = np.ascontiguousarray(arr, dtype=np.float64)
+    bits = vals.view(np.uint64)
+    mask = np.where(bits >> np.uint64(63) == 1, _MAX64, SIGN64)
+    return np.where(np.isnan(vals), _MAX64, bits ^ mask)
+
+
+def _string_rank_codes(arr) -> np.ndarray:
+    """Dense rank of each value's dictionary entry: rank order == full
+    byte-collation order.  Cost: one O(n) dictionary encode plus an
+    O(u log u) sort of the u distinct values."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    denc = pc.dictionary_encode(arr)
+    order = pc.sort_indices(denc.dictionary).to_numpy().astype(np.int64)
+    # one extra slot for the NULL rows' index (an all-NULL column has an
+    # empty dictionary)
+    rank = np.zeros(len(order) + 1, dtype=np.uint64)
+    rank[order] = np.arange(len(order), dtype=np.uint64)
+    idx = pc.fill_null(denc.indices, len(order)).to_numpy(zero_copy_only=False)
+    return rank[idx]
+
+
+def normalize_arrow_column(arr) -> tuple[np.ndarray, np.ndarray | None]:
+    """Arrow column -> ``(codes, isnull)``: order-preserving uint64 codes,
+    and a bool NULL mask when the column has NULLs (else None).
+
+    The code of a NULL row is arbitrary: NULL order (first) is carried by
+    ``isnull``.  Nullable integer/boolean/timestamp columns are read via
+    ``fill_null`` + native-dtype ``to_numpy`` -- NOT the float64 round
+    trip ``to_numpy(zero_copy_only=False)`` takes for masked arrays,
+    which silently loses int64 precision above 2^53.  Raises TypeError
+    for a type with no code.
+    """
+    t = arr.type
+    isnull = np.asarray(pc.is_null(arr)) if arr.null_count else None
+    if pa.types.is_integer(t):
+        vals = pc.fill_null(arr, 0) if arr.null_count else arr
+        codes = _int_to_u64(vals.to_numpy(zero_copy_only=False))
+    elif pa.types.is_floating(t):
+        codes = _float_to_u64(arr.to_numpy(zero_copy_only=False))
+    elif pa.types.is_timestamp(t) or pa.types.is_date(t):
+        # date32 casts only to an integer of its own width
+        as_int = pc.cast(arr, pa.int32() if pa.types.is_date32(t) else pa.int64())
+        if arr.null_count:
+            as_int = pc.fill_null(as_int, 0)
+        codes = _int_to_u64(as_int.to_numpy(zero_copy_only=False))
+    elif pa.types.is_boolean(t):
+        vals = pc.fill_null(arr, False) if arr.null_count else arr
+        codes = vals.to_numpy(zero_copy_only=False).astype(np.uint64)
+    elif (
+        pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_binary(t)
+        or pa.types.is_large_binary(t)
+    ):
+        codes = _string_rank_codes(arr)
+    else:
+        raise TypeError(f"unsupported key type {t}")
+    return codes, isnull
+
+
+def key_matrix_table(tbl: pa.Table, key_cols: list[str]) -> np.ndarray | None:
+    """The ``(n, k')`` uint64 key matrix of ``tbl``, or None when a key
+    type has no code.  Each key column contributes a NULL flag column
+    (0 = NULL, so NULLs sort first) when it has NULLs, then its codes
+    (0 on NULL rows)."""
+    cols = []
+    for c in key_cols:
+        try:
+            codes, isnull = normalize_arrow_column(tbl.column(c))
+        except TypeError:
+            return None
+        if isnull is not None:
+            cols.append((~isnull).astype(np.uint64))
+            codes = np.where(isnull, np.uint64(0), codes)
+        cols.append(codes)
+    if not cols:
+        return np.zeros((tbl.num_rows, 0), dtype=np.uint64)
+    return np.column_stack(cols)
 
 
 def pack_columns_shared(mats: list[np.ndarray]) -> list[np.ndarray] | None:
@@ -59,7 +124,6 @@ def pack_columns_shared(mats: list[np.ndarray]) -> list[np.ndarray] | None:
     the packed codes are comparable ACROSS runs (per-run packing would
     subtract different minima — codes from different runs would not be
     mutually ordered).  Returns None when the shared width exceeds 64."""
-    mats = [m for m in mats]
     if not mats:
         return []
     k = mats[0].shape[1]

@@ -72,8 +72,8 @@ class LoserTreeMerge:
     ovc_compares: int = 0
     col_compares: int = 0
     _runs: list[_RunState] = field(default_factory=list)
-    _cur_off: list[int] = field(default_factory=list)
-    _cur_val: list[int] = field(default_factory=list)
+    # each run head's mutable [offset, value] OVC pair
+    _cur_ovc: list[list[int]] = field(default_factory=list)
 
     def __post_init__(self):
         for r in self.runs_in:
@@ -97,58 +97,41 @@ class LoserTreeMerge:
 
     # -- current head access -------------------------------------------------
     def _load_heads(self):
-        self._cur_off = []
-        self._cur_val = []
+        self._cur_ovc = []
         self._cur_row = []
         for rs in self._runs:
             if rs.exhausted():
-                self._cur_off.append(FENCE_OFFSET)
-                self._cur_val.append(FENCE_VALUE)
+                self._cur_ovc.append([FENCE_OFFSET, FENCE_VALUE])
                 self._cur_row.append(None)
             else:
-                self._cur_off.append(int(rs.ovc_off[rs.pos]))
-                self._cur_val.append(int(rs.ovc_val[rs.pos]))
+                self._cur_ovc.append([int(rs.ovc_off[rs.pos]), int(rs.ovc_val[rs.pos])])
                 self._cur_row.append(rs.rows[rs.pos])
 
     def _advance(self, run_idx: int):
         rs = self._runs[run_idx]
         rs.pos += 1
         if rs.exhausted():
-            self._cur_off[run_idx] = FENCE_OFFSET
-            self._cur_val[run_idx] = FENCE_VALUE
+            self._cur_ovc[run_idx] = [FENCE_OFFSET, FENCE_VALUE]
             self._cur_row[run_idx] = None
         else:
-            self._cur_off[run_idx] = int(rs.ovc_off[rs.pos])
-            self._cur_val[run_idx] = int(rs.ovc_val[rs.pos])
+            self._cur_ovc[run_idx] = [int(rs.ovc_off[rs.pos]), int(rs.ovc_val[rs.pos])]
             self._cur_row[run_idx] = rs.rows[rs.pos]
 
     # -- comparisons ----------------------------------------------------------
     def _is_less_than(self, a: int, b: int) -> tuple[bool, int]:
         """Run-a's head at-or-before run-b's head (reference isLessThan)."""
         self.ovc_compares += 1
-        off_a, off_b = self._cur_off[a], self._cur_off[b]
-        if off_a == FENCE_OFFSET and off_b == FENCE_OFFSET:
+        ovc_a, ovc_b = self._cur_ovc[a], self._cur_ovc[b]
+        if ovc_a[0] == FENCE_OFFSET and ovc_b[0] == FENCE_OFFSET:
             return True, 0
-        if off_a != off_b:
-            return off_a > off_b, 0
-        if self._cur_val[a] != self._cur_val[b]:
-            return self._cur_val[a] < self._cur_val[b], 0
-        ra, rb = self._cur_row[a], self._cur_row[b]
-        ct = 0
-        for i in range(off_a + 1, self._c):
-            ct += 1
-            if ra[i] != rb[i]:
-                self.col_compares += ct
-                return bool(ra[i] < rb[i]), ct
+        a_first, ct = compare_ovc(self._cur_row[a], ovc_a, self._cur_row[b], ovc_b)
         self.col_compares += ct
-        return True, ct
+        return a_first, ct
 
     def _charge_loser(self, run_idx: int, ct: int):
         if ct <= 0 or self._cur_row[run_idx] is None:
             return
-        pair = [self._cur_off[run_idx], self._cur_val[run_idx]]
-        update_loser_ovc(self._cur_row[run_idx], pair, ct)
-        self._cur_off[run_idx], self._cur_val[run_idx] = pair
+        update_loser_ovc(self._cur_row[run_idx], self._cur_ovc[run_idx], ct)
 
     # -- tournament -----------------------------------------------------------
     def _init_node(self, node: int) -> int:

@@ -1,4 +1,4 @@
-"""Offset-value coding (OVC) — scalar pair semantics + vectorized run codes.
+"""Offset-value coding (OVC) — the scalar pair semantics of the loser tree.
 
 The reference keeps OVC as a two-int pair ``(offset, offsetValue)`` per row
 (reference ``Iterator.h:16-18``) with a non-standard convention
@@ -15,13 +15,13 @@ The reference keeps OVC as a two-int pair ``(offset, offsetValue)`` per row
 - a row's OVC is initialized to ``(0, columns[0])`` at generation
   (reference ``Scan.cpp:104-106``).
 
-``compare_ovc`` reimplements exactly that contract (used by the exact
-loser tree for metric parity).  ``run_ovc_codes`` is the *vectorized*
-classic form used by the fast kernel: for each row of an already-sorted
-run, a single packed ``uint64`` ``(arity - offset) << 32 | value-delta``
-relative to its predecessor — the EDBT 2023 "Offset-value coding in
-database query processing" formulation (see PAPERS.md), which turns most
-merge comparisons into one integer compare.
+``compare_ovc`` is that comparison, the one ``LoserTreeMerge`` plays
+every match with; ``update_loser_ovc`` is the loser's update.  The fast
+kernel does not keep per-row pairs: it packs the whole key into one
+``uint64`` per row (``keys.pack_columns_shared``), so a merge compare is
+one integer compare (``vmerge.py``) — the effect the EDBT 2023
+"Offset-value coding in database query processing" formulation
+(PAPERS.md) gets from its codes.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ def compare_ovc(cols_a, ovc_a, cols_b, ovc_b):
 
     cols_a/cols_b : 1-D int sequences (full rows; the sort key is the
         whole row, like reference Witness/TreeOfLosers).
-    ovc_a/ovc_b   : [offset, offset_value] mutable pairs.
+    ovc_a/ovc_b   : [offset, offset_value] pairs, read only.
 
     Returns (a_first: bool, ct: int) where ``a_first`` is True when row A
     sorts at-or-before row B (True on full equality), and ``ct`` is the
@@ -84,35 +84,3 @@ def update_loser_ovc(cols, ovc, ct):
         # in C++ but is unreachable because ct <= n-1-old_offset.
         ovc[1] = cols[off] if off < n else cols[n - 1]
 
-
-def run_ovc_codes(key_mat: np.ndarray) -> np.ndarray:
-    """Vectorized classic OVC codes for a SORTED run.
-
-    key_mat : (n, k) uint64 normalized key matrix, already in sorted
-        order.  Returns (n,) uint64 codes where code[i] encodes
-        ``(k - offset_i) << 32 | low32(delta value at first diff)`` with
-        offset_i = index of first column where row i differs from row
-        i-1 (row 0 gets the max code: offset 0 against "-infinity").
-
-    Within one sorted run, comparing two rows' codes decides their order
-    whenever the codes differ; equal codes require a suffix compare.
-    This gives the fast merge a single-int-compare fast path with the
-    same effect as the reference's pairwise OVC maintenance.
-    """
-    n, k = key_mat.shape
-    codes = np.zeros(n, dtype=np.uint64)
-    if n == 0 or k == 0:
-        return codes
-    diff = key_mat[1:] != key_mat[:-1]  # (n-1, k)
-    any_diff = diff.any(axis=1)
-    first = np.where(any_diff, diff.argmax(axis=1), k)  # k => equal rows
-    arity_minus_off = (k - first).astype(np.uint64)
-    rows = np.arange(1, n)
-    vals = np.where(
-        first < k,
-        key_mat[rows, np.minimum(first, k - 1)] & np.uint64(0xFFFFFFFF),
-        np.uint64(0),
-    )
-    codes[1:] = (arity_minus_off << np.uint64(32)) | vals
-    codes[0] = (np.uint64(k) << np.uint64(32)) | (key_mat[0, 0] & np.uint64(0xFFFFFFFF))
-    return codes

@@ -13,12 +13,12 @@ neighbours so equal keys provably resolve in run order —
 ``TreeOfLosers.cpp:36`` earlier-leaf-wins), i.e. O(n log k) total work
 at NumPy/C speed.
 
-Falls back to a stable ``np.lexsort`` over the (n, k) key matrix when
-keys cannot pack into 64 bits.  String keys enter as exact dense ranks,
-so they take these integer paths too; only keys that cannot be
-normalized exactly fall back to ``pc.sort_indices`` (in the caller,
-``external_sort._merge_order``).  Only the packed path counts
-comparisons.
+This module holds only the packed merge.  The caller,
+``external_sort._merge_order``, builds the one key matrix
+(``keys.key_matrix_table``, strings as dense ranks), packs it, and falls
+back to a stable ``keys.lexsort_indices`` over the matrix when the keys
+do not pack into 64 bits, or to ``pc.sort_indices`` when a key type has
+no code.  Only the packed path counts comparisons.
 """
 
 from __future__ import annotations
@@ -124,18 +124,3 @@ def merge_runs_packed(
         entries[j : j + 2] = [(keys, idx)]
     return entries[0][1]
 
-
-def merge_runs_matrix(run_mats: list[np.ndarray]) -> np.ndarray:
-    """Merge k sorted runs given (n_i, c) uint64 key matrices.
-
-    Stable lexsort over the concatenation (runs listed in order keeps
-    ties in run order).  O(n log n) but fully vectorized; used when keys
-    don't pack into a single uint64.
-    """
-    if not run_mats:
-        return np.zeros(0, dtype=np.int64)
-    mat = np.vstack(run_mats)
-    if mat.shape[1] == 0:
-        return np.arange(mat.shape[0], dtype=np.int64)
-    order = np.lexsort(tuple(mat[:, j] for j in range(mat.shape[1] - 1, -1, -1)))
-    return order.astype(np.int64)

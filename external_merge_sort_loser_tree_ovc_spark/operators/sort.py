@@ -59,7 +59,7 @@ class _SortMetricsParam(AccumulatorParam):
         return value1
 
 
-def _partition_kernel(key_cols, budget, batch_rows, mode, checkpoint_dir, metrics):
+def _partition_kernel(key_cols, budget, batch_rows, checkpoint_dir, metrics):
     """Build the mapInArrow function (must be picklable, import-light).
     Each task adds its sorter's metrics to the ``metrics`` accumulator."""
 
@@ -85,7 +85,6 @@ def _partition_kernel(key_cols, budget, batch_rows, mode, checkpoint_dir, metric
             spill_dir=spill,
             memory_budget_rows=budget,
             batch_rows=batch_rows,
-            mode=mode,
             checkpoint_inputs=checkpoint_dir is not None,
         )
         try:
@@ -112,7 +111,6 @@ def external_sort_df(
     num_partitions: int | None = None,
     memory_budget_rows: int = DEFAULT_BUDGET_ROWS,
     batch_rows: int = DEFAULT_BATCH_ROWS,
-    mode: str = "fast",
     checkpoint_dir: str | None = None,
     skip_shuffle: bool = False,
 ) -> DataFrame:
@@ -121,6 +119,11 @@ def external_sort_df(
     pytest suite asserts exactly that — but executes the sort in our
     instrumented kernel with spill/merge metrics (``sort_metrics``) and
     optional checkpoint/resume.
+
+    Float keys sort like Spark's: every NaN, either sign, after +inf.
+    Out of scope: a float key next to a key type the kernel has no code
+    for (decimal, nested) goes through Arrow's collation sort, which
+    places NaN first.
 
     ``skip_shuffle=True`` sorts within existing partitions only (useful
     after an upstream salted range partition).
@@ -150,7 +153,7 @@ def external_sort_df(
         )
     metrics = df.sparkSession.sparkContext.accumulator({}, _SortMetricsParam())
     fn = _partition_kernel(
-        keys, memory_budget_rows, batch_rows, mode, checkpoint_dir, metrics
+        keys, memory_budget_rows, batch_rows, checkpoint_dir, metrics
     )
     src = df
     if checkpoint_dir is not None:

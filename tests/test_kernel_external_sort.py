@@ -244,7 +244,7 @@ def test_exact_mode_string_keys_counts(tmp_path):
     assert m.mode == "exact"
     exp = frame.sort_values(["s", "v"], kind="stable", ignore_index=True)
     # multiset equality + sortedness (tie order: deterministic global
-    # index, not run order — documented in _final_exact_coded)
+    # index, not run order — documented in _final_exact_merge)
     pd.testing.assert_frame_equal(
         out.sort_values(["s", "v"], kind="stable", ignore_index=True),
         exp,

@@ -9,10 +9,7 @@ from external_merge_sort_loser_tree_ovc_spark.kernel.loser_tree import (
     LoserTreeMerge,
     run_relative_ovc,
 )
-from external_merge_sort_loser_tree_ovc_spark.kernel.ovc import (
-    compare_ovc,
-    run_ovc_codes,
-)
+from external_merge_sort_loser_tree_ovc_spark.kernel.ovc import compare_ovc
 from external_merge_sort_loser_tree_ovc_spark.sources.fixtures import kernel_rows
 
 
@@ -105,7 +102,9 @@ def test_ovc_savings_on_duplicates():
 
 
 def test_ovc_compare_contract():
-    """Pair semantics from reference TreeOfLosers.cpp:13-37."""
+    """Pair semantics from reference TreeOfLosers.cpp:13-37.  This is the
+    loser tree's own comparator: ``LoserTreeMerge._is_less_than`` checks
+    the fences and plays every other match through ``compare_ovc``."""
     a = np.array([1, 2, 3, 4])
     b = np.array([1, 2, 3, 5])
     # equal offsets & values -> falls through to columns after offset
@@ -128,19 +127,6 @@ def test_run_relative_ovc_pairs():
     off, val = run_relative_ovc(rows)
     assert off.tolist() == [0, 2, 1, 2]  # first row (0, c0); dup row clamps c-1
     assert val.tolist() == [1, 2, 2, 0]
-
-
-def test_vectorized_run_ovc_codes_monotonic_when_distinct():
-    arr = kernel_rows(1000, 3, 1000000, 0, seed=9).astype(np.uint64)
-    order = np.lexsort((arr[:, 2], arr[:, 1], arr[:, 0]))
-    srt = arr[order]
-    codes = run_ovc_codes(srt)
-    # within a sorted run, codes of adjacent distinct rows never claim
-    # "earlier" for the later row: code[i] monotonicity is not total, but
-    # equal-adjacent rows must produce the dedicated equal code (k - k = 0)
-    eq = (srt[1:] == srt[:-1]).all(axis=1)
-    assert (codes[1:][eq] >> np.uint64(32) == 0).all()
-    assert (codes[1:][~eq] >> np.uint64(32) > 0).all()
 
 
 def test_geometry_formulas():

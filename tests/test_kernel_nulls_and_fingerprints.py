@@ -10,6 +10,9 @@
 4. The resume fingerprint, folded from the row-hash column that
    ``external_sort_df`` adds, sees string content past the 8-byte
    prefix, NULL placement, and rows that occur an even number of times.
+5. Float keys sort like Spark: NaN of either sign after +inf.  Exact
+   mode keeps NULLs of a whole-row integer key, and an all-NULL string
+   key sorts.
 """
 
 import numpy as np
@@ -21,7 +24,7 @@ from external_merge_sort_loser_tree_ovc_spark.kernel.external_sort import (
     ExternalSorter,
     _merge_order,
 )
-from external_merge_sort_loser_tree_ovc_spark.kernel.keys_arrow import (
+from external_merge_sort_loser_tree_ovc_spark.kernel.keys import (
     normalize_arrow_column,
 )
 from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
@@ -95,13 +98,74 @@ def test_nullable_int64_keys_above_2_53(tmp_path):
 
 def test_normalize_nullable_bool_and_timestamp():
     b = pa.chunked_array([pa.array([True, None, False])])
-    nk = normalize_arrow_column(b)
-    assert nk.codes.dtype == np.uint64 and nk.isnull is not None
+    codes, isnull = normalize_arrow_column(b)
+    assert codes.dtype == np.uint64 and isnull is not None
     ts = pa.chunked_array(
         [pa.array([1_700_000_000_000_000, None], type=pa.timestamp("us"))]
     )
-    nk2 = normalize_arrow_column(ts)
-    assert nk2.codes.dtype == np.uint64 and nk2.isnull[1]
+    codes2, isnull2 = normalize_arrow_column(ts)
+    assert codes2.dtype == np.uint64 and isnull2[1]
+
+
+def _sort_arrow(tmp_path, tbl, keys, mode, mem=4, batch=2):
+    """Sort an Arrow table under a budget that forms many runs and merges
+    them in intermediate passes (B = 2)."""
+    sorter = ExternalSorter(
+        key_cols=keys,
+        spill_dir=str(tmp_path / "s"),
+        memory_budget_rows=mem,
+        batch_rows=batch,
+        mode=mode,
+    )
+    pages = (tbl.slice(i, batch) for i in range(0, tbl.num_rows, batch))
+    return pa.concat_tables(list(sorter.sort_tables(pages))), sorter
+
+
+def _nan_as_str(xs):
+    return ["nan" if isinstance(x, float) and np.isnan(x) else x for x in xs]
+
+
+@pytest.mark.parametrize("mode", ["fast", "exact"])
+def test_nan_keys_sort_after_inf(tmp_path, mode):
+    """NaN of either sign sorts after +inf (Spark's order), NULLs first;
+    NaN used to take the code of 0.0."""
+    vals = [2.0, np.nan, -1.0, None, np.copysign(np.nan, -1.0), 0.0, -0.0,
+            np.inf, -np.inf, 0.5, None, -2.0, 3.0] * 3
+    tbl = pa.table({"k": pa.array(vals, pa.float64()), "i": range(len(vals))})
+    out, sorter = _sort_arrow(tmp_path, tbl, ["k"], mode)
+    assert sorter.metrics.passes > 2  # intermediate merges ran
+    nulls = [v for v in vals if v is None]
+    nans = [v for v in vals if v is not None and np.isnan(v)]
+    rest = sorted(v for v in vals if v is not None and not np.isnan(v))
+    assert _nan_as_str(out.column("k").to_pylist()) == _nan_as_str(
+        nulls + rest + nans
+    )
+
+
+def test_exact_mode_whole_row_int_key_keeps_nulls(tmp_path):
+    """A whole-row integer key with NULLs takes the tree that gathers the
+    Arrow rows; rebuilding rows from the int64 matrix turned every NULL
+    into INT64_MIN."""
+    tbl = pa.table({
+        "a": pa.array([5, None, 3, 1, None, 4, 2, 7], pa.int64()),
+        "b": pa.array(range(1, 9), pa.int64()),
+    })
+    out, sorter = _sort_arrow(tmp_path, tbl, ["a", "b"], "exact")
+    assert out.column("a").to_pylist() == [None, None, 1, 2, 3, 4, 5, 7]
+    assert out.column("b").to_pylist() == [2, 5, 4, 7, 3, 6, 1, 8]
+    assert sorter.metrics.ovc_compares > 0
+
+
+@pytest.mark.parametrize("mode", ["fast", "exact"])
+def test_all_null_string_key(tmp_path, mode):
+    """An all-NULL string column has an empty dictionary; its rank codes
+    used to index it out of bounds."""
+    tbl = pa.table({
+        "s": pa.array([None] * 6, pa.string()),
+        "i": pa.array([3, 1, 2, 6, 5, 4], pa.int64()),
+    })
+    out, _ = _sort_arrow(tmp_path, tbl, ["s", "i"], mode)
+    assert out.column("i").to_pylist() == [1, 2, 3, 4, 5, 6]
 
 
 def test_fingerprint_handles_exotic_non_key_columns(spark, tmp_path):

@@ -5,8 +5,8 @@ sort and preserve the witness invariants.
 Complements the fixed reference matrix (test_kernel_reference_matrix)
 with adversarial geometries hypothesis finds: budgets barely above the
 batch size, single-row batches, all-duplicate domains, nullable keys,
-mixed dtypes including strings that differ only past the 8-byte prefix
-(the OVC prefix-code exactness boundary).
+mixed dtypes including strings that differ only past a shared 8-byte
+prefix, which the kernel codes as dense ranks of the whole value.
 """
 
 import numpy as np
@@ -50,8 +50,8 @@ def test_sort_matches_pandas_any_geometry(tmp_path_factory, n, domain, mem, batc
                 [None if with_null and (v % 5 == 0) else int(v) for v in k],
                 dtype="Int64",
             ),
-            # strings sharing an 8-byte prefix: exercises the prefix-code
-            # exactness fallback
+            # strings sharing an 8-byte prefix: exercises rank codes over
+            # shared prefixes
             "s": [f"prefix00{v % 3}{'x' * int(v % 4)}" for v in k],
             "payload": np.arange(n),
         }

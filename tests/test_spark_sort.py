@@ -2,6 +2,7 @@
 lineage metrics, salting, checkpoint/resume at the DataFrame level."""
 
 import datetime
+import math
 import os
 
 import pytest
@@ -54,6 +55,25 @@ def test_external_sort_matches_orderby(spark, lineitem):
         a = [tuple(r) for r in ours.select(*keys).collect()]
         b = [tuple(r) for r in theirs.select(*keys).collect()]
         assert a == b
+
+
+@pytest.mark.parametrize("partitions", [1, 2])
+def test_float_keys_match_orderby(spark, partitions):
+    """NaN of either sign sorts after +inf and NULLs first, as in orderBy;
+    the kernel used to sort NaN as 0.0.  A tight budget makes it merge."""
+    nan = float("nan")
+    vals = [2.0, nan, -1.0, None, -nan, 0.0, -0.0, float("inf"), 0.5,
+            float("-inf"), None, -2.0, 3.0, nan]
+    df = spark.createDataFrame([(v,) for v in vals], "k double")
+    ours = external_sort_df(
+        df, ["k"], num_partitions=partitions, memory_budget_rows=4, batch_rows=2
+    )
+
+    def canon(frame):
+        return ["nan" if r.k is not None and math.isnan(r.k) else r.k
+                for r in frame.collect()]
+
+    assert canon(ours) == canon(df.orderBy("k"))
 
 
 def test_witness_invariants_roundtrip(spark, lineitem):
