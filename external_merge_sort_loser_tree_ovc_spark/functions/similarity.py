@@ -14,9 +14,9 @@ Operators:
   the broadcast query block (NumPy matmul), keeps per-batch top-k, and a
   final window picks global top-k.  The big side never shuffles; only
   n_queries*k candidate rows per batch move.
-- ``ann_topk_cosine``: exact cosine top-k entirely in Catalyst
-  built-ins (zip_with/aggregate int64 dot product, broadcast query
-  block, integer-derived rank key) — zero Python in the hot path.
+- ``ann_topk_cosine_arrow``: exact cosine top-k — the same broadcast
+  query block and per-batch int64 Gram matmul, ranked by an
+  integer-derived key with one correctly-rounded double division.
 - ``ann_lsh_bucketed``: the approximate scale path — deterministic
   sign-random-projection buckets (splitmix64 planes) with query-side
   multi-probe (2^m lowest-|proj| sign flips); the table side emits one
@@ -47,12 +47,6 @@ SCALE = 1000
 # kernels (~64 MB of int64 at the default).  Module-level so tests can
 # shrink it to force multi-chunk execution paths on small fixtures.
 GRAM_CHUNK_ELEMS = 1 << 23
-
-
-def _quant_expr_spark(col: str) -> str:
-    return (
-        f"transform({col}, x -> CAST(FLOOR(CAST(x AS DOUBLE) * {SCALE} + 0.5) AS BIGINT))"
-    )
 
 
 def _quant_expr_duck(col: str) -> str:
@@ -211,73 +205,6 @@ SELECT * FROM r WHERE rank <= {k}
 """
 
 
-def ann_topk_cosine(
-    vectors: DataFrame,
-    query_ids: list[int],
-    k: int,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_pred: str | None = None,
-) -> DataFrame:
-    """Exact cosine top-k, PURE Catalyst (zero Python in the hot path):
-    the quantized dot product and squared norm are ``zip_with`` +
-    ``aggregate`` built-ins (whole-stage codegen), the query block is a
-    broadcast hash join, and ranking uses an integer-derived key.
-
-    Exact ranking without float dot products: for one query q,
-    cos(q,x) order == order of sign(dot)*dot^2 / |x|^2 (signed square
-    monotone in cos for fixed q).  dot^2 <= (SCALE^2 * dim)^2 ~ 1e12 and
-    |x|^2 ~ 1e6 are both < 2^53, so the one double DIVISION is
-    correctly rounded from exactly-representable int64 inputs — bit-
-    identical in any IEEE-754 engine (Spark and DuckDB agree), while
-    the emitted gate columns (dot, norm2, rank) stay pure int64.
-
-    Returns (query_id, neighbor_id, dot, norm2, rank).
-    """
-    q = (
-        _query_rows(vectors, id_col, query_ids, query_pred)
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.expr(_quant_expr_spark(vec_col)).alias("qe"),
-        )
-    )
-    x = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(_quant_expr_spark(vec_col)).alias("xe"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "xe", lambda a, b: a * b), F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    norm2 = F.aggregate(
-        F.expr("transform(xe, v -> v * v)"), F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        x.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("dot", dot)
-        .withColumn("norm2", norm2)
-        # a zero-quantized vector has no direction: cosine undefined,
-        # and 0/0 = NaN would sort FIRST under DESC — exclude, oracle
-        # applies the identical predicate
-        .filter(F.col("norm2") > 0)
-        .withColumn(
-            "_ck",
-            (F.signum("dot") * F.col("dot") * F.col("dot")).cast("double")
-            / F.col("norm2").cast("double"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_ck").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "norm2", "rank")
-    )
-
-
 def ann_topk_cosine_arrow(
     vectors: DataFrame,
     query_ids: list[int],
@@ -287,20 +214,25 @@ def ann_topk_cosine_arrow(
     vec_col: str = "embedding",
     query_pred: str | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k, Arrow scale path: bit-identical output to
-    ``ann_topk_cosine`` (same quantized int64 dot/norm and the same
-    one-double-division rank key — every operation below 2^53 is
-    exactly representable, and NumPy/Spark/DuckDB all apply the same
-    IEEE-754 correctly-rounded division), but the Gram matrix is a
-    NumPy int64 matmul per Arrow batch against the broadcast query
-    block instead of per-element Catalyst lambdas.
+    """Exact cosine top-k: the Gram matrix is a NumPy int64 matmul per
+    Arrow batch against the broadcast query block, over the quantized
+    int64 vectors.
 
-    Why this exists alongside the pure-Catalyst version: Spark's
-    higher-order functions (zip_with/aggregate) are interpreted per
-    ELEMENT, outside whole-stage codegen — measured 92 s vs 4 s for the
-    matmul path at sf1 (400 queries x 20k dim-64 vectors, round-4 sf1
-    gate).  The big side still never shuffles; only n_queries*k
-    candidate rows per batch move."""
+    Exact ranking without float dot products: for one query q,
+    cos(q,x) order == order of sign(dot)*dot^2 / |x|^2 (signed square
+    monotone in cos for fixed q).  dot^2 <= (SCALE^2 * dim)^2 ~ 1e12 and
+    |x|^2 ~ 1e6 are both < 2^53, so the one double DIVISION is
+    correctly rounded from exactly-representable int64 inputs — bit-
+    identical in NumPy, Spark and DuckDB (the oracle), while the emitted
+    columns (dot, norm2, rank) stay pure int64.  Vectors with a zero
+    quantized norm have no direction and are excluded, as in the oracle.
+
+    Per-element Catalyst lambdas (zip_with/aggregate) evaluate outside
+    whole-stage codegen — measured 92 s vs 4 s for this matmul path at
+    sf1 (400 queries x 20k dim-64 vectors).  The big side never
+    shuffles; only n_queries*k candidate rows per batch move.
+
+    Returns (query_id, neighbor_id, dot, norm2, rank)."""
     spark = vectors.sparkSession
     qdf = (
         _query_rows(vectors, id_col, query_ids, query_pred)
@@ -335,7 +267,7 @@ def ann_topk_cosine_arrow(
                 cid, cd, cn = p_ids[mask], dots[mask, j], norm2[mask]
                 if len(cid) == 0:
                     continue
-                # identical rank key and tie-break as the Catalyst op:
+                # rank key and tie-break of the final window:
                 # sign(dot)*dot^2 / norm2 desc, neighbor_id asc
                 ck = np.sign(cd).astype(np.float64) * cd.astype(
                     np.float64

@@ -26,13 +26,12 @@ key codes per row -- never a whole-partition table.
 
 The data plane is Arrow end to end: one key matrix
 (``keys.key_matrix_table``, read straight from Arrow buffers) drives run
-formation, every fast merge and the counted loser-tree merge; row
-reordering is ``Table.take`` (C++), spills are Arrow IPC files, and key
-types with no code fall back to ``pyarrow.compute.sort_indices`` (C++
-stable sort) — pandas appears only in the compatibility adapter
-``sort()``.  This removed the
-pandas<->Arrow string round-trips that dominated the profile (5 of 9
-seconds per 250k-row partition).
+formation, every fast merge and the counted loser-tree merge, so every
+sort compare is a compare of ``keys.py`` codes (a key type with no code
+raises TypeError); row reordering is ``Table.take`` (C++), spills are
+Arrow IPC files, and pandas appears only in the compatibility adapter
+``sort()``.  This removed the pandas<->Arrow string round-trips that
+dominated the profile (5 of 9 seconds per 250k-row partition).
 
 Instrumentation mirrors the reference's printouts (``Sort.cpp:90-100``,
 ``Sort.cpp:189-191``): W, B, X, merge depth, spill rows, pass count,
@@ -51,7 +50,6 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from . import keys as K
 from . import vmerge
@@ -80,7 +78,7 @@ class SortMetrics:
     # Comparison counts, by mode.  fast: pairwise merge-path head-to-
     # head events, over every packed merge, whose packed codes differ
     # (ovc) or tie (col) -- vmerge.merge2_compare_counts; both stay 0
-    # when the lexsort or collation fallback did the merge.  exact: the
+    # when the keys did not pack and a lexsort did the merge.  exact: the
     # loser tree's OVC-resolved (ovc) and column (col) comparisons.
     ovc_compares: int = 0
     col_compares: int = 0
@@ -97,25 +95,14 @@ def _sort_table(tbl: pa.Table, key_cols: list[str]) -> pa.Table:
 
     Key matrix + np.lexsort (the cache-run analogue of the reference's
     in-RAM sort, ``DRAM.cpp:362-445``, with ``take`` instead of the
-    in-place permutation ``DRAM.cpp:338-354``); key types with no code
-    -> Arrow's C++ stable sort.
+    in-place permutation ``DRAM.cpp:338-354``).
     """
     if tbl.num_rows == 0:
         return tbl
-    mat = key_matrix_table(tbl, key_cols)
-    if mat is None:
-        return tbl.take(_collation_order(tbl, key_cols))
-    order = K.lexsort_indices(mat)
+    order = K.lexsort_indices(key_matrix_table(tbl, key_cols))
     if _is_trivial(order):
         return tbl
     return tbl.take(pa.array(order))
-
-
-def _collation_order(tbl: pa.Table, key_cols: list[str]) -> pa.Array:
-    return pc.sort_indices(
-        tbl, sort_keys=[(c, "ascending") for c in key_cols],
-        null_placement="at_start",
-    )
 
 
 def _is_trivial(order: np.ndarray) -> bool:
@@ -136,18 +123,15 @@ def _merge_order(
     ``counters``: optional {"ovc", "col"} dict accumulated with the
     packed-path comparison counts (``vmerge.merge2_compare_counts``) —
     instrumentation from the PRODUCTION merge, not a shadow sort.  The
-    lexsort/collation fallbacks perform no countable head-to-head events
-    (one stable sort) and leave the counters untouched.
+    lexsort used when the keys do not pack performs no countable
+    head-to-head events (one stable sort) and leaves the counters
+    untouched.
     """
     big = pa.concat_tables(tables, promote_options="default")
     # normalize ONCE over the concatenation, then slice per-run ranges:
     # string ranks are only comparable within one table, and the null
     # flag column exists only when some run has nulls
     mat = key_matrix_table(big, key_cols)
-    if mat is None:
-        # a stable sort of runs sorted in the same collation is a merge:
-        # every run is still consumed in order
-        return _collation_order(big, key_cols).to_numpy().astype(np.int64)
     bounds = np.cumsum([0] + [t.num_rows for t in tables])
     packed = K.pack_columns_shared(
         [mat[bounds[i] : bounds[i + 1]] for i in range(len(tables))]
@@ -414,8 +398,7 @@ class ExternalSorter:
                     yield out
             # instrumentation comes from the one production merge path
             # (packed merge-path counts) whenever it performed the final
-            # merge — including an exact-mode key the tree can't code
-            # (the exact tree sets its own reference-faithful counts)
+            # merge (the exact tree sets its own reference-faithful counts)
             m.ovc_compares = self._cmp.get("ovc", 0)
             m.col_compares = self._cmp.get("col", 0)
         self._commit(store, "done", metrics=m.as_dict())
@@ -477,7 +460,7 @@ class ExternalSorter:
 
     def _final_exact_merge(self, store: RunStore, sources: list):
         """The counted loser-tree final merge over fully read runs, or
-        None when there is nothing to merge or a key type has no code.
+        None when there is nothing to merge.
 
         The tree's rows are the key matrix shifted by 2^63 into int64
         (an order-preserving map).  When the key is the whole schema,
@@ -492,10 +475,7 @@ class ExternalSorter:
             return None
         tables = [self._read_run(store, s) for s in sources]
         big = pa.concat_tables(tables, promote_options="default")
-        mat = key_matrix_table(big, self.key_cols)
-        if mat is None:
-            return None
-        mat = (mat ^ K.SIGN64).view(np.int64)
+        mat = (key_matrix_table(big, self.key_cols) ^ K.SIGN64).view(np.int64)
         whole_row = (
             list(self.key_cols) == big.schema.names
             and mat.shape[1] == len(self.key_cols)  # no NULL flag column

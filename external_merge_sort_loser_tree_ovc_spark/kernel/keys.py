@@ -3,21 +3,23 @@ decides how a key column becomes ``uint64`` codes.
 
 The reference engine sorts rows of int32 columns lexicographically
 (reference ``TreeOfLosers.cpp:13-37``).  Our kernel generalizes the key
-domain to the types a web-page table needs (ints, floats, dates,
-timestamps, booleans, strings/bytes) by reading every key column
-straight from its Arrow buffers into ``uint64`` codes such that
+domain to the types a web-page table needs (ints, floats, decimals,
+dates, timestamps, durations, booleans, strings/bytes) by reading every
+key column straight from its Arrow buffers into ``uint64`` codes such that
 ``uint64`` compare == Spark's ascending compare.  This is the vectorized
 analogue of the reference's OVC thesis ("most comparisons become a
 single machine-integer compare", reference ``README.md:4-5``): after
 normalization, one array compare per column — and, when the packed
 width allows, one compare for the *whole* key.
 
-Every code is exact (no false ties).  Strings and binaries take dense
-ranks of their dictionary, so their codes are comparable only within
-the table they were computed from; callers normalize the concatenation
-of everything they compare.  Key types with no code (decimal, nested)
-make ``key_matrix_table`` return None, and the caller sorts with
-Arrow's typed collation instead.
+This is the package's one definition of key order: run formation,
+every merge, the partitioner's bounds sample and the sortedness witness
+all compare these codes.  Every code is exact (no false ties).
+Strings, binaries and decimals take dense ranks of their dictionary
+(exact at any decimal precision), so their codes are comparable only
+within the table they were computed from; callers normalize the
+concatenation of everything they compare.  A key type with no code
+(struct, list, map) makes ``key_matrix_table`` raise TypeError.
 """
 
 from __future__ import annotations
@@ -44,10 +46,11 @@ def _float_to_u64(arr: np.ndarray) -> np.ndarray:
     return np.where(np.isnan(vals), _MAX64, bits ^ mask)
 
 
-def _string_rank_codes(arr) -> np.ndarray:
-    """Dense rank of each value's dictionary entry: rank order == full
-    byte-collation order.  Cost: one O(n) dictionary encode plus an
-    O(u log u) sort of the u distinct values."""
+def _rank_codes(arr) -> np.ndarray:
+    """Dense rank of each value's dictionary entry: rank order == byte
+    order for strings and binaries, numeric order for decimals.  Cost:
+    one O(n) dictionary encode plus an O(u log u) sort of the u distinct
+    values."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     denc = pc.dictionary_encode(arr)
@@ -68,8 +71,9 @@ def normalize_arrow_column(arr) -> tuple[np.ndarray, np.ndarray | None]:
     ``isnull``.  Nullable integer/boolean/timestamp columns are read via
     ``fill_null`` + native-dtype ``to_numpy`` -- NOT the float64 round
     trip ``to_numpy(zero_copy_only=False)`` takes for masked arrays,
-    which silently loses int64 precision above 2^53.  Raises TypeError
-    for a type with no code.
+    which silently loses int64 precision above 2^53.  Durations take
+    their integer value; an all-NULL (null-typed) column codes 0.
+    Raises TypeError for a type with no code.
     """
     t = arr.type
     isnull = np.asarray(pc.is_null(arr)) if arr.null_count else None
@@ -78,7 +82,7 @@ def normalize_arrow_column(arr) -> tuple[np.ndarray, np.ndarray | None]:
         codes = _int_to_u64(vals.to_numpy(zero_copy_only=False))
     elif pa.types.is_floating(t):
         codes = _float_to_u64(arr.to_numpy(zero_copy_only=False))
-    elif pa.types.is_timestamp(t) or pa.types.is_date(t):
+    elif pa.types.is_timestamp(t) or pa.types.is_date(t) or pa.types.is_duration(t):
         # date32 casts only to an integer of its own width
         as_int = pc.cast(arr, pa.int32() if pa.types.is_date32(t) else pa.int64())
         if arr.null_count:
@@ -92,24 +96,24 @@ def normalize_arrow_column(arr) -> tuple[np.ndarray, np.ndarray | None]:
         or pa.types.is_large_string(t)
         or pa.types.is_binary(t)
         or pa.types.is_large_binary(t)
+        or pa.types.is_decimal(t)
     ):
-        codes = _string_rank_codes(arr)
+        codes = _rank_codes(arr)
+    elif pa.types.is_null(t):
+        codes = np.zeros(len(arr), dtype=np.uint64)
     else:
-        raise TypeError(f"unsupported key type {t}")
+        raise TypeError(f"no sort code for key type {t}")
     return codes, isnull
 
 
-def key_matrix_table(tbl: pa.Table, key_cols: list[str]) -> np.ndarray | None:
-    """The ``(n, k')`` uint64 key matrix of ``tbl``, or None when a key
-    type has no code.  Each key column contributes a NULL flag column
-    (0 = NULL, so NULLs sort first) when it has NULLs, then its codes
-    (0 on NULL rows)."""
+def key_matrix_table(tbl: pa.Table, key_cols: list[str]) -> np.ndarray:
+    """The ``(n, k')`` uint64 key matrix of ``tbl``.  Each key column
+    contributes a NULL flag column (0 = NULL, so NULLs sort first) when
+    it has NULLs, then its codes (0 on NULL rows).  Raises TypeError
+    for a key type with no code."""
     cols = []
     for c in key_cols:
-        try:
-            codes, isnull = normalize_arrow_column(tbl.column(c))
-        except TypeError:
-            return None
+        codes, isnull = normalize_arrow_column(tbl.column(c))
         if isnull is not None:
             cols.append((~isnull).astype(np.uint64))
             codes = np.where(isnull, np.uint64(0), codes)

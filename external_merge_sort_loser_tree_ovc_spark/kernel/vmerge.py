@@ -15,10 +15,10 @@ at NumPy/C speed.
 
 This module holds only the packed merge.  The caller,
 ``external_sort._merge_order``, builds the one key matrix
-(``keys.key_matrix_table``, strings as dense ranks), packs it, and falls
-back to a stable ``keys.lexsort_indices`` over the matrix when the keys
-do not pack into 64 bits, or to ``pc.sort_indices`` when a key type has
-no code.  Only the packed path counts comparisons.
+(``keys.key_matrix_table``, strings and decimals as dense ranks), packs
+it, and falls back to a stable ``keys.lexsort_indices`` over the matrix
+when the keys do not pack into 64 bits.  Only the packed path counts
+comparisons.
 """
 
 from __future__ import annotations

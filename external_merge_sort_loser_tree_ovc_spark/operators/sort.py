@@ -34,11 +34,12 @@ import os
 import shutil
 import tempfile
 
-import pyarrow.compute as pc
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.external_sort import ROW_HASH_COL, ExternalSorter
+from ..kernel.keys import key_matrix_table, lexsort_indices
 
 DEFAULT_BUDGET_ROWS = 1 << 20
 DEFAULT_BATCH_ROWS = 1 << 16
@@ -120,10 +121,10 @@ def external_sort_df(
     instrumented kernel with spill/merge metrics (``sort_metrics``) and
     optional checkpoint/resume.
 
-    Float keys sort like Spark's: every NaN, either sign, after +inf.
-    Out of scope: a float key next to a key type the kernel has no code
-    for (decimal, nested) goes through Arrow's collation sort, which
-    places NaN first.
+    Float keys sort like Spark's: every NaN, either sign, after +inf;
+    decimals sort exactly at any precision.  A key type the kernel has
+    no code for (struct, array, map) raises TypeError here, while the
+    plan is built, before any job runs.
 
     ``skip_shuffle=True`` sorts within existing partitions only (useful
     after an upstream salted range partition).
@@ -146,6 +147,8 @@ def external_sort_df(
     PySpark keeps for the life of the driver: the footprint grows with
     the number of calls, not with the input.
     """
+    # raises TypeError for a key type with no code, before any job runs
+    key_matrix_table(to_arrow_schema(df.select(*keys).schema).empty_table(), keys)
     if not skip_shuffle:
         # no salt, so key-only hashes suffice: the sample scans only keys
         df = salted_repartition_by_range(
@@ -187,8 +190,8 @@ def sort_metrics(df: DataFrame) -> list[dict]:
 
 
 # key types whose Python values round-trip through F.lit(v).cast(type) and
-# whose Arrow sort order equals Spark's struct order (strings as UTF-8
-# bytes, NULLs first)
+# whose key-code order (kernel/keys.py) equals Spark's struct order
+# (strings as UTF-8 bytes, NULLs first)
 _SORTABLE_BOUND_TYPES = {
     "tinyint", "smallint", "int", "bigint", "string", "date", "boolean",
 }
@@ -283,9 +286,7 @@ def salted_repartition_by_range(
     )
     if sample.num_rows < 4 * n:  # degenerate tiny input: use the full data
         sample = collect(df)
-    order = pc.sort_indices(
-        sample, sort_keys=[(k, "ascending") for k in rkeys], null_placement="at_start"
-    ).to_numpy()
+    order = lexsort_indices(key_matrix_table(sample, rkeys))
     m = len(order)
     picks = [order[(i * (m - 1)) // n] for i in range(1, n)] if m else []
     bounds = sample.take(picks).to_pylist()  # n - 1 rows, as dicts

@@ -10,19 +10,28 @@ any two points of a plan:
 
 Spark mapping (SURVEY §2.1): the FULL witness — count, parity
 (order-insensitive xor fold, hence shuffle-safe), and per-partition
-inversions — rides ONE ``mapInPandas`` pass over the sorted output
-(``sortedness_report`` with ``parity_terms``), plus a driver-side check
-that each partition's first key is >= the previous partition's last key
-(global order across range partitions).  ``witness_summary`` remains
-for witnessing arbitrary points of a plan where no inversion scan is
-wanted.
+inversions — rides ONE ``mapInArrow`` pass over the key and parity
+columns of the sorted output (``sortedness_report`` with
+``parity_terms``).  Inversions compare the kernel's own key codes
+(``kernel/keys.py``), the one definition of key order the sort uses: a
+row is out of order exactly when its code at its offset-value-coding
+offset is below its predecessor's (*Offset-value coding in database
+query processing*, EDBT 2023).  Each task also returns its first and
+last key rows (``edges``, Arrow IPC), and ``assert_globally_sorted``
+runs the same check over the edges of all partitions in partition
+order (global order across range partitions).  ``witness_summary``
+remains for witnessing arbitrary points of a plan where no inversion
+scan is wanted.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+
+from ..kernel.keys import key_matrix_table
+from ..kernel.loser_tree import run_relative_ovc
 
 
 def witness_summary(df: DataFrame, cols: list[str] | None = None) -> dict:
@@ -42,17 +51,33 @@ def witness_summary(df: DataFrame, cols: list[str] | None = None) -> dict:
     return {"rows": row["rows"], "parity": row["parity"] or 0}
 
 
+def _out_of_order(tbl: pa.Table, keys: list[str]) -> np.ndarray:
+    """Bool mask over rows 1.. of ``tbl``: True where the row sorts
+    before its predecessor, i.e. its key code at its OVC offset (the
+    first key column where it differs from the predecessor) is below
+    the predecessor's code there."""
+    if tbl.num_rows < 2:
+        return np.zeros(0, dtype=bool)
+    mat = key_matrix_table(tbl, keys)
+    off, val = run_relative_ovc(mat)
+    return val[1:] < mat[np.arange(len(mat) - 1), off[1:]]
+
+
 def sortedness_report(
     df: DataFrame,
     keys: list[str],
     parity_terms: list[tuple[str, int]] | None = None,
-) -> pd.DataFrame:
-    """Per-partition inversion counts + boundary keys.
+):
+    """Per-partition inversion counts + boundary key rows.
 
-    Returns a pandas frame (pid, rows, inversions, parity, first_key,
-    last_key) collected to the driver; ``assert_globally_sorted``
-    interprets it.  The heavy work (inversion counting) is vectorized
-    NumPy inside each task — only 1 row per partition is collected.
+    Returns a pandas frame (pid, rows, inversions, parity, edges)
+    collected to the driver; ``assert_globally_sorted`` interprets it.
+    The inversion count is vectorized inside each task over the key
+    codes of each Arrow batch, with the previous batch's last row in
+    front so string ranks stay comparable across the batch boundary;
+    only 1 row per partition is collected.  ``edges`` holds the
+    partition's first and last key rows as Arrow IPC bytes (NULL for an
+    empty partition).
 
     ``parity_terms``: optional [(col, weight), ...] — each partition
     also xor-folds sum(col*weight) per row (int64, the reference's
@@ -62,127 +87,71 @@ def sortedness_report(
     SQL form bit_xor(c1*w1 + c2*w2 + ...) exactly (int64 arithmetic,
     no overflow for the gate's key ranges).
     """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("pid", LongType()),
-            StructField("rows", LongType()),
-            StructField("inversions", LongType()),
-            StructField("parity", LongType()),
-            StructField("first_key", StringType()),
-            StructField("last_key", StringType()),
-        ]
-    )
-
     key_list = list(keys)
     terms = list(parity_terms or [])
 
-    def check(iterator):
+    def check(batches):
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        total = 0
-        inv = 0
-        parity = 0
-        first = None
-        last = None
-        prev_tail = None
-        for pdf in iterator:
-            if pdf.empty:
+        ctx = TaskContext.get()
+        rows = inv = parity = 0
+        first = last = None
+        for b in batches:
+            if b.num_rows == 0:
                 continue
             if terms:
-                mix = np.zeros(len(pdf), dtype=np.int64)
+                mix = np.zeros(b.num_rows, dtype=np.int64)
                 for c, w in terms:
-                    mix += pdf[c].to_numpy(dtype=np.int64) * np.int64(w)
-                # pdf is non-empty here, so mix always has elements
+                    mix += b.column(c).to_numpy().astype(np.int64) * np.int64(w)
                 parity ^= int(np.bitwise_xor.reduce(mix))
-            sub = pdf[key_list]
-            if prev_tail is not None:
-                sub = pd.concat([prev_tail, sub], ignore_index=True)
-            mat = sub.to_numpy()
-            lt = _lex_less(mat[1:], mat[:-1])  # next < prev -> inversion
-            inv += int(lt.sum())
+            cur = pa.Table.from_batches([b.select(key_list)])
             if first is None:
-                first = _key_repr(sub.iloc[0])
-            prev_tail = sub.iloc[-1:].reset_index(drop=True)
-            last = _key_repr(sub.iloc[-1])
-            total += len(pdf)
-        yield pd.DataFrame(
-            {
-                "pid": [pid],
-                "rows": [total],
-                "inversions": [inv],
-                "parity": [parity],
-                "first_key": [first if first is not None else ""],
-                "last_key": [last if last is not None else ""],
-            }
-        )
+                first = cur.slice(0, 1)
+            else:
+                cur = pa.concat_tables([last, cur])
+            inv += int(_out_of_order(cur, key_list).sum())
+            last = cur.slice(cur.num_rows - 1)
+            rows += b.num_rows
+        edges = None
+        if first is not None:
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, first.schema) as w:
+                w.write_table(pa.concat_tables([first, last]))
+            edges = sink.getvalue().to_pybytes()
+        yield pa.RecordBatch.from_pydict({
+            "pid": [ctx.partitionId() if ctx is not None else 0],
+            "rows": [rows],
+            "inversions": [inv],
+            "parity": [parity],
+            "edges": pa.array([edges], pa.binary()),
+        })
 
-    rep = df.mapInPandas(check, schema=out_schema).toPandas()
+    cols = list(dict.fromkeys(key_list + [c for c, _ in terms]))
+    rep = df.select(*cols).mapInArrow(
+        check, "pid bigint, rows bigint, inversions bigint, parity bigint, edges binary"
+    ).toPandas()
     return rep.sort_values("pid", ignore_index=True)
-
-
-def _lex_less(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Row-wise a < b lexicographically (vectorized; numpy handles both
-    numeric and string object arrays elementwise)."""
-    n = len(a)
-    out = np.zeros(n, dtype=bool)
-    decided = np.zeros(n, dtype=bool)
-    for j in range(a.shape[1]):
-        aj, bj = a[:, j], b[:, j]
-        lt = aj < bj
-        gt = aj > bj
-        out |= lt & ~decided
-        decided |= lt | gt
-    return out
-
-
-def _cmp(x, y):
-    if x is None and y is None:
-        return 0
-    if x is None:
-        return -1
-    if y is None:
-        return 1
-    return -1 if x < y else (1 if x > y else 0)
-
-
-def _key_repr(row: pd.Series) -> str:
-    import json
-
-    return json.dumps([None if pd.isna(v) else str(v) for v in row.tolist()])
 
 
 def assert_globally_sorted(df: DataFrame, keys: list[str], boundary_types=None):
     """Raises AssertionError unless df is globally sorted by keys
     (zero within-partition inversions + ordered partition boundaries).
 
-    Boundary keys travel as JSON strings; they are re-typed with
-    ``boundary_types`` (list of callables, default str) before compare.
+    The boundaries are checked by the same key-code compare as the
+    rows: the edge rows of the non-empty partitions, in partition
+    order, must show zero inversions.  ``boundary_types`` is accepted
+    and ignored (boundary keys keep their Arrow types).
     """
-    import json
-
     rep = sortedness_report(df, keys)
     bad = rep[rep.inversions > 0]
-    assert bad.empty, f"inversions found: {bad.to_dict('records')}"
-    nonempty = rep[rep.rows > 0].reset_index(drop=True)
-    types = boundary_types or [str] * len(keys)
-
-    def decode(s):
-        vals = json.loads(s)
-        return tuple(
-            None if v is None else t(v) for v, t in zip(vals, types)
-        )
-
-    for i in range(1, len(nonempty)):
-        prev_last = decode(nonempty.last_key[i - 1])
-        cur_first = decode(nonempty.first_key[i])
-        for a, b in zip(prev_last, cur_first):
-            c = _cmp(a, b)
-            if c < 0:
-                break
-            assert c <= 0, (
-                f"partition boundary out of order: {prev_last} > {cur_first}"
-            )
+    if not bad.empty:  # raised, not asserted: the check must survive -O
+        records = bad.drop(columns="edges").to_dict("records")
+        raise AssertionError(f"inversions found: {records}")
+    edges = [pa.ipc.open_stream(e).read_all() for e in rep.edges[rep.rows > 0]]
+    if edges:
+        seq = pa.concat_tables(edges)
+        wrong = np.flatnonzero(_out_of_order(seq, list(keys)))
+        if len(wrong):
+            prev, cur = seq.slice(wrong[0], 2).to_pylist()
+            raise AssertionError(f"partition boundary out of order: {prev} > {cur}")
     return rep

@@ -378,13 +378,9 @@ def q_ann_topk(spark, sf_dir):
 
 def q_ann_cosine(spark, sf_dir):
     """Brute-force cosine top-k via the Arrow scale path (int64 Gram
-    matmul per batch against the broadcast query block) — bit-identical
-    to the pure-Catalyst ann_topk_cosine (same quantized integers, same
-    one-double-division rank key), but ~23x faster at sf1 because
-    Spark's higher-order functions evaluate per ELEMENT outside codegen
-    (92 s -> 4 s measured, round-4 sf1 gate).  The Catalyst operator
-    stays exported with its own pure-JVM plan contract in
-    tests/test_plan_shapes.py; both verify against the same oracle."""
+    matmul per batch against the broadcast query block), ranked by the
+    one-double-division key the DuckDB oracle computes from the same
+    quantized integers, so the two agree bit for bit."""
     emb = _read(spark, sf_dir, "embeddings")
     return ann_topk_cosine_arrow(
         emb, None, ANN_K, query_pred=f"vec_id % {ANN_QUERY_MOD} = 0"

@@ -21,7 +21,7 @@ def _duck(sql: str) -> pd.DataFrame:
     return con.sql(sql).df()
 
 
-def _cmp(spark_df, oracle_pdf, sort_cols):
+def _check_oracle(spark_df, oracle_pdf, sort_cols):
     got = spark_df.toPandas().sort_values(sort_cols, ignore_index=True)
     exp = oracle_pdf.sort_values(sort_cols, ignore_index=True)
     assert list(got.columns) == list(exp.columns) or set(got.columns) == set(exp.columns)
@@ -78,7 +78,7 @@ def test_text_features_vs_oracle(spark, docs):
 
     got = with_text_features(docs.select("doc_id", "text")).drop("text")
     exp = _duck(text_features_oracle_sql("documents", "doc_id"))
-    out = _cmp(got, exp, ["doc_id"])
+    out = _check_oracle(got, exp, ["doc_id"])
     assert out.token_count.min() >= 1
     assert set(out.lang_pred.unique()) <= {"en", "other"}
 
@@ -91,7 +91,7 @@ def test_exact_dedup_vs_oracle(spark, docs):
 
     got = exact_dedup_survivors(docs, "doc_id")
     exp = _duck(exact_dedup_oracle_sql("documents", "doc_id"))
-    _cmp(got, exp, ["survivor_id"])
+    _check_oracle(got, exp, ["survivor_id"])
 
 
 def test_minhash_lsh_vs_oracle(spark, docs):
@@ -102,7 +102,7 @@ def test_minhash_lsh_vs_oracle(spark, docs):
 
     got = minhash_lsh_pairs(docs, "doc_id")
     exp = _duck(minhash_lsh_oracle_sql("documents", "doc_id"))
-    out = _cmp(got, exp, ["id_a", "id_b"])
+    out = _check_oracle(got, exp, ["id_a", "id_b"])
     # sanity: exact duplicate texts must be LSH candidates
     dups = _duck(
         "SELECT MIN(doc_id) AS a, MAX(doc_id) AS b FROM documents "
@@ -122,7 +122,7 @@ def test_ngram_jaccard_vs_oracle(spark, docs):
 
     got = ngram_jaccard_pairs(docs, "doc_id")
     exp = _duck(ngram_jaccard_oracle_sql("documents", "doc_id"))
-    out = _cmp(got, exp, ["id_a", "id_b"])
+    out = _check_oracle(got, exp, ["id_a", "id_b"])
     assert len(out) > 0  # duplicates exist in the fixture corpus
 
 
@@ -135,7 +135,7 @@ def test_ann_topk_vs_oracle(spark, emb):
     qids = [0, 7, 21, 42]
     got = ann_topk(emb, qids, k=5)
     exp = _duck(ann_topk_oracle_sql("embeddings", qids, 5))
-    _cmp(got, exp, ["query_id", "rank"])
+    _check_oracle(got, exp, ["query_id", "rank"])
 
 
 def test_neardup_pairs_vs_oracle(spark, emb):
@@ -150,7 +150,7 @@ def test_neardup_pairs_vs_oracle(spark, emb):
     )
     got = neardup_pairs(emb, thr)
     exp = _duck(neardup_oracle_sql("embeddings", thr))
-    out = _cmp(got, exp, ["id_a", "id_b"])
+    out = _check_oracle(got, exp, ["id_a", "id_b"])
     assert len(out) > 0
 
 
@@ -544,7 +544,7 @@ def test_media_metadata_vs_oracle(spark, docs):
     exp = _duck(
         media_metadata_oracle_sql("documents", "encode(text)", "doc_id")
     )
-    _cmp(got, exp, ["doc_id"])
+    _check_oracle(got, exp, ["doc_id"])
 
 
 def test_decode_media_stub(spark, docs):
@@ -715,7 +715,7 @@ def test_simhash_capped_oracle_matches(spark):
     docs = spark.read.parquet(DOCS)
     got = simhash_hamming_pairs(docs, "doc_id", band_df_cap=5)
     exp = _duck(simhash_hamming_oracle_sql("documents", "doc_id", band_df_cap=5))
-    _cmp(got, exp, ["id_a", "id_b"])
+    _check_oracle(got, exp, ["id_a", "id_b"])
 
 
 def test_ngram_df_cap_bounds_and_oracle_matches(spark):
@@ -736,7 +736,7 @@ def test_ngram_df_cap_bounds_and_oracle_matches(spark):
     docs = spark.read.parquet(DOCS)
     got = ngram_jaccard_pairs(docs, "doc_id", df_cap=50)
     exp = _duck(ngram_jaccard_oracle_sql("documents", "doc_id", df_cap=50))
-    _cmp(got, exp, ["id_a", "id_b"])
+    _check_oracle(got, exp, ["id_a", "id_b"])
 
 
 def test_extract_text_northstar_invariant(spark):

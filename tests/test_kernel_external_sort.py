@@ -262,9 +262,9 @@ PIN_STR_EXACT_OVC = 17606
 PIN_STR_EXACT_COL = 1959
 
 
-def test_unsupported_key_type_falls_back_to_collation(tmp_path):
-    """r3: a decimal (or other unsupported) KEY column must degrade to
-    Arrow's typed collation sort, not crash key normalization."""
+def test_decimal_keys_take_rank_codes(tmp_path):
+    """A decimal KEY column sorts through dense-rank key codes, exact at
+    its precision, like a string key."""
     from decimal import Decimal
 
     rng = np.random.default_rng(9)
@@ -276,6 +276,33 @@ def test_unsupported_key_type_falls_back_to_collation(tmp_path):
     pd.testing.assert_frame_equal(
         out.reset_index(drop=True), exp, check_dtype=False
     )
+
+
+@pytest.mark.parametrize("kind", ["list", "struct"])
+def test_key_matrix_rejects_nested_keys(kind):
+    """A key type with no code raises TypeError naming the type; there
+    is no second sort order to fall back to."""
+    import pyarrow as pa
+
+    from external_merge_sort_loser_tree_ovc_spark.kernel.keys import key_matrix_table
+
+    col = (pa.array([[2, 1], [1]]) if kind == "list"
+           else pa.array([{"a": 2}, {"a": 1}]))
+    tbl = pa.table({"k": col, "v": [0, 1]})
+    with pytest.raises(TypeError, match=kind):
+        key_matrix_table(tbl, ["v", "k"])
+
+
+def test_all_null_key_chunks(tmp_path):
+    """A pandas chunk whose key column is all None arrives as a
+    null-typed Arrow column: its rows code as NULL and sort first."""
+    frame = pd.DataFrame({
+        "k": [None] * 200 + [f"s{v:03d}" for v in range(200, 0, -1)],
+        "v": range(400),
+    })
+    out, _ = run_sort(tmp_path, frame, ["k"], 120, 40)
+    assert out["k"][:200].isna().all()
+    assert out["k"][200:].tolist() == [f"s{v:03d}" for v in range(1, 201)]
 
 
 def test_exact_mode_subset_keys_sorted(tmp_path):
@@ -383,7 +410,7 @@ def _order_path_table(path, n, rng):
 @pytest.mark.parametrize("path", ["packed", "matrix", "string", "decimal", "nulls"])
 def test_streamed_gather_order_paths(tmp_path, path, checkpoint):
     """Every merge-order path (packed codes, full-width key matrix,
-    string ranks, decimal collation fallback, uneven NULLs), through
+    string ranks, decimal ranks, uneven NULLs), through
     intermediate and final merges with W > B, matches a stable Arrow
     sort row for row, payload included."""
     import pyarrow.compute as pc
@@ -401,7 +428,7 @@ def test_streamed_gather_order_paths(tmp_path, path, checkpoint):
     ))
     assert out.equals(want)
     counted = m.ovc_compares + m.col_compares > 0
-    assert counted == (path in ("packed", "string", "nulls"))
+    assert counted == (path in ("packed", "string", "decimal", "nulls"))
 
 
 def test_resume_from_single_batch_runs(tmp_path, with_row_hash):

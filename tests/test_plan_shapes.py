@@ -296,26 +296,6 @@ def test_text_extract_stays_codegen(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_ann_cosine_catalyst_op_pure_jvm(spark):
-    """ann_topk_cosine (the pure-Catalyst cosine op) keeps its zero-
-    Python contract: no PythonUDF / MapInPandas / ArrowEvalPython, and
-    the tiny query block broadcast against the big side.  (The GATE
-    query q_ann_cosine routes to the bit-identical Arrow matmul path —
-    see test_ann_cosine_gate_plan below — because Catalyst higher-order
-    functions evaluate per element outside codegen: 92 s vs 4 s at sf1,
-    round-4 measurement.)"""
-    from external_merge_sort_loser_tree_ovc_spark.functions.similarity import (
-        ann_topk_cosine,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = plan_of(ann_topk_cosine(emb, [0, 7, 21], 5))
-    assert "PythonUDF" not in plan
-    assert "MapInPandas" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "Broadcast" in plan  # query block is broadcast, big side streams
-
-
 def test_ann_cosine_gate_plan(spark):
     """q_ann_cosine's 100 TB contracts on the Arrow scale path: the big
     vector table feeds mapInPandas DIRECTLY from the scan (no Exchange

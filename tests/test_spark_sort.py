@@ -2,6 +2,7 @@
 lineage metrics, salting, checkpoint/resume at the DataFrame level."""
 
 import datetime
+import decimal
 import math
 import os
 
@@ -18,6 +19,7 @@ from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
 )
 from external_merge_sort_loser_tree_ovc_spark.operators.witness import (
     assert_globally_sorted,
+    sortedness_report,
     witness_summary,
 )
 
@@ -91,6 +93,86 @@ def test_witness_invariants_roundtrip(spark, lineitem):
         assert rep.rows.sum() == before["rows"]
     finally:
         out.unpersist()
+
+
+def test_decimal_double_keys_match_orderby(spark):
+    """(decimal(38,2), double) keys with NaN, NULL and a 21-digit decimal
+    sort like orderBy: decimals take exact rank codes, so the double
+    after a decimal tie still puts NaN after +inf.  The tight budget
+    makes every partition merge."""
+    nan, inf = float("nan"), float("inf")
+    D = decimal.Decimal
+    big = D("123456789012345678901.25")
+    rows = [(D("1.50"), nan), (None, 2.0), (big, 1.0), (D("1.50"), 0.5),
+            (D("-3.00"), nan), (big, nan), (D("1.50"), None), (-big, -1.0),
+            (D("0.00"), inf), (None, nan), (D("-3.00"), -2.0), (D("1.50"), inf),
+            (big, -inf), (D("1.51"), 0.0)]
+    df = spark.createDataFrame(rows, "d decimal(38,2), x double")
+    ours = external_sort_df(
+        df, ["d", "x"], num_partitions=2, memory_budget_rows=4, batch_rows=2
+    )
+
+    def canon(frame):
+        return [(r.d, "nan" if r.x is not None and math.isnan(r.x) else r.x)
+                for r in frame.collect()]
+
+    assert canon(ours) == canon(df.orderBy("d", "x"))
+
+
+@pytest.mark.parametrize("kind", ["struct", "array"])
+def test_key_without_code_rejected_at_plan_build(spark, kind):
+    """A key type the kernel has no code for raises TypeError when
+    external_sort_df is called, before any Spark job runs."""
+    sc = spark.sparkContext
+    df = spark.range(4).select(
+        (F.struct(F.col("id").alias("a")) if kind == "struct"
+         else F.array(F.col("id"))).alias("k"),
+        "id",
+    )
+    group = f"emsort-key-check-{kind}"
+    sc.setJobGroup(group, "key type check")
+    try:
+        with pytest.raises(TypeError, match="no sort code for key type"):
+            external_sort_df(df, ["k"], num_partitions=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "vals, ddl",
+    [([1, None, 2], "k bigint"),
+     ([float("nan"), 1.0, 2.0], "k double"),
+     (["a", None, "b"], "k string")],
+    ids=["bigint_null", "double_nan", "string_null"],
+)
+def test_witness_counts_key_code_inversions(spark, vals, ddl):
+    """The witness compares Spark's order: NULL first, NaN after every
+    number.  Each input has exactly one row below its predecessor."""
+    df = spark.createDataFrame([(v,) for v in vals], ddl).coalesce(1)
+    rep = sortedness_report(df, ["k"])
+    assert int(rep.inversions.sum()) == 1
+    with pytest.raises(AssertionError, match="inversions found"):
+        assert_globally_sorted(df, ["k"])
+
+
+def test_witness_boundaries_compare_typed_keys(spark):
+    """Sorted bigints whose decimal strings are out of order across a
+    partition boundary ('9999' > '10000') pass without boundary_types."""
+    df = spark.range(9998, 10002, numPartitions=2)
+    rep = assert_globally_sorted(df, ["id"])
+    assert list(rep.rows) == [2, 2]
+
+
+def test_witness_rejects_partitions_out_of_order(spark):
+    """Two internally sorted partitions in the wrong order fail the
+    boundary check, not the per-partition inversion count."""
+    df = spark.range(20, numPartitions=2).select(
+        ((F.col("id") + 10) % 20).alias("id")  # partitions hold 10..19, 0..9
+    )
+    assert int(sortedness_report(df, ["id"]).inversions.sum()) == 0
+    with pytest.raises(AssertionError, match="partition boundary out of order"):
+        assert_globally_sorted(df, ["id"])
 
 
 @pytest.mark.parametrize("checkpointed", [True, False], ids=["checkpoint_dir", "none"])
