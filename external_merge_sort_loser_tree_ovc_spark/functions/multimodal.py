@@ -14,12 +14,11 @@ predicts what a correct decode must produce without seeing bytes):
   - YUV4MPEG2 raw video        ``q_multimodal_video``
   - baseline JPEG (Huffman + IDCT) ``q_multimodal_jpeg``
 
-Stub path: only decode variants that genuinely need an external codec
-library remain behind ``allow_fake=True`` (progressive JPEG's spectral
-selection / successive approximation scans, chroma-subsampled color,
-and real video codecs).  The Spark-side plumbing (schema, Arrow batch
-shape, ``mapInPandas`` signature, partitioning) is real and tested,
-and ``media_metadata`` has a bytes-arithmetic DuckDB oracle.
+Out of scope: decode variants that need an external codec library
+(progressive JPEG's spectral selection / successive approximation
+scans, chroma-subsampled color, and real video codecs) have no decoder
+here.  ``media_metadata`` reads only byte lengths and has a
+bytes-arithmetic DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -29,15 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .textops import rebalance_scan
-from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 
 def media_metadata(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
@@ -65,71 +56,6 @@ SELECT {id_col},
        CAST(3 AS INT) AS fake_channels
 FROM {table}
 """
-
-
-DECODE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("format", StringType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
-
-
-def _fake_decode(payloads: pd.Series) -> pd.DataFrame:
-    """STUB — deterministic fake decode (no image libs in container).
-    Real impl: PIL.Image.open(BytesIO(b)) -> resize -> feature extract."""
-    n = payloads.str.len().to_numpy(dtype=np.int64)
-    heads = payloads.str[:8].apply(
-        lambda b: int.from_bytes(bytes(b).ljust(8, b"\0"), "big")
-    ).to_numpy(dtype=np.uint64)
-    feats = np.stack(
-        [
-            (n % 251).astype(np.float32),
-            (heads % np.uint64(509)).astype(np.float32),
-            ((n * 31) % 1021).astype(np.float32),
-            ((heads >> np.uint64(13)) % np.uint64(2039)).astype(np.float32),
-        ],
-        axis=1,
-    )
-    return pd.DataFrame(
-        {
-            "width": (n % 640 + 1).astype(np.int32),
-            "height": ((n * 7) % 480 + 1).astype(np.int32),
-            "format": np.where(n % 2 == 0, "fake/png", "fake/jpeg"),
-            "features": list(feats),
-        }
-    )
-
-
-def decode_media(
-    df: DataFrame, bin_col: str, id_col: str, *, allow_fake: bool = False
-) -> DataFrame:
-    """Decode + feature-extract a binary media column via mapInPandas.
-
-    Raises NotImplementedError at plan-build time unless allow_fake —
-    the real decoder is not available in this environment."""
-    if not allow_fake:
-        raise NotImplementedError(
-            "progressive-JPEG / subsampled-color decode needs a codec "
-            "library not installed in this container (PPM/PNG/WAV/y4m/"
-            "baseline-JPEG all have REAL decoders — see decode_ppm_media "
-            "/ decode_png_media / decode_wav_media / sample_y4m_media / "
-            "decode_jpeg_media); pass allow_fake=True to exercise the "
-            "Spark plumbing with the deterministic fake decoder"
-        )
-
-    def run(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            out = _fake_decode(pdf[bin_col])
-            out.insert(0, "media_id", pdf[id_col].to_numpy(dtype=np.int64))
-            yield out
-
-    return rebalance_scan(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=DECODE_SCHEMA)
 
 
 # --- REAL decode path: PPM (P6) ---------------------------------------------
@@ -188,7 +114,7 @@ PPM_DECODE_SCHEMA = StructType(
 def decode_ppm_media(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     """REAL decode: parse every P6 payload, compute integer-exact
     2*channel-mean from the decoded pixel buffer.  mapInPandas, Arrow
-    batches; no allow_fake gate — this decoder actually runs."""
+    batches."""
 
     def run(it):
         for pdf in it:
@@ -833,7 +759,7 @@ FROM {table}
 # Huffman decode with DC prediction and AC run-length/EOB/ZRL symbols,
 # dequantization, zigzag-to-natural reorder, float IDCT, level shift,
 # clip.  (Progressive JPEG and multi-component chroma upsampling remain
-# out of scope — see decode_media's stub note.)
+# out of scope — see the module docstring.)
 #
 # Oracle trick (same scheme as PPM/PNG/WAV/Y4M): gate payloads carry
 # DC-only blocks.  The IDCT of a DC-only block is exactly flat —
@@ -1173,7 +1099,7 @@ JPEG_DECODE_SCHEMA = StructType(
 def decode_jpeg_media(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     """REAL decode: parse every baseline JFIF payload (markers, Huffman
     tables from DHT, entropy decode, dequantize, IDCT), emit integer
-    pixel-sum stats.  mapInPandas over Arrow batches; no allow_fake."""
+    pixel-sum stats.  mapInPandas over Arrow batches."""
 
     def run(it):
         for pdf in it:

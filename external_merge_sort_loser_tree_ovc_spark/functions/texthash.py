@@ -50,7 +50,8 @@ class Dialect:
     """Tiny dialect shim: spark vs duckdb differences only."""
 
     def __init__(self, name: str):
-        assert name in ("spark", "duckdb")
+        if name not in ("spark", "duckdb"):
+            raise ValueError(f"unknown dialect {name!r}: spark or duckdb")
         self.name = name
 
     def split(self, col: str) -> str:

@@ -93,7 +93,8 @@ def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     expression trees).  No shuffle at all: every feature is doc-local.
     NULL-text docs are excluded; the oracle applies the same predicate."""
     others = [c for c in df.columns if c != text_col]
-    assert others, "with_text_features needs at least an id column"
+    if not others:
+        raise ValueError("with_text_features needs at least an id column")
     df = df.filter(F.col(text_col).isNotNull())
     df = rebalance_scan(df, others[0])
     stop_arr = np.asarray(list(T.STOPWORDS), dtype="U8")
@@ -307,7 +308,11 @@ def chunk_documents(
     narrow explode whose output is exactly the chunk table.
 
     Returns (id, chunk_idx, n_tokens, chunk_text)."""
-    assert 0 <= overlap < chunk_tokens
+    if not 0 <= overlap < chunk_tokens:
+        raise ValueError(
+            f"chunk_documents needs 0 <= overlap < chunk_tokens, "
+            f"got overlap={overlap}, chunk_tokens={chunk_tokens}"
+        )
     d = _SPARK
     stride = chunk_tokens - overlap
     words = d.split(text_col)

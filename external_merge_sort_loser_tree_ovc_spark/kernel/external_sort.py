@@ -236,7 +236,7 @@ class ExternalSorter:
             if committed is not None:
                 self._invalidate(committed[0])
             tail = self._spill_tail(store, tail)
-            self._commit(store, "runs_formed")
+            self._commit(store)
 
         yield from self._merge_all(store, tail)
         self.metrics.wall_ms = (time.perf_counter() - t0) * 1e3
@@ -273,9 +273,9 @@ class ExternalSorter:
         rows, xor, total = self._fingerprint
         return f"{rows}:{xor:016x}:{total:016x}"
 
-    def _commit(self, store: RunStore, state: str, **extra):
+    def _commit(self, store: RunStore):
         if self.checkpoint_inputs:
-            store.commit(state, {"fingerprint": self._fingerprint_hex(), **extra})
+            store.commit({"fingerprint": self._fingerprint_hex()})
 
     def _without_row_hash(self, b: pa.Table) -> pa.Table:
         """``b`` without ROW_HASH_COL, folded into the fingerprint first."""
@@ -380,7 +380,7 @@ class ExternalSorter:
             ):
                 self._run_cache = None
             store.remove_runs(batch)
-            self._commit(store, "runs_formed")
+            self._commit(store)
         # passes executed: formation + intermediate generations + final merge
         m.passes = 1 + max_gen + (1 if w > 1 else 0)
         m.spill_rows = store.spill_rows
@@ -401,7 +401,6 @@ class ExternalSorter:
             # merge (the exact tree sets its own reference-faithful counts)
             m.ovc_compares = self._cmp.get("ovc", 0)
             m.col_compares = self._cmp.get("col", 0)
-        self._commit(store, "done", metrics=m.as_dict())
 
     def _merge_stream(self, store: RunStore, sources: list, step: int):
         """Merge sorted ``sources`` (runs or in-memory tables) into sorted

@@ -14,10 +14,11 @@ Plays the role of the reference's ``HDD`` (reference ``HDD.h:8-31``):
   a ``PageCursor`` reads it back one page at a time (the reference's
   per-run page buffer, ``DRAM.cpp:551-596``); a merge reads only the key
   columns whole (``read_run(columns=...)``),
-- the manifest is a JSON checkpoint committed by atomic rename; a
-  partition that died mid-merge resumes from the last committed state
-  instead of re-reading its input (the north_rule's "resumable from
-  checkpoint with per-partition lineage").
+- the manifest is a JSON checkpoint committed by atomic rename: the
+  run list, spill count and input fingerprint.  A partition that died
+  mid-merge resumes from the last committed run list instead of
+  re-sorting its input (the north_rule's "resumable from checkpoint");
+  per-partition metrics travel on the ``sort_metrics`` accumulator.
 """
 
 from __future__ import annotations
@@ -128,9 +129,8 @@ class RunStore:
     def manifest_path(self) -> str:
         return os.path.join(self.manifest_dir or self.root, "manifest.json")
 
-    def commit(self, state: str, extra: dict | None = None):
+    def commit(self, extra: dict | None = None):
         doc = {
-            "state": state,
             "spill_rows": self.spill_rows,
             "runs": [
                 {

@@ -13,19 +13,19 @@ The Spark mapping of the reference's Sort operator (SURVEY §1.3 / §3.4):
                                so partition-sorted output is globally
                                sorted (same contract as df.orderBy).
 
-Skew: with ``salt_buckets > 1`` the partitioner appends a salt to the
-range key, so a single hot key (one H3 cell with half the planet's
-pages) splits across adjacent range partitions; the per-partition sort
-keeps the global (key, salt) order contiguous, which downstream
-cell-merge operators re-unify — this is exactly the reference's
-multi-run merge reused at the partition level (SURVEY §7 risk list).
+Skew: the partitioner splits rows on the whole sort key, so a caller
+whose leading key is hot (one H3 cell with half the planet's pages)
+appends a high-cardinality column to the key.  The flagship sorts on
+(morton, urlh), a 40-bit url hash: the hot cell splits at the
+quantiles of its url hashes across adjacent range partitions, and the
+output stays globally ordered on the whole key (SURVEY §7 risk list).
 
 At 100 TB: while forming runs the kernel holds at most
 ``memory_budget_rows`` rows per task; a merge holds one page
 (``batch_rows`` rows) per input run, one emitted slice, and 8-16 bytes
 of key codes per partition row.  Everything else is spilled run files,
 so partition sizing is governed by disk, not RAM.  AQE remains enabled
-as a backstop, but the salt is explicit per north_rule.
+as a backstop, but the skew split is explicit per north_rule.
 """
 
 from __future__ import annotations
@@ -127,7 +127,7 @@ def external_sort_df(
     plan is built, before any job runs.
 
     ``skip_shuffle=True`` sorts within existing partitions only (useful
-    after an upstream salted range partition).
+    after an upstream ``salted_repartition_by_range`` on the same keys).
 
     With ``checkpoint_dir``, each partition's runs persist in its own
     subdirectory, and a rerun over identical partition input replays
@@ -150,10 +150,7 @@ def external_sort_df(
     # raises TypeError for a key type with no code, before any job runs
     key_matrix_table(to_arrow_schema(df.select(*keys).schema).empty_table(), keys)
     if not skip_shuffle:
-        # no salt, so key-only hashes suffice: the sample scans only keys
-        df = salted_repartition_by_range(
-            df, keys, salt_buckets=1, num_partitions=num_partitions, hash_cols=keys
-        )
+        df = salted_repartition_by_range(df, keys, num_partitions=num_partitions)
     metrics = df.sparkSession.sparkContext.accumulator({}, _SortMetricsParam())
     fn = _partition_kernel(
         keys, memory_budget_rows, batch_rows, checkpoint_dir, metrics
@@ -195,8 +192,7 @@ def sort_metrics(df: DataFrame) -> list[dict]:
 _SORTABLE_BOUND_TYPES = {
     "tinyint", "smallint", "int", "bigint", "string", "date", "boolean",
 }
-_SALT = "_salt"
-# the bounds sample keeps rows whose content hash is 0 mod _SAMPLE_MOD,
+# the bounds sample keeps rows whose key hash is 0 mod _SAMPLE_MOD,
 # at most _SAMPLE_CAP of them
 _SAMPLE_MOD = 16
 _SAMPLE_CAP = 1 << 18
@@ -237,61 +233,51 @@ def salted_repartition_by_range(
     df: DataFrame,
     keys: list[str],
     *,
-    salt_buckets: int = 8,
     num_partitions: int | None = None,
-    hash_cols: list[str] | None = None,
 ) -> DataFrame:
     """Deterministic range partition on ``keys`` (ascending, nulls
     first): partition i holds the i-th key range, so sorting each
-    partition sorts the whole frame.
+    partition on the same ``keys`` sorts the whole frame.
 
-    With ``salt_buckets > 1`` the range key is (keys..., salt), where the
-    salt is xxhash64(``hash_cols``) mod ``salt_buckets``, so one hot key
-    splits across adjacent partitions while key order stays contiguous;
-    a downstream per-key merge re-unifies them.  ``hash_cols`` (default:
-    every column) is the row identity fed to the salt and sample hashes;
-    a narrow set avoids hashing a wide payload.
+    The bounds split on the whole key, so a hot leading key spreads over
+    adjacent partitions at the quantiles of its trailing key; rows equal
+    on the whole key stay in one partition.
 
-    Bounds are the exact lower quantiles of a content-hash sample, so
-    the same input is partitioned the same way on every run, which lets
-    a checkpointed ``external_sort_df`` replay (``repartitionByRange``
-    samples with a seed taken from the RDD id).  Rows route to buckets
-    through a balanced binary tree of struct compares, and a Murmur3
-    preimage key pins bucket i to partition i.  Key types outside
-    ``_SORTABLE_BOUND_TYPES`` fall back to ``repartitionByRange``.
+    Bounds are the exact lower quantiles of a sample picked by a hash of
+    the key columns, so the same input is partitioned the same way on
+    every run, which lets a checkpointed ``external_sort_df`` replay
+    (``repartitionByRange`` samples with a seed taken from the RDD id).
+    Rows route to buckets through a balanced binary tree of struct
+    compares, and a Murmur3 preimage key pins bucket i to partition i.
+    Key types outside ``_SORTABLE_BOUND_TYPES`` fall back to
+    ``repartitionByRange``.
     """
     n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    hcols = [F.col(c) for c in (hash_cols or df.columns)]
-    salt = [_SALT] if salt_buckets > 1 else []
-    if salt:
-        df = df.withColumn(_SALT, F.pmod(F.xxhash64(*hcols), F.lit(salt_buckets)))
-    rkeys = [*keys, *salt]
     dtypes = dict(df.dtypes)
     if not all(dtypes[k] in _SORTABLE_BOUND_TYPES for k in keys):
-        return df.repartitionByRange(n, *rkeys).drop(*salt)
+        return df.repartitionByRange(n, *keys)
     if n < 2:
-        return df.repartition(1).drop(*salt)
+        return df.repartition(1)
 
     def collect(src):
         # the cap bounds the collected sample; while the sample fits under
         # it, the collected set, and so the bounds, are exactly reproducible
-        return src.select(*rkeys).limit(_SAMPLE_CAP).toArrow()
+        return src.select(*keys).limit(_SAMPLE_CAP).toArrow()
 
-    # a content hash picks the same rows whatever the partition layout,
-    # unlike df.sample(seed).  A salted caller needs it row-granular: under
-    # a key hash a hot key shared by half the rows is all-or-nothing, and
-    # the bounds could never split it.
+    # a key hash picks the same rows whatever the partition layout,
+    # unlike df.sample(seed); it picks all or none of the rows of one key
+    # value, so a hot key splits only as far as its trailing columns vary
     sample = collect(
-        df.filter(F.pmod(F.xxhash64(*hcols, F.lit(1337)), F.lit(_SAMPLE_MOD)) == 0)
+        df.filter(F.pmod(F.xxhash64(*keys, F.lit(1337)), F.lit(_SAMPLE_MOD)) == 0)
     )
     if sample.num_rows < 4 * n:  # degenerate tiny input: use the full data
         sample = collect(df)
-    order = lexsort_indices(key_matrix_table(sample, rkeys))
+    order = lexsort_indices(key_matrix_table(sample, keys))
     m = len(order)
     picks = [order[(i * (m - 1)) // n] for i in range(1, n)] if m else []
     bounds = sample.take(picks).to_pylist()  # n - 1 rows, as dicts
 
-    row = F.struct(*rkeys)
+    row = F.struct(*keys)
 
     def bucket(lo: int, hi: int):
         # bounds[i] separates bucket i from i + 1
@@ -299,7 +285,7 @@ def salted_repartition_by_range(
             return F.lit(lo)
         mid = (lo + hi) // 2
         bound = F.struct(
-            *[F.lit(bounds[mid][k]).cast(dtypes[k]).alias(k) for k in rkeys]
+            *[F.lit(bounds[mid][k]).cast(dtypes[k]).alias(k) for k in keys]
         )
         return F.when(row <= bound, bucket(lo, mid)).otherwise(bucket(mid + 1, hi))
 
@@ -308,9 +294,4 @@ def salted_repartition_by_range(
         F.array(*[F.lit(x).cast("bigint") for x in _identity_shuffle_keys(n)]),
         bucket(0, len(bounds)) + 1,
     )
-    return (
-        df.withColumn("_pk", part_key)
-        .repartition(n, F.col("_pk"))
-        .drop("_pk", *salt)
-    )
-
+    return df.withColumn("_pk", part_key).repartition(n, F.col("_pk")).drop("_pk")

@@ -4,7 +4,7 @@
         tiebreak, so the sort key is all-integer and packs into ONE
         uint64 per row: 24 morton bits + 40 hash bits)
         --salted_repartition_by_range (deterministic range shuffle on
-          (morton, salt): the explicit skew-safe shuffle)-->
+          (morton, urlh): a hot cell splits at its url-hash quantiles)-->
         per-partition OVC external merge sort (mapInArrow kernel,
         packed single-int compares, counted IN the production merge)
         --> point-in-polygon join (broadcast cover + ray-cast refine)
@@ -60,7 +60,6 @@ def flagship_pipeline(
     cell_res: int = 12,
     tile_zoom: int = 6,
     num_partitions: int | None = None,
-    salt_buckets: int = 8,
     memory_budget_rows: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> dict:
@@ -84,14 +83,17 @@ def flagship_pipeline(
     # whole key into one uint64 -> every production merge is single-
     # machine-integer compares (the OVC thesis, reference README.md:4-5)
     # WITH counters.  Deterministic (hash of content, no RNG).
-    # ORDER CONTRACT: the output is totally ordered by (morton, urlh),
-    # NOT by (morton, url) — distinct urls collide in the 40-bit hash
-    # with ~n^2/2^41 probability per morton cell, and colliding rows tie
-    # on the full packed key, so their relative order is run-formation
-    # arrival order.  The witness checks multiset parity + sortedness of
-    # the packed key, which is exactly what holds.  Consumers needing a
-    # total deterministic order must add a second null-free 64-bit key
-    # column instead of widening this one.
+    # ORDER CONTRACT: the output is ordered by (morton, urlh) across
+    # partitions — the range partition and the per-partition sort use
+    # the same key, so partition i's last row never exceeds partition
+    # i+1's first.  It is NOT ordered by (morton, url): distinct urls
+    # collide in the 40-bit hash with ~n^2/2^41 probability per morton
+    # cell, and colliding rows tie on the full packed key, so their
+    # relative order is run-formation arrival order.  The witness checks
+    # multiset parity + sortedness of the packed key, which is exactly
+    # what holds.  Consumers needing a total deterministic order must
+    # add a second null-free 64-bit key column instead of widening this
+    # one.
     enc = enc.select(
         "url", "warc_ts", "text", "lang", "lat", "lon", "cell", "morton"
     ).withColumn("urlh", F.shiftrightunsigned(F.xxhash64("url"), 24))
@@ -134,18 +136,12 @@ def flagship_pipeline(
         budget = memory_budget_rows or max(2048, n_in // (n_parts * 8) or 1)
         batch_rows = max(128, budget // 16)
 
-        salted = salted_repartition_by_range(
-            enc,
-            ["morton"],
-            salt_buckets=salt_buckets,
-            num_partitions=n_parts,
-            # row identity for salt/sample hashing: (url, warc_ts) is the
-            # page key — avoids hashing the text payload twice per row
-            hash_cols=["url", "warc_ts", "morton"],
-        )
+        # one key partitions and orders: urlh splits a hot cell
+        keys = ["morton", "urlh"]
+        parted = salted_repartition_by_range(enc, keys, num_partitions=n_parts)
         sorted_df = external_sort_df(
-            salted,
-            ["morton", "urlh"],
+            parted,
+            keys,
             memory_budget_rows=budget,
             batch_rows=batch_rows,
             checkpoint_dir=ckpt,
@@ -158,7 +154,8 @@ def flagship_pipeline(
         out["n_pages"] = n_pages
 
         w_out = witness_summary(sorted_df, ["url", "text"])
-        assert w_out == w_in, f"witness violated: {w_in} != {w_out}"
+        if w_out != w_in:
+            raise AssertionError(f"witness violated: {w_in} != {w_out}")
         t3 = time.perf_counter()
         out["s_witness_out"] = t3 - t2
 

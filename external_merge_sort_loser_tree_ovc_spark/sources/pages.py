@@ -10,7 +10,7 @@ per-row invariant).
 
 Scenarios mirror the reference's duplicate-key tests mapped onto
 geography (FIXTURES.md §B): geo_uniform / geo_hotcell (>=50% of pages
-on one coordinate — the salting test) / geo_sorted.
+on one coordinate — the hot-cell split test) / geo_sorted.
 """
 
 from __future__ import annotations

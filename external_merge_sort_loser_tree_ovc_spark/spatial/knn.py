@@ -3,8 +3,8 @@
 Exact k-nearest-neighbours of each query point against a big point
 table, without a cross join:
 
-  round 0: search the disk of index cells of radius ``start_radius``
-           around each query's cell;
+  round 0: search the disk of index cells of radius ``START_RADIUS``
+           (1) around each query's cell;
   round i: explode the *still-unsatisfied* queries to the hollow ring at
            Chebyshev cell distance c, join candidates by cell, keep the
            running top-k per query;
@@ -35,6 +35,11 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+# round 0 searches the cell disk of this Chebyshev radius
+START_RADIUS = 1
+# index_shift=None sizes cells to hold about this many points
+TARGET_CELL_POINTS = 24
+
 
 def _ring(lo: int, hi: int) -> Column:
     """Generator of all (_dx, _dy) with lo <= chebyshev(dx, dy) <= hi.
@@ -64,9 +69,7 @@ def knn_join(
     x: str = "xi",
     y: str = "yi",
     index_shift: int | None = 6,
-    start_radius: int = 1,
     max_rounds: int = 64,
-    target_cell_points: int = 24,
 ) -> DataFrame:
     """Exact kNN: (query_id, point_id, dist2, rank) with deterministic
     tie-break (dist2, point_id).  Coords are nonnegative integers; the
@@ -82,12 +85,12 @@ def knn_join(
 
     ``index_shift=None`` picks the cell span ADAPTIVELY from the point
     density (one tiny aggregate over the cached point table): span ~
-    sqrt(area * target_cell_points / n), so the radius-1 disk holds
-    ~9 * target points at every scale — a constant tuned for one scale
-    factor otherwise explodes the candidate set at 10x the density
-    (guide §2: make partitioning scale-adaptive, not a constant).  The
-    shift NEVER affects results (the ring expansion is exact at any
-    granularity), only candidate volume and round count."""
+    sqrt(area * TARGET_CELL_POINTS / n), so the radius-1 disk holds
+    ~9 * TARGET_CELL_POINTS points at every scale — a constant tuned for
+    one scale factor otherwise explodes the candidate set at 10x the
+    density (guide §2: make partitioning scale-adaptive, not a
+    constant).  The shift NEVER affects results (the ring expansion is
+    exact at any granularity), only candidate volume and round count."""
     pts = points.select(
         F.col(point_id).alias("_pid"),
         F.col(x).cast("bigint").alias("_px"),
@@ -108,7 +111,7 @@ def knn_join(
             area = max(1, (stats["x1"] - stats["x0"] + 1)) * max(
                 1, (stats["y1"] - stats["y0"] + 1)
             )
-            span_f = math.sqrt(area * target_cell_points / n_pts)
+            span_f = math.sqrt(area * TARGET_CELL_POINTS / n_pts)
             index_shift = max(0, min(40, round(math.log2(max(1.0, span_f)))))
     span = 1 << index_shift
     cells = pts.select(
@@ -138,7 +141,7 @@ def knn_join(
                 f"after {max_rounds} rounds (cell radius {searched} searched, "
                 f"cell span {span})"
             )
-        lo, hi = searched + 1, max(searched + 1, start_radius if rounds == 0 else 0)
+        lo, hi = searched + 1, max(searched + 1, START_RADIUS if rounds == 0 else 0)
         cand = (
             pending.select("*", _ring(lo, hi))
             .select(

@@ -31,7 +31,6 @@ def main(argv=None):
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--cell-res", type=int, default=12)
     ap.add_argument("--tile-zoom", type=int, default=6)
-    ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args(argv)
@@ -55,7 +54,6 @@ def main(argv=None):
         cell_res=args.cell_res,
         tile_zoom=args.tile_zoom,
         num_partitions=args.partitions,
-        salt_buckets=args.salt_buckets,
         checkpoint_dir=args.checkpoint,
     )
     doc = json.dumps(metrics)

@@ -547,18 +547,15 @@ def test_media_metadata_vs_oracle(spark, docs):
     _check_oracle(got, exp, ["doc_id"])
 
 
-def test_decode_media_stub(spark, docs):
-    from external_merge_sort_loser_tree_ovc_spark.functions.multimodal import (
-        decode_media,
+def test_chunk_documents_rejects_overlap_at_chunk_size(spark, docs):
+    """An overlap of a whole chunk would never advance: a ValueError at
+    plan build, which survives ``python -O``."""
+    from external_merge_sort_loser_tree_ovc_spark.functions.textops import (
+        chunk_documents,
     )
-    from pyspark.sql import functions as F
 
-    media = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    with pytest.raises(NotImplementedError):
-        decode_media(media, "payload", "doc_id")
-    out = decode_media(media, "payload", "doc_id", allow_fake=True).toPandas()
-    assert len(out) == docs.count()
-    assert out.features.map(len).eq(4).all()
+    with pytest.raises(ValueError, match="overlap"):
+        chunk_documents(docs, "doc_id", chunk_tokens=8, overlap=8)
 
 
 def test_neardup_lsh_equals_exact_on_adversarial_pairs(spark):

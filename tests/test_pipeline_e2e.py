@@ -38,13 +38,31 @@ def test_synth_pages_hotcell(spark):
 
 
 @pytest.mark.parametrize("scenario", ["geo_uniform", "geo_hotcell"])
-def test_flagship_pipeline(spark, scenario):
+def test_flagship_pipeline(spark, scenario, monkeypatch):
     """Full pipeline at small scale: witness holds (asserted inside),
-    PIP hits match a brute-force check, comparisons counted."""
+    the sorted frame is globally ordered on its whole key (morton, urlh)
+    across partitions, PIP hits match a brute-force check, comparisons
+    counted."""
+    import external_merge_sort_loser_tree_ovc_spark.plans.pipeline as P
+    from external_merge_sort_loser_tree_ovc_spark.operators.witness import (
+        assert_globally_sorted,
+    )
+
+    checked = []
+    pip_join = P.pip_join
+
+    def checking_pip_join(sorted_df, *a, **kw):
+        # the flagship hands its persisted sorted frame to pip_join
+        assert_globally_sorted(sorted_df, ["morton", "urlh"])
+        checked.append(True)
+        return pip_join(sorted_df, *a, **kw)
+
+    monkeypatch.setattr(P, "pip_join", checking_pip_join)
     pages = synth_pages(spark, 20000, scenario=scenario)
     m = flagship_pipeline(
         spark, pages, num_partitions=8, memory_budget_rows=1024
     )
+    assert checked == [True]
     assert m["n_pages"] == 20000
     assert m["n_tiles"] > 0
     assert m["ovc_compares"] > 0
@@ -59,21 +77,46 @@ def test_flagship_pipeline(spark, scenario):
         assert got == expect, f"poly {p.poly_id}: {got} != {expect}"
 
 
+def test_flagship_raises_on_witness_mismatch(spark, monkeypatch):
+    """The in==out witness check raises explicitly (it survives
+    ``python -O``) when the sorted output's parity differs."""
+    import external_merge_sort_loser_tree_ovc_spark.plans.pipeline as P
+
+    calls = []
+    witness_summary = P.witness_summary
+
+    def skewed_witness(df, cols=None):
+        w = dict(witness_summary(df, cols))
+        calls.append(w)
+        if len(calls) == 2:  # the output side
+            w["parity"] ^= 1
+        return w
+
+    monkeypatch.setattr(P, "witness_summary", skewed_witness)
+    pages = synth_pages(spark, 2000)
+    with pytest.raises(AssertionError, match="witness violated"):
+        flagship_pipeline(spark, pages, num_partitions=2, memory_budget_rows=512)
+    assert len(calls) == 2
+
+
 def test_salted_partition_splits_hot_cell(spark):
-    """north_rule skew handling: with salting, the hot cell's rows end
-    up in >1 partition; partition sizes stay bounded."""
+    """north_rule skew handling: partitioned on the flagship key
+    (morton, urlh), the hot cell's rows end up in >1 partition;
+    partition sizes stay bounded."""
     from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
         salted_repartition_by_range,
     )
     from external_merge_sort_loser_tree_ovc_spark.spatial.ops import with_grid, with_morton
 
     pages = synth_pages(spark, 20000, scenario="geo_hotcell")
-    enc = with_morton(with_grid(pages, "lat", "lon", 12))
-    salted = salted_repartition_by_range(
-        enc, ["morton"], salt_buckets=8, num_partitions=8
+    enc = with_morton(with_grid(pages, "lat", "lon", 12)).withColumn(
+        "urlh", F.shiftrightunsigned(F.xxhash64("url"), 24)
+    )
+    parted = salted_repartition_by_range(
+        enc, ["morton", "urlh"], num_partitions=8
     )
     dist = (
-        salted.withColumn("pid", F.spark_partition_id())
+        parted.withColumn("pid", F.spark_partition_id())
         .filter((F.col("lat") - 48.8566).cast("double") ** 2 < 1e-12)
         .groupBy("pid")
         .count()

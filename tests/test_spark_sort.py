@@ -224,16 +224,17 @@ def test_sort_metrics_keep_latest_attempt(order):
 
 
 def test_salted_repartition_splits_hot_key(spark):
-    """One hot key spanning >1 partition after salting (skew handling)."""
+    """A hot leading key spans >1 partition when a second key column
+    varies within it (skew handling), and no row is lost."""
     df = spark.range(0, 20000).withColumn("cell", F.lit(42)).withColumn(
         "payload", F.col("id") % 100
     )
-    parted = salted_repartition_by_range(df, ["cell"], salt_buckets=8, num_partitions=8)
+    parted = salted_repartition_by_range(df, ["cell", "id"], num_partitions=8)
     sizes = parted.groupBy(F.spark_partition_id().alias("pid")).count().collect()
     nonempty = [r for r in sizes if r["count"] > 0]
     assert len(nonempty) > 1, "hot key should split across partitions"
     assert sum(r["count"] for r in sizes) == 20000
-    assert "_salt" not in parted.columns
+    assert parted.columns == df.columns
 
 
 def test_job_level_resume(spark, lineitem, tmp_path):
@@ -274,7 +275,7 @@ def test_salted_repartition_nulls_first_partition(spark):
     pdf = pd.DataFrame({"k": [None, 5, None, 100, 7, None, 950, 12, 600, 300] * 40,
                         "v": range(400)})
     df = spark.createDataFrame(pdf.astype({"k": "Int64"}))
-    parted = salted_repartition_by_range(df, ["k"], salt_buckets=4, num_partitions=4)
+    parted = salted_repartition_by_range(df, ["k"], num_partitions=4)
     dist = (
         parted.withColumn("pid", F.spark_partition_id())
         .filter(F.col("k").isNull())
