@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..runtime import release
+
 
 def connected_components(
     edges: DataFrame,
@@ -48,7 +50,9 @@ def connected_components(
     2^r after r rounds: a D-hop chain converges in ~log2(D) rounds
     (pinned on a 10k-hop path in tests/test_functions.py — 64 rounds
     therefore covers any graph that fits in int64 ids; the default is
-    a backstop, not a tuning knob)."""
+    a backstop, not a tuning knob).  The result reads the last round's
+    local checkpoint, which stays stored for the life of the session;
+    every earlier round's is freed."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     und = (
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -80,7 +84,10 @@ def connected_components(
         # by round ~15 even printing the plan tree OOMs the driver
         # (AdaptiveSparkPlanExec.generateTreeString, observed on the
         # 15-hop path graph in pytest).  Checkpointing truncates the
-        # lineage so every round starts from a flat scan.  On a real
+        # lineage so every round starts from a flat scan.  The previous
+        # round's labels are freed with runtime.release once the probe
+        # has read them: unpersist() does nothing on a local
+        # checkpoint, so each round's blocks would stay.  On a real
         # cluster prefer reliable checkpoint(dir) for fault tolerance;
         # local is correct and deterministic here.
         tgt = prop.select(
@@ -98,13 +105,14 @@ def connected_components(
             .limit(1)
             .count()
         )
-        labels.unpersist()
+        release(labels)
         labels = new
         if changed == 0:
             converged = True
             break
     und.unpersist()
     if not converged:
+        release(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )

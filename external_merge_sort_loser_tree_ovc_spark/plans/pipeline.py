@@ -14,6 +14,15 @@
 This is SURVEY §3.4's lifecycle as one callable, used by ``bench.py``
 (throughput + scaling efficiency) and the e2e tests.
 
+Materialization: the encoded input and the sorted output are each
+stored once as an eager ``localCheckpoint`` (rows, no columnar cache
+encoding; the consumers plan against a truncated lineage), and both
+are released before the call returns or raises.  Building a columnar
+``persist`` cache of the kernel's output took nearly half of the
+kernel stage (500k pages, 4 CPUs), for three small consumers
+(witness-out, PIP, tiles).  The page count comes from the output
+witness, not from a separate count job.
+
 Instrumentation comes from the ONE production sort (like the reference,
 ``Sort.cpp:90-100``): the packed vectorized merge counts, per pairwise
 merge step, how many head-to-head comparisons resolved on the single
@@ -39,7 +48,6 @@ import shutil
 import tempfile
 import time
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.sort import (
@@ -47,7 +55,7 @@ from ..operators.sort import (
     salted_repartition_by_range,
     sort_metrics,
 )
-from ..runtime import default_spill_root
+from ..runtime import default_spill_root, release
 from ..operators.witness import witness_summary
 from ..spatial.ops import pip_join, with_grid, with_morton, with_tile
 from ..spatial.pip import default_polygons
@@ -70,6 +78,13 @@ def flagship_pipeline(
     partition forms several external runs (~8) — the external-merge
     geometry the engine exists to demonstrate; pass an explicit value to
     pin the geometry (tests do).
+
+    The encoded input and the sorted output are eager local checkpoints,
+    released on return and on raise.  Trade-off: a local checkpoint has
+    no lineage, so on a cluster an executor lost after materialization
+    makes the next consumer (witness, PIP or tiles) raise instead of
+    recomputing the lost blocks; rerun the job.  With ``checkpoint_dir``
+    the rerun still replays the kernel's committed runs.
     """
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
@@ -97,13 +112,6 @@ def flagship_pipeline(
     enc = enc.select(
         "url", "warc_ts", "text", "lang", "lat", "lon", "cell", "morton"
     ).withColumn("urlh", F.shiftrightunsigned(F.xxhash64("url"), 24))
-    # the encoded input feeds THREE passes (witness-in, range sampler,
-    # the shuffle itself).  Against a real storage-backed table each
-    # extra pass is a column-pruned scan; when the input is a
-    # synthesized/derived plan, recomputing it per pass times the
-    # generator, not the engine — persist serialized (rows go to
-    # spark.local.dir scratch if memory is short).
-    enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
 
     spill_root = default_spill_root()
     # an explicit checkpoint_dir persists across invocations: re-running
@@ -115,7 +123,16 @@ def flagship_pipeline(
     own_ckpt = checkpoint_dir is None
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="emsort-flagship-", dir=spill_root)
     os.makedirs(ckpt, exist_ok=True)
+    held: list[DataFrame] = []  # local checkpoints, released in finally
     try:
+        # the encoded input feeds THREE passes (witness-in, range sampler,
+        # the shuffle itself): against a storage-backed table each extra
+        # pass is a column-pruned scan, but a synthesized/derived input
+        # would be recomputed per pass, timing the generator, not the
+        # engine.  A local checkpoint stores its rows once; a columnar
+        # persist cache bought nothing over it.
+        enc = enc.localCheckpoint(eager=True)
+        held.append(enc)
         # witness below the sort (reference plan shape:
         # Witness(Sort(Witness(...))))
         w_in = witness_summary(enc, ["url", "text"])
@@ -147,20 +164,22 @@ def flagship_pipeline(
             checkpoint_dir=ckpt,
             skip_shuffle=True,
         )
-        sorted_df = sorted_df.persist(StorageLevel.MEMORY_AND_DISK)
-        n_pages = sorted_df.count()
+        # the witness, PIP and tiles read the sorted rows from here; the
+        # metrics accumulator stays on sorted_df (sort_metrics below)
+        sorted_ck = sorted_df.localCheckpoint(eager=True)
+        held.append(sorted_ck)
         t2 = time.perf_counter()
         out["s_sort"] = t2 - t1
-        out["n_pages"] = n_pages
 
-        w_out = witness_summary(sorted_df, ["url", "text"])
+        w_out = witness_summary(sorted_ck, ["url", "text"])
         if w_out != w_in:
             raise AssertionError(f"witness violated: {w_in} != {w_out}")
+        out["n_pages"] = w_out["rows"]
         t3 = time.perf_counter()
         out["s_witness_out"] = t3 - t2
 
         hits = pip_join(
-            sorted_df, default_polygons(), res=6, keep_cols=["url"]
+            sorted_ck, default_polygons(), res=6, keep_cols=["url"]
         )
         pip_counts = (
             hits.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -169,7 +188,7 @@ def flagship_pipeline(
         t4 = time.perf_counter()
         out["s_pip"] = t4 - t3
 
-        tiles = with_tile(sorted_df, "lat", "lon", tile_zoom)
+        tiles = with_tile(sorted_ck, "lat", "lon", tile_zoom)
         tile_counts = tiles.groupBy("tile_id").agg(F.count(F.lit(1)).alias("n"))
         out["n_tiles"] = tile_counts.count()
         t5 = time.perf_counter()
@@ -189,11 +208,11 @@ def flagship_pipeline(
             if out["s_sort"] > 0
             else 0.0
         )
-        sorted_df.unpersist()
     finally:
+        for df in held:
+            release(df)
         if own_ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
-        enc.unpersist()
 
     total = time.perf_counter() - t0
     out["total_sec"] = total

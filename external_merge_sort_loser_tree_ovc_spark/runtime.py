@@ -1,4 +1,5 @@
-"""Runtime placement defaults shared by the kernel, operators and bench.
+"""Runtime placement defaults shared by the kernel, operators and bench,
+and the one release for frames the package materializes (``release``).
 
 On a single box, disk bandwidth is the one resource that does NOT grow
 with cores (a real cluster attaches fresh local disks — typically NVMe
@@ -14,6 +15,8 @@ checkpoints) and ``SPARK_GRAFT_LOCAL_DIR`` (``spark.local.dir``).
 from __future__ import annotations
 
 import os
+
+from pyspark.sql import DataFrame
 
 _SHM = "/dev/shm"
 # tmpfs is only a sane spill target when it actually has room: small
@@ -53,3 +56,15 @@ def default_local_dir() -> str:
         os.makedirs(path, exist_ok=True)
         return path
     return "/tmp"
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks ``df`` holds, whether it was ``persist()``ed or is
+    a ``localCheckpoint()``.  ``df.unpersist()`` alone does nothing for a
+    local checkpoint: its blocks belong to the RDD under the frame's
+    ``LogicalRDD`` plan, which the cache manager never saw.  A released
+    checkpoint has no lineage left, so reading it afterwards raises."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()  # noqa: SLF001
+    if plan.nodeName() == "LogicalRDD" and plan.rdd().isLocallyCheckpointed():
+        plan.rdd().unpersist(False)

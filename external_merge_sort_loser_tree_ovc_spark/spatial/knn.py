@@ -17,7 +17,9 @@ A round runs two Spark actions: the checkpointed top-k of the pending
 queries' ring candidates merged with the previous top-k, and one count
 of the satisfied queries.  The big point table is cached once and
 touched only through its cell index (a handful of cells per query),
-never cross-joined; no round starts a Python worker.
+never cross-joined; no round starts a Python worker.  Each round
+releases the previous round's top-k checkpoint (``runtime.release``),
+so the block manager holds one top-k at a time.
 
 Metric: integer squared euclidean on fine-grid coords (exact in int64,
 so the DuckDB oracle — a brute-force cross join, ``knn_oracle_sql`` —
@@ -34,6 +36,8 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from ..runtime import release
 
 # round 0 searches the cell disk of this Chebyshev radius
 START_RADIUS = 1
@@ -80,8 +84,10 @@ def knn_join(
     the candidates with the previous top-k and materializes the new
     top-k with one eager ``localCheckpoint``; one count of the queries
     whose k-th best now beats the searched radius decides whether
-    another round runs.  Queries still pending after ``max_rounds``
-    raise ``RuntimeError`` rather than return an unproven top-k.
+    another round runs; the superseded top-k is then released.  Queries
+    still pending after ``max_rounds`` raise ``RuntimeError`` rather
+    than return an unproven top-k.  The result reads the last round's
+    checkpoint, which stays stored for the life of the session.
 
     ``index_shift=None`` picks the cell span ADAPTIVELY from the point
     density (one tiny aggregate over the cached point table): span ~
@@ -136,6 +142,8 @@ def knn_join(
     while n_pending > 0:
         if rounds == max_rounds:
             pts.unpersist()
+            if best is not None:
+                release(best)
             raise RuntimeError(
                 f"knn_join: {n_pending} of {n_queries} queries still pending "
                 f"after {max_rounds} rounds (cell radius {searched} searched, "
@@ -169,11 +177,13 @@ def knn_join(
         # localCheckpoint, not cache + count: a cached loop keeps the
         # previous rounds in its plan, which grows ~3x per round until
         # printing it runs the driver out of heap
-        best = (
+        prev, best = best, (
             merged.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .localCheckpoint(eager=True)
         )
+        if prev is not None:
+            release(prev)
         searched = hi
         # a query is done once it has k hits whose worst dist2 can no
         # longer be beaten by anything outside radius `searched`; the

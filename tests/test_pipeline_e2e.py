@@ -52,16 +52,21 @@ def test_flagship_pipeline(spark, scenario, monkeypatch):
     pip_join = P.pip_join
 
     def checking_pip_join(sorted_df, *a, **kw):
-        # the flagship hands its persisted sorted frame to pip_join
+        # the flagship hands the local checkpoint of its sorted frame
+        # to pip_join
         assert_globally_sorted(sorted_df, ["morton", "urlh"])
         checked.append(True)
         return pip_join(sorted_df, *a, **kw)
 
     monkeypatch.setattr(P, "pip_join", checking_pip_join)
     pages = synth_pages(spark, 20000, scenario=scenario)
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    before = set(jsc.getPersistentRDDs().keys())
     m = flagship_pipeline(
         spark, pages, num_partitions=8, memory_budget_rows=1024
     )
+    # both local checkpoints are released on return
+    assert set(jsc.getPersistentRDDs().keys()) == before
     assert checked == [True]
     assert m["n_pages"] == 20000
     assert m["n_tiles"] > 0
@@ -97,6 +102,31 @@ def test_flagship_raises_on_witness_mismatch(spark, monkeypatch):
     with pytest.raises(AssertionError, match="witness violated"):
         flagship_pipeline(spark, pages, num_partitions=2, memory_budget_rows=512)
     assert len(calls) == 2
+
+
+def test_flagship_releases_checkpoints_on_raise(spark, monkeypatch):
+    """Under the ``test_flagship_raises_on_witness_mismatch`` setup the
+    input and output local checkpoints are still released: the set of
+    persistent RDDs is the one before the call."""
+    import external_merge_sort_loser_tree_ovc_spark.plans.pipeline as P
+
+    calls = []
+    witness_summary = P.witness_summary
+
+    def skewed_witness(df, cols=None):
+        w = dict(witness_summary(df, cols))
+        calls.append(w)
+        if len(calls) == 2:  # the output side
+            w["parity"] ^= 1
+        return w
+
+    monkeypatch.setattr(P, "witness_summary", skewed_witness)
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    pages = synth_pages(spark, 2000)
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(AssertionError, match="witness violated"):
+        flagship_pipeline(spark, pages, num_partitions=2, memory_budget_rows=512)
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_salted_partition_splits_hot_cell(spark):

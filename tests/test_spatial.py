@@ -324,6 +324,8 @@ def test_knn_matches_bruteforce(spark):
     far = pd.DataFrame({"query_id": [n], "xi": [4096 + 5000], "yi": [2000]})
     qs = pd.concat([qs, far], ignore_index=True)
     k = 5
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    before = set(jsc.getPersistentRDDs().keys())
     got = (
         knn_join(
             spark.createDataFrame(pts),
@@ -334,6 +336,8 @@ def test_knn_matches_bruteforce(spark):
         .toPandas()
         .sort_values(["query_id", "rank"], ignore_index=True)
     )
+    # of the ~10 rounds' top-k checkpoints only the result's stays
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
     # brute force in numpy with the same (dist2, point_id) tie-break
     rows = []
     for _, q in qs.iterrows():
@@ -360,6 +364,8 @@ def test_knn_round_cap_raises(spark):
         }
     )
     qs = pd.DataFrame({"query_id": [0], "xi": [4096 + 4500], "yi": [2000]})
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    before = set(jsc.getPersistentRDDs().keys())
     with pytest.raises(RuntimeError, match="1 of 1 queries still pending after 1 rounds"):
         knn_join(
             spark.createDataFrame(pts),
@@ -368,6 +374,8 @@ def test_knn_round_cap_raises(spark):
             index_shift=9,
             max_rounds=1,
         )
+    # the point cache and the round's top-k checkpoint are both freed
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_raster_tiles(spark, pages):
