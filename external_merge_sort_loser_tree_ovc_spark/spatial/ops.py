@@ -55,27 +55,21 @@ def with_grid(
 
 
 def with_morton(df: DataFrame, xg: str = "xg", yg: str = "yg", out: str = "morton") -> DataFrame:
-    """Z-order key from the low 32 bits of each grid coord, as built-in
-    exprs: each coord spreads one byte at a time through a 256-entry
-    bigint literal table, so the key reads each coord 4 times.  The
-    magic-mask interleave reads its operand twice per step, so a filter
-    pushed below it inlined 32 copies of each grid expression."""
-    # table[b] = the 8 bits of b moved to the even bits of a 16-bit word;
-    # one array<bigint> Literal node (a Python list would build 256)
-    table = F.lit(
-        np.array(
-            [sum(((b >> i) & 1) << (2 * i) for i in range(8)) for b in range(256)],
-            dtype=np.int64,
-        )
-    )
+    """Z-order key from grid coords, as built-in bit exprs (6-step
+    magic-mask interleave unrolled into Catalyst expressions)."""
 
     def spread(col):
+        masks = [
+            (16, 0x0000FFFF0000FFFF),
+            (8, 0x00FF00FF00FF00FF),
+            (4, 0x0F0F0F0F0F0F0F0F),
+            (2, 0x3333333333333333),
+            (1, 0x5555555555555555),
+        ]
         e = F.col(col).cast("bigint")
-        acc = F.lit(0).cast("bigint")
-        for i in range(4):
-            byte = F.shiftright(e, 8 * i).bitwiseAND(F.lit(255)).cast("int")
-            acc = acc.bitwiseOR(F.shiftleft(F.element_at(table, byte + 1), 16 * i))
-        return acc
+        for sh, mask in masks:
+            e = (e.bitwiseOR(F.shiftleft(e, sh))).bitwiseAND(F.lit(mask))
+        return e
 
     return df.withColumn(out, spread(xg).bitwiseOR(F.shiftleft(spread(yg), 1)))
 

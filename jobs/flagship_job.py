@@ -14,6 +14,12 @@ parquet table of web pages (columns url, warc_ts, html, text, lang +
 lat/lon or a geocoder stage); everything else is unchanged.  The job is
 resumable: re-running with the same --checkpoint replays committed
 per-partition runs (fingerprint-verified) instead of re-sorting.
+
+The encoded input and the sorted output are held as local checkpoints,
+which have no lineage: if an executor is lost after they are built (or
+removed by dynamic allocation), the job fails instead of recomputing
+the lost blocks.  On a cluster, pass --checkpoint so that a rerun
+replays the sort's committed runs.
 """
 
 from __future__ import annotations
@@ -31,7 +37,12 @@ def main(argv=None):
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--cell-res", type=int, default=12)
     ap.add_argument("--tile-zoom", type=int, default=6)
-    ap.add_argument("--checkpoint", default=None)
+    ap.add_argument(
+        "--checkpoint",
+        default=None,
+        help="directory of committed sort runs; a rerun replays them (use on "
+        "a cluster: a lost executor fails the job, which does not recompute)",
+    )
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args(argv)
 

@@ -380,35 +380,18 @@ def test_connected_components_long_chain_log_rounds(spark):
     )
 
     n = 10_000
-    got = connected_components(_chain(spark, n), max_iter=18).toPandas()
-    assert len(got) == n
-    assert (got.component == _CHAIN_BASE).all()
-
-
-_CHAIN_BASE = 1_000_000
-
-
-def _chain(spark, n):
-    """The n-node path graph _CHAIN_BASE .. _CHAIN_BASE + n - 1."""
-    return spark.range(n - 1).selectExpr(
-        f"id + {_CHAIN_BASE} AS id_a", f"id + {_CHAIN_BASE} + 1 AS id_b"
+    base = 1_000_000
+    df = spark.range(n - 1).selectExpr(
+        f"id + {base} AS id_a", f"id + {base} + 1 AS id_b"
     ).repartition(8)
-
-
-def test_connected_components_releases_round_checkpoints(spark):
-    """Each round's labels are a local checkpoint, on which
-    ``unpersist()`` does nothing; the loop must release them, so across
-    the ~14 rounds of the long chain the block manager gains only the
-    result's checkpoint."""
-    from external_merge_sort_loser_tree_ovc_spark.functions.graph import (
-        connected_components,
-    )
-
+    # each round's labels are a local checkpoint, on which unpersist()
+    # does nothing; of the ~14 rounds' checkpoints only the result's stays
     jsc = spark.sparkContext._jsc  # noqa: SLF001
     before = set(jsc.getPersistentRDDs().keys())
-    got = connected_components(_chain(spark, 10_000), max_iter=18)
-    assert got.filter(got.component != _CHAIN_BASE).count() == 0
+    got = connected_components(df, max_iter=18).toPandas()
     assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
+    assert len(got) == n
+    assert (got.component == base).all()
 
 
 def test_decontamination_plan_build_launches_no_job(spark):

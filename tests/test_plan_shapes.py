@@ -71,20 +71,6 @@ def test_cell_encode_no_shuffle_codegen(spark):
     assert "codegen id" in plan
 
 
-def test_morton_filter_inlines_each_grid_expr_few_times(spark):
-    """A filter on ``morton`` is pushed below the encode, inlining the
-    morton expression over the grid expressions (one FLOOR each).  The
-    key reads each coord once per table lookup (4 lookups), not twice
-    per magic-mask step (32 copies per coord)."""
-    from external_merge_sort_loser_tree_ovc_spark.spatial.ops import with_grid, with_morton
-
-    df = with_morton(with_grid(synth_pages(spark, 1000), "lat", "lon", 12))
-    plan = df.filter(F.col("morton") > 5)._jdf.queryExecution().optimizedPlan()
-    filters = [ln for ln in plan.toString().splitlines() if "Filter" in ln]
-    assert filters
-    assert max(ln.count("FLOOR(") for ln in filters) <= 8
-
-
 def test_broadcast_join_in_revenue_query(spark):
     plan = plan_of(QUERIES["q_revenue_by_nation"](spark, SF))
     assert "BroadcastHashJoin" in plan
